@@ -39,15 +39,6 @@ import time
 
 from pyspark.sql import functions as F
 
-# clean-phase probe floors (BASELINE.md drift protocol): calibrated on this
-# host across local[8]..local[32] — observed clean-phase readings jvm
-# 0.33-0.50 s / pipe 0.27-0.39 s, elevated-phase jvm 0.7-6.2 s. The probe
-# workloads are fixed-size, so at core counts outside that range the
-# probes_at_floor flag is not meaningful; read the raw probe values instead.
-_FLOOR_JVM_S = 0.6
-_FLOOR_PIPE_S = 0.45
-
-
 def _sf_from_dir(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     return float(m.group(1)) if m else 0.0
@@ -319,32 +310,10 @@ def main() -> None:
         return
 
     spark = _fresh_spark(f"local[{cores}]", cores)
-    # discard one whole probe call first: the probe's own code path is
-    # JIT-cold in a fresh JVM even after its internal warmup iteration
-    # (measured 0.62-0.65 s first call vs 0.45 s second call on an
-    # otherwise-idle host), which would mis-read ambient phase as elevated
-    _jvm_drift_probe(spark)
-    jvm_probe_start = _jvm_drift_probe(spark)
     timings = run_suite(spark, sf_dir, cores)
-    jvm_probe_end = _jvm_drift_probe(spark)
-    # the in-process END pipe probe is structurally polluted by the suite
-    # itself: after the 33-workload run the Python-worker pool holds enough
-    # residue that the pandas-UDF identity pass plateaus at ~0.46-0.51 s
-    # (persistent across 5 consecutive samples) while a fresh process on the
-    # same host reads 0.27-0.39 s — measured both ways in round 5. The
-    # round protocol (BASELINE.md) has always adjudicated phase with
-    # FRESH-PROCESS probes, so ambient end-of-run state is measured in a
-    # fresh subprocess; the in-process end values stay recorded above for
-    # cross-round comparison. The end JVM probe shows no such pollution
-    # (0.37-0.55 s post-suite == floor), so it stays in-process.
-    # Stop the bench's own (24g-heap) JVM FIRST: the ambient probe spawns a
-    # second same-sized JVM at the same core count, and reading it while the
-    # resident one is still up measures self-contention, not ambient state —
-    # biasing probes_at_floor toward false negatives on hosts without 2x
-    # headroom. Nothing below needs the session (the scaling path launches
-    # fresh processes per point).
+    # nothing below needs the session (the scaling path launches fresh
+    # processes per point)
     spark.stop()
-    ambient_end = _ambient_probe_subprocess(cores)
     extras = {k[1:]: v for k, v in timings.items() if k.startswith("_")}
     queries = {k: round(v, 3) for k, v in timings.items() if not k.startswith("_")}
     # the headline total sums the ROUND-1 workload set only, so `value` stays
@@ -375,48 +344,9 @@ def main() -> None:
         "positional_postings_bytes": int(extras.get("positional_postings_bytes", 0)),
         "serve_warm_ms": round(extras.get("serve_warm_ms", 0.0), 3),
         "total_all_ops": round(sum(queries.values()), 3),
-        # VM-state evidence recorded WITH the numbers, at the start AND end
-        # of the suite (degradation is bursty): `jvm` = pure-JVM sha256,
-        # `pipe` = pandas-UDF identity pass — the host's two observed
-        # degradation modes do not track each other (BASELINE.md). Compare
-        # rounds through these before reading anything into the headline.
-        "jvm_probe_start_s": jvm_probe_start["jvm"],
-        "jvm_probe_end_s": jvm_probe_end["jvm"],
-        "pipe_probe_start_s": jvm_probe_start["pipe"],
-        "pipe_probe_end_s": jvm_probe_end["pipe"],
-        # ambient end-of-run probe from a fresh subprocess (the protocol's
-        # probe form) — null if the subprocess probe failed
-        "ambient_jvm_probe_end_s": ambient_end.get("jvm"),
-        "ambient_pipe_probe_end_s": ambient_end.get("pipe"),
-        # one-glance phase adjudication: True only when every unpolluted
-        # probe sat at its documented floor (jvm <= 0.6 s, pipe <= 0.45 s)
-        # at both ends of the suite — the precondition BASELINE.md's drift
-        # protocol sets for treating the headline as a clean measurement.
-        # End-of-run pipe state is judged by the AMBIENT fresh-process probe
-        # (the in-process end pipe value above carries ~+0.1-0.15 s of the
-        # suite's own worker-pool residue; see comment at the probe call).
-        "probes_at_floor": bool(
-            max(jvm_probe_start["jvm"], jvm_probe_end["jvm"]) <= _FLOOR_JVM_S
-            and jvm_probe_start["pipe"] <= _FLOOR_PIPE_S
-            and ambient_end.get("jvm") is not None
-            and ambient_end["jvm"] <= _FLOOR_JVM_S
-            and ambient_end.get("pipe") is not None
-            and ambient_end["pipe"] <= _FLOOR_PIPE_S
-        ),
-        # the thresholds behind the flag, recorded so a reader (or a run at
-        # a non-calibrated core count) can re-adjudicate: the probe
-        # workloads are fixed-size, so their wall time depends on
-        # parallelism — these values hold for the calibrated 8-32 core
-        # range (observed clean-phase floors jvm 0.33-0.50 s, pipe
-        # 0.27-0.39 s across local[8] and local[32]); at other core counts
-        # read the raw probe values, not the flag
-        "probe_floor_jvm_s": _FLOOR_JVM_S,
-        "probe_floor_pipe_s": _FLOOR_PIPE_S,
-        "probe_floor_calibrated_cores": [8, 32],
     }
 
     if scaling:
-        # session already stopped above (before the ambient probe)
         result["scaling"] = run_scaling(
             n_docs=int(os.environ.get("SPARK_GRAFT_SCALE_DOCS", "400000")),
             cores_pair=(
@@ -553,111 +483,6 @@ print("SCALE_RESULT " + json.dumps({
 """
 
 
-def _mp_kernel_isolation(corpus_path: str, n_files: int = 16) -> dict:
-    """The tokenize-count kernel under plain multiprocessing (no JVM, no
-    Arrow pipes): pyarrow-load a slice of the corpus, run the exact regex
-    kernel at 1 and 4 worker processes over identical chunks. Isolates the
-    Python compute's own scaling from Spark's JVM/pipe machinery — on this
-    VM the kernel scales ~0.83 while a pure-JVM scan of the same bytes
-    manages ~0.44, which brackets every blended Spark measurement."""
-    import glob
-    from multiprocessing import Pool
-
-    import pyarrow.parquet as pq
-
-    files = sorted(glob.glob(os.path.join(corpus_path, "part-*.parquet")))[:n_files]
-    texts: list = []
-    for fp in files:
-        texts.extend(pq.read_table(fp, columns=["text"])["text"].to_pylist())
-    chunks = [texts[i::16] for i in range(16)]
-    out: dict = {"docs": len(texts)}
-    for procs in (1, 4):
-        t0 = time.time()
-        with Pool(procs) as pool:
-            pool.map(_count_chunk, chunks)
-        out[f"p{procs}_sec"] = round(time.time() - t0, 2)
-    out["efficiency"] = round(out["p1_sec"] / out["p4_sec"] / 4, 3)
-    return out
-
-
-def _count_chunk(texts: list) -> int:
-    from neural_search_spark.functions.tokenize import tokenize_py
-
-    return sum(len(tokenize_py(t)) for t in texts)
-
-
-def _jvm_drift_probe(spark) -> dict:
-    """Two warm code-independent canaries (min of 2 after a warmup each),
-    because this host degrades in (at least) two distinct modes that do NOT
-    track each other: `jvm` — pure-JVM sha256 aggregate (no Python, no
-    shuffle), catches JVM-compute phases (seen 16.8 s vs the ~0.3-0.6 s
-    floor); `pipe` — a pandas-UDF identity pass (Python workers + Arrow
-    pipes), catches the multi-process/syscall phases that leave the JVM
-    probe at its floor while every real operator runs 2-3x slow. Recorded
-    in every bench line so cross-round comparisons can attribute drift."""
-    def jvm_once() -> float:
-        t0 = time.time()
-        spark.range(20_000_000).select(
-            F.sha2(F.col("id").cast("string"), 256).alias("h")
-        ).agg(F.max("h")).collect()
-        return time.time() - t0
-
-    def _ident(it):
-        yield from it
-
-    def pipe_once() -> float:
-        t0 = time.time()
-        spark.range(2_000_000, numPartitions=8).mapInPandas(
-            _ident, schema="id long"
-        ).count()
-        return time.time() - t0
-
-    jvm_once()
-    jvm = min(jvm_once(), jvm_once())
-    pipe_once()
-    pipe = min(pipe_once(), pipe_once())
-    return {"jvm": round(jvm, 3), "pipe": round(pipe, 3)}
-
-
-def _ambient_probe_subprocess(cores: int) -> dict:
-    """Run ``_jvm_drift_probe`` in a FRESH subprocess and return its values.
-
-    This is the probe form the round protocol (BASELINE.md drift section)
-    has always used to adjudicate host phase: a fresh process sees ambient
-    state only, whereas the long-lived bench process's pipe probe reads the
-    suite's own worker-pool residue on top of it (measured +0.1-0.15 s,
-    persistent). One discard call precedes the measured call, matching the
-    in-process JIT-cold handling. Returns {"jvm": None, "pipe": None} if
-    the subprocess fails, which keeps ``probes_at_floor`` False rather than
-    silently passing.
-    """
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    script = (
-        "import sys, json\n"
-        f"sys.path.insert(0, {here!r})\n"
-        "import bench\n"
-        f"sp = bench._fresh_spark('local[{cores}]', {cores})\n"
-        "bench._jvm_drift_probe(sp)\n"
-        "print('AMBIENT_PROBE ' + json.dumps(bench._jvm_drift_probe(sp)))\n"
-        "sp.stop()\n"
-    )
-    try:
-        out = subprocess.run(
-            [sys.executable, "-c", script],
-            capture_output=True,
-            text=True,
-            timeout=600,
-        )
-        for line in out.stdout.splitlines():
-            if line.startswith("AMBIENT_PROBE "):
-                return json.loads(line[len("AMBIENT_PROBE "):])
-    except Exception:
-        pass
-    return {"jvm": None, "pipe": None}
-
-
 def run_pack_scaling(n_docs: int, cores_pair=(1, 4), repeats: int = 2) -> dict:
     """Minutes-scale N->4N evidence for the packing + sketch tier."""
     from neural_search_spark.corpus import write_scale_corpus
@@ -702,10 +527,7 @@ def run_pack_scaling(n_docs: int, cores_pair=(1, 4), repeats: int = 2) -> dict:
         f"local{n_hi}": pts[n_hi],
         "pack_efficiency": eff("pack_sec"),
         "hll_efficiency": eff("hll_sec"),
-        # the decomposition that explains the blended numbers on this VM:
-        # the Python kernel alone scales ~0.83, the pure-JVM scan ~0.44
         "jvm_scan_efficiency": eff("jvm_scan_sec"),
-        "py_kernel": _mp_kernel_isolation(corpus_path),
     }
 
 

@@ -262,12 +262,14 @@ def cmd_sketch(args) -> int:
                 # documented --bins semantics), but a contradicted explicit
                 # claim should not pass without comment — the user's stated
                 # belief about the sketch is wrong even though the output
-                # is right. Read the value from ONE pre-union partial (one
-                # row of one parquet file) rather than `merged`, whose plan
-                # re-executes the whole union+merge; hist_merge's frame
-                # check already guaranteed every partial records the same
-                # nbins, so any one of them is authoritative
-                first = parts[0].select("nbins").first()
+                # is right. Read the value from the first NON-EMPTY
+                # pre-union partial (one row of one parquet file) rather
+                # than `merged`, whose plan re-executes the whole
+                # union+merge; hist_merge's frame check already guaranteed
+                # every partial records the same nbins, so any one of them
+                # is authoritative
+                firsts = (p.select("nbins").first() for p in parts)
+                first = next((r for r in firsts if r is not None), None)
                 if first is not None and first["nbins"] != args.bins:
                     print(
                         f"note: partials record nbins={first['nbins']}; "
@@ -756,6 +758,9 @@ def cmd_serve(args) -> int:
                     if not hasattr(reader, "explain"):
                         print(json.dumps({"error": "explain not supported on a multi-partition replica"}), flush=True)
                         continue
+                    if "doc_id" not in req:
+                        print(json.dumps({"error": "explain needs a 'doc_id' key"}), flush=True)
+                        continue
                     try:
                         print(
                             json.dumps(
@@ -863,6 +868,10 @@ def cmd_serve(args) -> int:
                 text = _req_query_text(req)
                 top_k = _req_top_k(req, args.top_k)
                 allowed = req.get("filter_ids")
+                if allowed is not None and not (
+                    isinstance(allowed, list) and all(type(d) is int for d in allowed)
+                ):
+                    raise ValueError("filter_ids must be a list of integer doc ids")
                 use_bool = bool(req.get("bool"))
                 msm = int(req.get("minimum_should_match", 0))
                 collapse = int(req.get("collapse_hosts", 0))
@@ -896,22 +905,27 @@ def cmd_serve(args) -> int:
         if hydrate and not hasattr(reader, "hydrate"):
             print(json.dumps({"error": "hydrate not supported on a multi-partition replica"}), flush=True)
             continue
-        if use_bool:
-            # {"query": "+must -not should", "bool": true,
-            #  "minimum_should_match"?: n}: Lucene-style clause syntax via
-            # IndexReader.query_bool
-            hits = reader.query_bool(
-                text, top_k=top_k, positive_only=not args.match_all,
-                allowed_docs=allowed, offset=offset, search_after=search_after,
-                min_should_match=msm,
-            )
-        else:
-            extra = {"collapse_hosts": collapse} if collapse else {}
-            hits = reader.query(
-                text, top_k=top_k, positive_only=not args.match_all,
-                allowed_docs=allowed, offset=offset, search_after=search_after,
-                **extra,
-            )
+        try:
+            if use_bool:
+                # {"query": "+must -not should", "bool": true,
+                #  "minimum_should_match"?: n}: Lucene-style clause syntax via
+                # IndexReader.query_bool
+                hits = reader.query_bool(
+                    text, top_k=top_k, positive_only=not args.match_all,
+                    allowed_docs=allowed, offset=offset, search_after=search_after,
+                    min_should_match=msm,
+                )
+            else:
+                extra = {"collapse_hosts": collapse} if collapse else {}
+                hits = reader.query(
+                    text, top_k=top_k, positive_only=not args.match_all,
+                    allowed_docs=allowed, offset=offset, search_after=search_after,
+                    **extra,
+                )
+        except ValueError as e:
+            # e.g. a negative offset: an error line, the loop keeps serving
+            print(json.dumps({"error": str(e)}), flush=True)
+            continue
         ms = (time.perf_counter() - t0) * 1000
         counters["searches"] += 1
         counters["search_ms_total"] += ms

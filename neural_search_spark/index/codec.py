@@ -8,8 +8,12 @@ segment-id trick over the continuation bits. Runs inside the build-side
 
 Block layout (one parquet row per block, flat — columnar-friendly):
     term, shard, block_id, first_doc_id, n_docs, max_tf, min_dl, deltas, tfs
-``deltas[0]`` is ``doc_id[0] - shard_base``; subsequent are plain gaps (no -1
-offset) to keep the codec trivial to verify.
+A (term, shard)'s blocks form a chain in ``block_id`` order: block 0's
+``deltas[0]`` is ``doc_id[0] - shard_base``, every later block's is relative
+to the previous block's last id, and the rest are plain gaps (no -1 offset)
+to keep the codec trivial to verify. ``decode_postings`` is the one owner of
+that chain: the serving replica, the WAND kernel, phrase retrieval and the
+maintenance decoder all decode through it.
 
 WAND metadata is **stats-independent**: blocks store ``max_tf`` (max term
 frequency in the block) and ``min_dl`` (min doc length among the block's
@@ -300,11 +304,6 @@ def encode_doc_ids(doc_ids: np.ndarray, base: int) -> bytes:
     return encode_ints(deltas)
 
 
-def decode_doc_ids(buf: bytes, base: int, count: int | None = None) -> np.ndarray:
-    deltas = decode_ints(buf, count)
-    return (np.cumsum(deltas.astype(np.int64)) + base).astype(np.int64)
-
-
 def encode_position_lists(pos_lists: list) -> bytes:
     """Encode per-doc position lists (1-based, strictly increasing) as one
     delta stream: each list's first element is absolute, the rest are gaps.
@@ -326,7 +325,14 @@ def decode_position_lists(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
     total = int(tfs.sum())
     if total == 0:
         return [np.zeros(0, dtype=np.int64) for _ in tfs]
-    vals = decode_ints(buf, total).astype(np.int64)
+    return _split_position_lists(decode_ints(buf, total).astype(np.int64), tfs)
+
+
+def _split_position_lists(vals: np.ndarray, tfs: np.ndarray) -> list[np.ndarray]:
+    """Per-doc absolute positions from a decoded positions stream: segment
+    lengths are ``tfs``, each segment's first value is absolute and the rest
+    are gaps. Streams of consecutive blocks concatenate cleanly, because
+    every segment restarts from an absolute value."""
     ends = np.cumsum(tfs)
     c = np.cumsum(vals)
     seg_offsets = np.concatenate(([0], c[ends[:-1] - 1]))
@@ -337,9 +343,15 @@ def decode_position_lists(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
 def bm25_term_bound(
     tf: np.ndarray, doc_len: np.ndarray, idf: float, k1: float, b: float, avgdl: float
 ) -> np.ndarray:
-    """Exact per-posting BM25 contribution (single query-term occurrence)."""
-    tf = tf.astype(np.float64)
-    denom = tf + k1 * (1.0 - b + b * doc_len.astype(np.float64) / avgdl)
+    """Exact per-posting BM25 contribution of one query term.
+
+    The one spelling of the BM25 term formula for every numpy scorer (the
+    serving replica, the WAND window loop, the block bounds). A term that
+    occurs ``qtf`` times in the query passes ``qtf * idf`` as ``idf``: that
+    keeps the product order of ``qtf * idf * (tf * (k1 + 1) / denom)``, so
+    scores stay bit-identical across scorers."""
+    tf = np.asarray(tf, dtype=np.float64)
+    denom = tf + k1 * (1.0 - b + b * np.asarray(doc_len, dtype=np.float64) / avgdl)
     return idf * (tf * (k1 + 1.0) / denom)
 
 
@@ -354,7 +366,7 @@ def block_score_bound(
     so bound(max_tf, min_dl) >= score(tf, dl). (For negative floored idfs the
     query kernel clamps bounds at 0 — a doc *lacking* the term scores higher.)
     """
-    return bm25_term_bound(np.asarray(max_tf), np.asarray(min_dl), idf, k1, b, avgdl)
+    return bm25_term_bound(max_tf, min_dl, idf, k1, b, avgdl)
 
 
 def encode_posting_blocks(
@@ -401,41 +413,55 @@ def encode_posting_blocks(
     return out
 
 
-def decode_posting_blocks(blocks: list[dict], shard_base: int) -> tuple[np.ndarray, np.ndarray]:
-    """Inverse of encode_posting_blocks for a term: (doc_ids, tfs).
+def decode_postings(blocks, docs_per_shard: int) -> dict:
+    """Decode posting-block chains: {(term, shard): (doc_ids, tfs[, positions])}.
 
-    Batched: every block's delta/tf stream decodes in one
-    ``decode_ints_many`` call, and because each block's first delta is
-    relative to the PREVIOUS block's last id, one cumsum over the
-    concatenated deltas reconstructs every id — no per-block chaining."""
-    blocks = sorted(blocks, key=lambda x: x["block_id"])
-    if not blocks:
-        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-    counts = [int(b["n_docs"]) for b in blocks]
+    The one decoder of the block chain; every query path and the
+    maintenance decoder call it. ``blocks`` is a pyarrow Table or a pandas
+    DataFrame with one row per block and columns term, shard, block_id,
+    n_docs, deltas, tfs, plus positions on a positional read; rows may come
+    in any order. Keys come out in ascending (term, shard) order; doc_ids
+    and tfs are int64 and, with a positions column, the third element is
+    the per-doc list of 1-based position arrays.
+
+    A (term, shard) chain is its blocks in block_id order: block 0's first
+    delta is relative to the shard base (``shard * docs_per_shard``) and
+    every later block's first delta to the previous block's last id, so one
+    cumsum over the chain's concatenated deltas rebuilds every id. All
+    delta and tf streams decode in one ``decode_ints_many`` call; position
+    streams take a second, since their value counts are the block tf sums.
+    """
+    arrow = hasattr(blocks, "column_names")
+    positional = "positions" in (blocks.column_names if arrow else blocks.columns)
+    cols = [
+        blocks[n].to_pylist() if arrow else blocks[n].tolist()
+        for n in ["term", "shard", "block_id", "n_docs", "deltas", "tfs"]
+        + ["positions"] * positional
+    ]
+    term, shard, block_id, n_docs, deltas, tfs = cols[:6]
+    order = sorted(range(len(term)), key=lambda i: (term[i], shard[i], block_id[i]))
+    # sorted chain key -> [first, last + 1) range of its blocks in `order`
+    spans: dict = {}
+    for j, i in enumerate(order):
+        spans.setdefault((term[i], int(shard[i])), [j, 0])[1] = j + 1
+    counts = [int(n_docs[i]) for i in order]
+    nb = len(order)
     streams = decode_ints_many(
-        [b["deltas"] for b in blocks] + [b["tfs"] for b in blocks],
-        counts + counts,
+        [deltas[i] for i in order] + [tfs[i] for i in order], counts + counts
     )
-    ids = np.cumsum(
-        np.concatenate(streams[: len(blocks)]).astype(np.int64)
-    ) + shard_base
-    tfs = np.concatenate(streams[len(blocks):]).astype(np.int64)
-    return ids, tfs
-
-
-def decode_posting_blocks_with_positions(
-    blocks: list[dict], shard_base: int
-) -> tuple[np.ndarray, np.ndarray, list[np.ndarray]]:
-    """(doc_ids, tfs, per-doc position lists) for a positional term."""
-    all_ids, all_tfs, all_pos = [], [], []
-    prev_last = shard_base
-    for blk in sorted(blocks, key=lambda x: x["block_id"]):
-        ids = decode_doc_ids(blk["deltas"], prev_last, blk["n_docs"])
-        tfs = decode_ints(blk["tfs"], blk["n_docs"]).astype(np.int64)
-        all_ids.append(ids)
-        all_tfs.append(tfs)
-        all_pos.extend(decode_position_lists(blk["positions"], tfs))
-        prev_last = int(ids[-1])
-    if not all_ids:
-        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64), []
-    return np.concatenate(all_ids), np.concatenate(all_tfs), all_pos
+    if positional:
+        pos_streams = decode_ints_many(
+            [cols[6][i] for i in order], [int(t.sum()) for t in streams[nb:]]
+        )
+    out: dict = {}
+    for (t, sh), (lo, hi) in spans.items():
+        deltas_run = np.concatenate(streams[lo:hi]).astype(np.int64)
+        chain = (
+            np.cumsum(deltas_run) + sh * docs_per_shard,
+            np.concatenate(streams[nb + lo : nb + hi]).astype(np.int64),
+        )
+        if positional:
+            vals = np.concatenate(pos_streams[lo:hi]).astype(np.int64)
+            chain += (_split_position_lists(vals, chain[1]),)
+        out[(t, sh)] = chain
+    return out

@@ -30,7 +30,6 @@ from __future__ import annotations
 import os
 import shutil
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,7 +44,7 @@ from .build import (
     build_index,
     load_index,
 )
-from .codec import decode_ints
+from .codec import decode_postings
 from .stats import floored_term_stats
 
 
@@ -265,20 +264,10 @@ def _decode_kernel(docs_per_shard: int):
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         out_d, out_t, out_f = [], [], []
-        shard = int(pdf["shard"].iloc[0])
-        base = shard * docs_per_shard
-        for term, g in pdf.groupby("term", sort=False):
-            g = g.sort_values("block_id")
-            prev = base
-            for blk in g[["n_docs", "deltas", "tfs"]].itertuples(index=False):
-                n = int(blk.n_docs)
-                deltas = decode_ints(bytes(blk.deltas), n).astype(np.int64)
-                ids = np.cumsum(deltas) + prev
-                prev = int(ids[-1])
-                tfs = decode_ints(bytes(blk.tfs), n).astype(np.int64)
-                out_d.extend(ids.tolist())
-                out_t.extend([term] * len(ids))
-                out_f.extend(tfs.tolist())
+        for (term, _shard), (ids, tfs) in decode_postings(pdf, docs_per_shard).items():
+            out_d.extend(ids.tolist())
+            out_t.extend([term] * len(ids))
+            out_f.extend(tfs.tolist())
         return pd.DataFrame({"doc_id": out_d, "term": out_t, "tf": out_f})
 
     return fn
@@ -286,7 +275,9 @@ def _decode_kernel(docs_per_shard: int):
 
 def decode_shard_postings(idx: PhysicalIndex, shards: list[int]) -> DataFrame:
     """Lossless inverse of the build: (doc_id, term, tf) for the given shards."""
-    pf = idx.postings.where(F.col("shard").isin(shards))
+    pf = idx.postings.where(F.col("shard").isin(shards)).select(
+        "shard", "bucket", "term", "block_id", "n_docs", "deltas", "tfs"
+    )
     return pf.groupBy("shard", "bucket").applyInPandas(
         _decode_kernel(idx.docs_per_shard), schema="doc_id long, term string, tf long"
     )

@@ -17,7 +17,11 @@ Windows are visited in descending U_w; once the running top-k threshold θ
 (kth best exact score so far, 0 until the heap fills) satisfies θ ≥ U_w, all
 remaining windows are provably below the kth result and are skipped without
 decoding. Within a visited window, scoring is exact, dense, and vectorized
-(numpy over decoded postings + the shard's doc_len array). The max(0, ·)
+(numpy over decoded postings + the shard's doc_len array). Blocks decode
+through ``codec.decode_postings``, the one owner of the block-chain format
+(shared with the serving replica, phrase retrieval and maintenance), and
+every posting scores through ``codec.bm25_term_bound``, the replica's term
+kernel too — so the two paths agree bit for bit. The max(0, ·)
 clamp keeps the bound valid even if an epsilon-floored idf is negative
 (average_idf < 0), where a doc *lacking* the term outscores one containing it.
 
@@ -96,7 +100,7 @@ def _shard_kernel(
     visited_acc=None,
     total_acc=None,
 ):
-    from ..index.codec import block_score_bound, decode_ints
+    from ..index import codec
 
     def fn(postings_pdfs, docmap_pdfs) -> pd.DataFrame:
         postings = pd.concat(list(postings_pdfs), ignore_index=True) if postings_pdfs is not None else None
@@ -120,33 +124,23 @@ def _shard_kernel(
                 term_idf[t] = idf
 
         # decode cache: term -> (doc_ids, tfs, per-block meta + bounds)
+        chains = codec.decode_postings(postings, docs_per_shard)
         by_term: dict[str, dict] = {}
         for term, g in postings.groupby("term", sort=False):
-            g = g.sort_values("block_id")
-            ids_parts, tf_parts = [], []
-            prev = base
-            firsts = g["first_doc_id"].to_numpy()
-            lasts = g["last_doc_id"].to_numpy()
-            bounds = block_score_bound(
-                g["max_tf"].to_numpy(),
-                g["min_dl"].to_numpy(),
-                term_idf.get(term, 0.0),
-                k1,
-                b,
-                avgdl,
-            )
-            for _, blk in g.iterrows():
-                deltas = decode_ints(blk["deltas"], blk["n_docs"]).astype(np.int64)
-                ids = np.cumsum(deltas) + prev
-                prev = int(ids[-1])
-                ids_parts.append(ids)
-                tf_parts.append(decode_ints(blk["tfs"], blk["n_docs"]).astype(np.float64))
+            ids, tfs = chains[(term, shard)]
             by_term[term] = {
-                "ids": np.concatenate(ids_parts),
-                "tfs": np.concatenate(tf_parts),
-                "first": firsts,
-                "last": lasts,
-                "max": bounds,
+                "ids": ids,
+                "tfs": tfs,
+                "first": g["first_doc_id"].to_numpy(),
+                "last": g["last_doc_id"].to_numpy(),
+                "max": codec.block_score_bound(
+                    g["max_tf"].to_numpy(),
+                    g["min_dl"].to_numpy(),
+                    term_idf.get(term, 0.0),
+                    k1,
+                    b,
+                    avgdl,
+                ),
             }
 
         n_windows = -(-docs_per_shard // window_docs)
@@ -203,10 +197,10 @@ def _shard_kernel(
                     if i0 == i1:
                         continue
                     ids = meta["ids"][i0:i1]
-                    tfs = meta["tfs"][i0:i1]
                     loc = ids - lo
-                    denom = tfs + k1 * (1.0 - b + b * dl[ids - base] / avgdl)
-                    wscore[loc] += qtf * idf * (tfs * (k1 + 1.0) / denom)
+                    wscore[loc] += codec.bm25_term_bound(
+                        meta["tfs"][i0:i1], dl[ids - base], qtf * idf, k1, b, avgdl
+                    )
                     touched[loc] = True
                 cand = np.flatnonzero(touched)
                 if cand.size == 0:

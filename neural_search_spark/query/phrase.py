@@ -284,7 +284,7 @@ def indexed_positions(index, terms: list[str]) -> DataFrame:
         raise ValueError(
             "index stores no positions; rebuild with store_positions=True"
         )
-    from ..index.codec import decode_ints, decode_position_lists
+    from ..index.codec import decode_postings
 
     span = index.docs_per_shard
     pf = index.postings.where(F.col("term").isin(list(terms))).select(
@@ -294,24 +294,13 @@ def indexed_positions(index, terms: list[str]) -> DataFrame:
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        shard = int(pdf["shard"].iloc[0])
-        base = shard * span
         out_d: list[int] = []
         out_t: list[str] = []
         out_p: list[list[int]] = []
-        for term, g in pdf.groupby("term", sort=False):
-            g = g.sort_values("block_id")
-            prev = base
-            for blk in g.itertuples(index=False):
-                n = int(blk.n_docs)
-                deltas = decode_ints(bytes(blk.deltas), n).astype(np.int64)
-                ids = np.cumsum(deltas) + prev
-                prev = int(ids[-1])
-                tfs = decode_ints(bytes(blk.tfs), n).astype(np.int64)
-                plists = decode_position_lists(bytes(blk.positions), tfs)
-                out_d.extend(ids.tolist())
-                out_t.extend([term] * n)
-                out_p.extend([p.astype(np.int32) for p in plists])
+        for (term, _shard), (ids, _tfs, plists) in decode_postings(pdf, span).items():
+            out_d.extend(ids.tolist())
+            out_t.extend([term] * len(ids))
+            out_p.extend([p.astype(np.int32) for p in plists])
         return pd.DataFrame({"doc_id": out_d, "term": out_t, "positions": out_p})
 
     return pf.groupBy("shard", "bucket").applyInPandas(

@@ -8,8 +8,10 @@ durable artifact is the sharded compressed parquet index the Spark cluster
 builds (index/build.py); ``IndexReader`` answers a query by reading ONLY the
 query terms' posting blocks via pyarrow predicate pushdown (shard-partition
 dirs + row-group statistics on the sorted ``term`` column), decoding them
-with the same numpy codec, and scoring with bit-identical arithmetic to the
-WAND kernel — so results are rank-identical to ``bm25_topk_wand`` and the
+with ``codec.decode_postings`` (the one owner of the block-chain format,
+shared with the WAND kernel, phrase retrieval and maintenance), and scoring
+with ``codec.bm25_term_bound``, the same term kernel as the WAND window
+loop — so results are rank-identical to ``bm25_topk_wand`` and the
 DataFrame batch path (asserted in tests/test_serve.py).
 
 Deployment shape at scale:
@@ -41,6 +43,7 @@ import numpy as np
 
 from ..config import MAX_TOP_K
 from ..functions.tokenize import _TOKEN_RE, tokenize_py
+from ..index import codec
 from .cache import TtlLruCache
 
 
@@ -190,84 +193,30 @@ class IndexReader:
         term-range statistics can't match) and decodes with the shared
         codec; terms already in the cache skip both the read and the decode.
         """
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        from ..index.codec import decode_ints_many
-
-        out: dict = {}
-        missing: list[str] = []
-        for t in terms:
-            if self.cache is not None:
-                hit = self.cache.get(TtlLruCache.make_postings_key(t, self.snapshot))
-                if hit is not None:
-                    out[t] = hit
-                    continue
-            missing.append(t)
-        if not missing:
-            return out
-
-        span = self.docs_per_shard
-        table = pq.read_table(
-            os.path.join(self.root, "postings"),
-            columns=[
-                "shard", "term", "block_id", "first_doc_id", "n_docs", "deltas", "tfs",
-            ],
-            filters=pc.field("term").isin(missing),
-        )
-        by_key: dict = {}
-        for r in table.to_pylist():
-            by_key.setdefault((r["term"], int(r["shard"])), []).append(r)
-        per_term: dict = {t: [] for t in missing}
-        # one batched decode across EVERY block of every missing term: the
-        # per-call decode overhead (not the bit twiddling) dominated cold
-        # reads — see codec.decode_ints_many
-        groups = []
-        bufs: list = []
-        cnts: list[int] = []
-        for (term, shard), blocks in sorted(by_key.items()):
-            blocks.sort(key=lambda x: int(x["block_id"]))
-            counts = [int(b["n_docs"]) for b in blocks]
-            groups.append((term, shard, len(blocks), counts))
-            bufs.extend(b["deltas"] for b in blocks)
-            bufs.extend(b["tfs"] for b in blocks)
-            cnts.extend(counts)
-            cnts.extend(counts)
-        streams = decode_ints_many(bufs, cnts)
-        pos = 0
-        for term, shard, nblk, counts in groups:
-            deltas = np.concatenate(streams[pos : pos + nblk]).astype(np.int64)
-            tfs = np.concatenate(streams[pos + nblk : pos + 2 * nblk]).astype(
-                np.float64
-            )
-            pos += 2 * nblk
-            # block b's first delta is relative to block b-1's last id, so a
-            # single cumsum from the shard base reconstructs every id
-            ids = np.cumsum(deltas) + shard * span
-            per_term[term].append((shard, ids, tfs))
-        for t in missing:
-            out[t] = per_term[t]
-            if self.cache is not None:
-                self.cache.set(TtlLruCache.make_postings_key(t, self.snapshot), out[t])
-        return out
+        return self._read_chains(terms, "")
 
     def _positions_for(self, terms: list[str]) -> dict:
-        """term -> [(shard, doc_ids, pos_lists)] from a positional index.
+        """term -> [(shard, doc_ids, tfs, pos_lists)] from a positional index.
 
         Same pushdown-pruned read shape as ``_postings_for`` plus the
         positions stream; cached under a ``pos:``-prefixed keyspace so flat
         posting entries never collide."""
+        return self._read_chains(terms, "pos:")
+
+    def _read_chains(self, terms: list[str], prefix: str) -> dict:
+        """term -> [(shard, *decoded chain)] for ``_postings_for`` ("") and
+        ``_positions_for`` ("pos:", which also reads positions): cached
+        terms skip the read and the decode; the rest are read in one
+        pushdown-pruned scan and decoded by ``codec.decode_postings``."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
-
-        from ..index.codec import decode_ints, decode_position_lists
 
         out: dict = {}
         missing: list[str] = []
         for t in terms:
             if self.cache is not None:
                 hit = self.cache.get(
-                    TtlLruCache.make_postings_key(f"pos:{t}", self.snapshot)
+                    TtlLruCache.make_postings_key(prefix + t, self.snapshot)
                 )
                 if hit is not None:
                     out[t] = hit
@@ -275,38 +224,21 @@ class IndexReader:
             missing.append(t)
         if not missing:
             return out
-
-        span = self.docs_per_shard
         table = pq.read_table(
             os.path.join(self.root, "postings"),
-            columns=[
-                "shard", "term", "block_id", "n_docs", "deltas", "tfs", "positions",
-            ],
+            columns=["shard", "term", "block_id", "n_docs", "deltas", "tfs"]
+            + (["positions"] if prefix else []),
             filters=pc.field("term").isin(missing),
         )
-        by_key: dict = {}
-        for r in table.to_pylist():
-            by_key.setdefault((r["term"], int(r["shard"])), []).append(r)
-        per_term: dict = {t: [] for t in missing}
-        for (term, shard), blocks in sorted(by_key.items()):
-            blocks.sort(key=lambda x: int(x["block_id"]))
-            prev = shard * span
-            ids_parts, pos_parts = [], []
-            for blk in blocks:
-                n = int(blk["n_docs"])
-                deltas = decode_ints(bytes(blk["deltas"]), n).astype(np.int64)
-                ids = np.cumsum(deltas) + prev
-                prev = int(ids[-1])
-                tfs = decode_ints(bytes(blk["tfs"]), n).astype(np.int64)
-                ids_parts.append(ids)
-                pos_parts.extend(decode_position_lists(bytes(blk["positions"]), tfs))
-            per_term[term].append((shard, np.concatenate(ids_parts), pos_parts))
         for t in missing:
-            out[t] = per_term[t]
-            if self.cache is not None:
-                self.cache.set(
-                    TtlLruCache.make_postings_key(f"pos:{t}", self.snapshot), out[t]
-                )
+            out[t] = []
+        chains = codec.decode_postings(table, self.docs_per_shard)
+        for (t, shard), chain in chains.items():
+            out[t].append((shard, *chain))
+        if self.cache is not None:
+            for t in missing:
+                key = TtlLruCache.make_postings_key(prefix + t, self.snapshot)
+                self.cache.set(key, out[t])
         return out
 
     def query_phrase(self, text: str, top_k: int = 10) -> list[tuple[int, int]]:
@@ -335,7 +267,7 @@ class IndexReader:
         by_term: dict[str, dict[int, np.ndarray]] = {}
         for t in distinct:
             m: dict[int, np.ndarray] = {}
-            for _shard, ids, plists in pos[t]:
+            for _shard, ids, _tfs, plists in pos[t]:
                 for d, p in zip(ids.tolist(), plists):
                     m[d] = p
             by_term[t] = m
@@ -382,7 +314,7 @@ class IndexReader:
         by_term: dict[str, dict[int, np.ndarray]] = {}
         for t in terms:
             m: dict[int, np.ndarray] = {}
-            for _shard, ids, plists in pos[t]:
+            for _shard, ids, _tfs, plists in pos[t]:
                 for d, p in zip(ids.tolist(), plists):
                     m[d] = p
             by_term[t] = m
@@ -1049,6 +981,8 @@ class IndexReader:
         avgdl_override: float | None = None,
         collapse_hosts: int = 0,
     ) -> list[tuple[int, float]]:
+        if offset < 0:
+            raise ValueError(f"offset must be >= 0, got {offset}")
         k1, b = float(self.stats["k1"]), float(self.stats["b"])
         # override = scatter-gather mode (MultiReader): GLOBAL avgdl with
         # local tf/doc_len, so partial-index scores equal merged-index scores
@@ -1075,8 +1009,9 @@ class IndexReader:
                     )
                 scores, touched = acc[shard]
                 loc = ids - shard * span
-                denom = tfs + k1 * (1.0 - b + b * st.doc_len[loc] / avgdl)
-                scores[loc] += qtf * idf * (tfs * (k1 + 1.0) / denom)
+                scores[loc] += codec.bm25_term_bound(
+                    tfs, st.doc_len[loc], qtf * idf, k1, b, avgdl
+                )
                 touched[loc] = True
 
         out_ids: list[np.ndarray] = []

@@ -122,6 +122,10 @@ class MultiReader:
         from ..functions.analyzers import analyze_tokens
         from ..functions.tokenize import tokenize_py
 
+        if offset < 0:
+            # each partition is scored for its top-(offset+top_k) with no
+            # offset, so IndexReader._score's own check never sees it
+            raise ValueError(f"offset must be >= 0, got {offset}")
         ana = self.readers[0].stats.get("analyzer") or ""
         counts: dict[str, int] = {}
         for t in analyze_tokens(tokenize_py(text), ana):

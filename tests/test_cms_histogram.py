@@ -375,6 +375,23 @@ def test_cli_sketch_quantiles_bins_recorded_in_partials(
     assert "error" in err
 
 
+def test_cli_sketch_quantiles_bins_note_with_empty_first_partial(
+    spark, tmp_path, partials128
+):
+    """The contradicted---bins note reads nbins from the first NON-EMPTY
+    partial: an empty partial listed first must not suppress it."""
+    p0, p1, whole128 = partials128
+    empty = str(tmp_path / "empty")
+    spark.read.parquet(p0).limit(0).write.parquet(empty)
+    assert spark.read.parquet(empty).count() == 0
+    merged, errout = _run_sketch("quantiles", "--merge-inputs",
+                                 f"{empty},{p0},{p1}", "--bins", "256",
+                                 want_stderr=True)
+    assert merged["est"] == whole128["est"]
+    assert "partials record nbins=128" in errout
+    assert "recorded value wins over --bins 256" in errout
+
+
 def test_hist_merge_legacy_partials_warn_but_merge(spark, values):
     """Partials persisted before nbins was recorded in the frame (no nbins
     column) still merge — with a warning that the frame check is [lo, hi]

@@ -1,19 +1,55 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from neural_search_spark.index.codec import (
     bm25_term_bound,
-    decode_doc_ids,
-    decode_posting_blocks,
+    decode_ints,
+    decode_position_lists,
+    decode_postings,
     encode_doc_ids,
     encode_posting_blocks,
     varint_decode,
     varint_encode,
 )
+
+
+def _doc_ids(buf: bytes, base: int, count: int) -> np.ndarray:
+    """One delta stream back to ids: the per-block step of the chain."""
+    return np.cumsum(decode_ints(buf, count).astype(np.int64)) + base
+
+
+def _chain_reference(blocks: list[dict], base: int):
+    """(doc_ids, tfs, position lists) of one (term, shard) chain, decoded one
+    block at a time with ``decode_ints`` — the reference that
+    ``decode_postings`` must equal."""
+    ids, tfs, pos = [], [], []
+    prev = base
+    for blk in sorted(blocks, key=lambda b: b["block_id"]):
+        n = blk["n_docs"]
+        ids.append(_doc_ids(blk["deltas"], prev, n))
+        prev = int(ids[-1][-1])
+        tfs.append(decode_ints(blk["tfs"], n).astype(np.int64))
+        if "positions" in blk:
+            pos.extend(decode_position_lists(blk["positions"], tfs[-1]))
+    return np.concatenate(ids), np.concatenate(tfs), pos
+
+
+def _block_table(chains: dict, rng=None) -> pd.DataFrame:
+    """{(term, shard): blocks} as one block-row frame, rows shuffled."""
+    rows = [
+        {"term": term, "shard": shard, **blk}
+        for (term, shard), blocks in chains.items()
+        for blk in blocks
+    ]
+    if rng is not None:
+        rows = [rows[i] for i in rng.permutation(len(rows))]
+    return pd.DataFrame(rows)
 
 
 def test_varint_roundtrip_basic():
@@ -48,7 +84,7 @@ def test_doc_id_delta_roundtrip(ids):
     base = int(ids[0]) - 1 if ids[0] > 0 else 0
     # delta coding requires first >= base
     buf = encode_doc_ids(ids, 0)
-    assert (decode_doc_ids(buf, 0, len(ids)) == ids).all()
+    assert (_doc_ids(buf, 0, len(ids)) == ids).all()
 
 
 def test_posting_block_roundtrip_and_bounds():
@@ -60,7 +96,8 @@ def test_posting_block_roundtrip_and_bounds():
     tfs = rng.integers(1, 30, size=n)
     dls = rng.integers(20, 400, size=n)
     blocks = encode_posting_blocks(doc_ids, tfs, dls, shard_base=100000, block_size=128)
-    got_ids, got_tfs = decode_posting_blocks(blocks, shard_base=100000)
+    got = decode_postings(_block_table({("t", 1): blocks}), docs_per_shard=100000)
+    got_ids, got_tfs = got[("t", 1)]
     assert (got_ids == doc_ids).all()
     assert (got_tfs == tfs).all()
     # stats-independent metadata: max_tf / min_dl are block extrema, and the
@@ -84,7 +121,7 @@ def test_compression_is_compact():
     ids = np.arange(50000, 51000, dtype=np.int64)
     buf = encode_doc_ids(ids, 50000 - 1)
     assert len(buf) == 2 + 1000 // 8  # scheme byte + width byte + packed bits
-    assert (decode_doc_ids(buf, 50000 - 1, 1000) == ids).all()
+    assert (_doc_ids(buf, 50000 - 1, 1000) == ids).all()
 
 
 def test_bitpack_roundtrip():
@@ -195,11 +232,6 @@ def test_position_lists_roundtrip_property(raw_lists):
 )
 @settings(max_examples=40, deadline=None)
 def test_positional_block_roundtrip_property(rows, block_size):
-    from neural_search_spark.index.codec import (
-        decode_posting_blocks_with_positions,
-        encode_posting_blocks,
-    )
-
     base = 1_000_000
     rows = sorted(rows)
     ids = np.array([base + r[0] for r in rows], dtype=np.int64)
@@ -213,10 +245,66 @@ def test_positional_block_roundtrip_property(rows, block_size):
     blocks = encode_posting_blocks(
         ids, tfs, dls, shard_base=base, block_size=block_size, pos_lists=pos
     )
-    gi, gt, gp = decode_posting_blocks_with_positions(blocks, base)
+    [(gi, gt, gp)] = decode_postings(_block_table({("t", 1): blocks}), base).values()
     assert np.array_equal(gi, ids) and np.array_equal(gt, tfs)
     for a, b in zip(gp, pos):
         assert np.array_equal(a, b)
+
+
+def _chain_ids(rng, style: str, base: int, span: int) -> np.ndarray:
+    """Sorted doc ids of one chain, shaped to pick one int scheme."""
+    if style == "dense":  # every gap is 1: bit-packed
+        start = int(rng.integers(0, span // 2))
+        return base + start + np.arange(int(rng.integers(1, 300)))
+    if style == "outliers":  # tiny gaps plus a few jumps: patched
+        gaps = rng.integers(1, 4, size=int(rng.integers(64, 300)))
+        gaps[rng.choice(gaps.size, 3, replace=False)] = rng.integers(1 << 14, 1 << 16, 3)
+        return base + np.cumsum(gaps)
+    # a far first doc and at most two close ones: varint
+    start = int(rng.integers(1 << 16, span // 2))
+    return base + start + np.cumsum(rng.integers(0, 3, size=int(rng.integers(1, 4))))
+
+
+@pytest.mark.parametrize("arrow", [False, True])
+@pytest.mark.parametrize("positional", [False, True])
+def test_decode_postings_equals_block_chain(positional, arrow):
+    """``decode_postings`` equals the per-block ``decode_ints`` chain for
+    many terms and shards, blocks of every int scheme, shuffled rows, with
+    and without positions, from a pandas frame or an Arrow table."""
+    span = 1 << 20
+    rng = np.random.default_rng(5)
+    styles = ["dense", "outliers", "varint"]
+    chains: dict = {}
+    for i, term in enumerate(["w1", "w0", "w3", "w2", "w5", "w4"]):
+        for j, shard in enumerate(rng.choice(5, size=3, replace=False).tolist()):
+            ids = _chain_ids(rng, styles[(i + j) % 3], shard * span, span)
+            tfs = rng.integers(1, 9, size=ids.size)
+            pos = (
+                [np.sort(rng.choice(np.arange(1, 5000), t, replace=False)) for t in tfs]
+                if positional
+                else None
+            )
+            chains[(term, shard)] = encode_posting_blocks(
+                ids, tfs, tfs + 10, shard * span,
+                block_size=int(rng.choice([8, 32, 128])), pos_lists=pos,
+            )
+    schemes = {blk["deltas"][0] for blocks in chains.values() for blk in blocks}
+    assert schemes == {0, 1, 2}
+    table = _block_table(chains, rng)
+    if arrow:
+        table = pa.Table.from_pandas(table, preserve_index=False)
+    got = decode_postings(table, span)
+    assert list(got) == sorted(chains)
+    for (term, shard), blocks in chains.items():
+        ref_ids, ref_tfs, ref_pos = _chain_reference(blocks, shard * span)
+        chain = got[(term, shard)]
+        assert len(chain) == (3 if positional else 2)
+        assert chain[0].dtype == np.int64 and np.array_equal(chain[0], ref_ids)
+        assert chain[1].dtype == np.int64 and np.array_equal(chain[1], ref_tfs)
+        if positional:
+            assert len(chain[2]) == len(ref_pos)
+            assert all(np.array_equal(a, b) for a, b in zip(chain[2], ref_pos))
+    assert decode_postings(table.slice(0, 0) if arrow else table.iloc[:0], span) == {}
 
 
 @given(st.text(alphabet="abcdefgisuvy", min_size=0, max_size=12))

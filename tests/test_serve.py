@@ -1,8 +1,8 @@
 """IndexReader (query/serve.py): rank identity with the Spark paths + latency.
 
 The serving contract: a reader over the parquet index returns EXACTLY what
-the cluster-side paths return — same docs, same scores (1e-9), same
-deterministic tie order — and answers warm queries in milliseconds without
+the cluster-side paths return — same docs, same scores (bit for bit
+against WAND), same deterministic tie order — and answers warm queries in milliseconds without
 touching Spark.
 """
 
@@ -35,7 +35,10 @@ def served(spark, tmp_path_factory):
     return index, IndexReader(out_dir)
 
 
-QUERIES = ["w0005 w0010", "w0001", "w0000 w0002 w0007", "nosuchterm w0003"]
+QUERIES = [
+    "w0005 w0010", "w0001", "w0000 w0002 w0007", "nosuchterm w0003",
+    "w0005 w0005 w0005 w0010",  # qtf = 3
+]
 
 
 @pytest.mark.parametrize("positive_only", [True, False])
@@ -52,9 +55,8 @@ def test_reader_matches_wand(spark, served, positive_only):
             .collect()
         ]
         got = reader.query(text, top_k=12, positive_only=positive_only)
-        assert [d for d, _ in got] == [d for d, _ in expect], text
-        for (_, gs), (_, es) in zip(got, expect):
-            assert gs == pytest.approx(es, abs=1e-9)
+        # bit-identical: both paths score through codec.bm25_term_bound
+        assert got == expect, text
 
 
 def test_reader_unknown_terms_empty(served):
@@ -668,6 +670,8 @@ def test_multireader_scatter_gather_equals_merged_index(spark, tmp_path_factory)
     full = multi.query("w0005 w0010", top_k=30, positive_only=False)
     p2 = multi.query("w0005 w0010", top_k=10, positive_only=False, offset=10)
     assert p2 == full[10:20]
+    with pytest.raises(ValueError, match="offset must be >= 0"):
+        multi.query("w0005 w0010", top_k=3, offset=-2)
 
 
 def test_multireader_rejects_incompatible_partials(spark, tmp_path_factory):
@@ -922,6 +926,12 @@ def test_cli_serve_request_bounds(served):
         json.dumps({"queries": ["w0005"] * 101}),
         json.dumps({"queries": []}),
         json.dumps({"query": "w0005 w0010", "top_k": 3}),  # loop still alive
+        json.dumps({"query": "w0005", "filter_ids": "abc"}),
+        json.dumps({"query": "w0005 w0010", "top_k": 3}),
+        json.dumps({"explain": "w0005"}),
+        json.dumps({"query": "w0005 w0010", "top_k": 3}),
+        json.dumps({"query": "w0005 w0010", "offset": -2, "top_k": 3}),
+        json.dumps({"query": "w0005 w0010", "top_k": 3}),
     ]
     proc = subprocess.run(
         [sys.executable, "-m", "neural_search_spark.cli", "serve",
@@ -945,7 +955,13 @@ def test_cli_serve_request_bounds(served):
     ]
     assert "limited to 100" in out[5]["error"]
     assert "non-empty list" in out[6]["error"]
-    assert len(out[7]["hits"]) == 3
+    assert "filter_ids must be a list of integer" in out[8]["error"]
+    assert "doc_id" in out[10]["error"] and out[10]["error"] != "'doc_id'"
+    assert "offset must be >= 0" in out[12]["error"]
+    for i in (7, 9, 11, 13):
+        assert len(out[i]["hits"]) == 3
+    with pytest.raises(ValueError, match="offset must be >= 0"):
+        reader.query("w0005 w0010", top_k=3, offset=-1)
 
 
 def test_reader_query_dsl_top_k_bound(served):
