@@ -26,16 +26,18 @@ def entry(spark: SparkSession) -> DataFrame:
     return driver_entry.q_bm25_topk_all(spark, "/root/testdata/sf0.001")
 
 
-# Driver-gate rotation, round 5 (final): every entry whose latest green driver
-# row predates round 4 gets a fresh stamp. Order: the 3 entries not driver-run
-# since r02 (their indexed siblings are r03-green, but the driver itself must
-# re-stamp them), then the r03-dated entries whose dependencies changed in r4
-# (histogram.py nbins-in-partial, cms.py cms_topk, sketches.py alpha cast),
-# then the remaining r03 set. 3 + 7 + 40 = the 50-entry gate exactly; position
-# 51 (the one sacrificial slot under the cap) is emb_cosine_pairs, whose cosine
-# expression is a strict subcomponent of ann_topk_brute at position 39. The 50
-# r04-green entries follow.
+# Gate rotation: the first 50 entries fill the 50-entry gate. Position 1 is
+# emb_cosine_pairs, the one entry without a round-4/5 green stamp (last green
+# in r03). Then the 3 entries the gate has not run since r02 (their indexed
+# siblings are r03-green, but the gate itself must re-stamp them), then the
+# r03-dated entries whose dependencies changed in r4 (histogram.py
+# nbins-in-partial, cms.py cms_topk, sketches.py alpha cast), then the
+# remaining r03 set: 1 + 3 + 7 + 39 = 50. Position 51 (the one slot cut by
+# the cap) is events_sessions, green in the round-5 gate. The r04-green
+# entries follow.
 _PRIORITY = [
+    # --- last green stamp in r03, the oldest of any entry ---
+    "emb_cosine_pairs",
     # --- r02-stale (driver-unstamped for two rounds) ---
     "phrase_topk",
     "proximity_topk",
@@ -88,10 +90,8 @@ _PRIORITY = [
     "media_stats",
     "media_decode",
     "events_windowed",
+    # --- slot 51, cut by the 50-entry gate cap ---
     "events_sessions",
-    # --- sacrificial slot 51 (cut by the 50-entry gate cap): covered by
-    # --- ann_topk_brute above, which shares the cosine kernel ---
-    "emb_cosine_pairs",
     # --- r04-green (freshest; after the gate cap) ---
     "sketch_cardinality",
     "pack_chunks",

@@ -590,8 +590,9 @@ def cmd_serve(args) -> int:
                 print(json.dumps(out), flush=True)
                 continue
             # the reference's GET /metrics (main.py:156-163) as one
-            # JSON line: request counters, cache hit rates, and the
-            # loaded index's corpus stats
+            # JSON line: request counters, cache hit rates, posting row
+            # groups read vs in the directory, and the loaded index's
+            # corpus stats
             cs = None
             if cache is not None:
                 tot = cache.stats.hits + cache.stats.misses
@@ -604,6 +605,7 @@ def cmd_serve(args) -> int:
                     "entries": cache.live_entries(),
                 }
             srow = getattr(reader, "stats", None) or {}
+            readers = getattr(reader, "readers", [reader])  # MultiReader parts
             out = {
                 "snapshot": getattr(reader, "snapshot", ""),
                 "uptime_s": round(time.time() - t_up, 3),
@@ -612,6 +614,10 @@ def cmd_serve(args) -> int:
                     "search_ms_total": round(counters["search_ms_total"], 3),
                 },
                 "cache": cs,
+                "postings": {
+                    k: sum(r.postings_read[k] for r in readers)
+                    for k in ("row_groups_read", "row_groups_total", "files")
+                },
                 "index": {
                     k: srow[k] for k in ("n_docs", "avgdl", "k1", "b") if k in srow
                 },

@@ -19,7 +19,9 @@ dominant build cost, so the merge must not retokenize — and it doesn't:
   fresh build runs), and idf floors re-derive from the merged vocabulary.
 
 Cost: O(postings bytes) copy + O(vocabulary) stats join + O(1) manifests —
-no tokenize, no shuffle of the corpus text. The merged index is
+no tokenize, no shuffle of the corpus text. The postings go out through the
+build's ``_write_postings``, so the merged index keeps the term-sorted,
+one-file-per-shard layout the replica prunes reads with. The merged index is
 query-equivalent (per url, score) to a fresh build over the union; verified
 in tests/test_merge.py and the ``merge_equivalence`` driver entry.
 """
@@ -37,6 +39,7 @@ from .build import (
     IndexPaths,
     PhysicalIndex,
     _write_checkpoint,
+    _write_postings,
     load_index,
 )
 from .stats import floored_term_stats
@@ -143,9 +146,7 @@ def merge_indexes(
         "tfs",
         *(["positions"] if a.positional else []),
     )
-    a.postings.select(*post_cols).unionByName(p_b).write.mode("overwrite").partitionBy(
-        "shard"
-    ).parquet(paths.postings)
+    _write_postings(a.postings.select(*post_cols).unionByName(p_b), paths.postings)
 
     # --- global stats: exact df addition, fresh-build-identical avgdl --------
     n_docs = a.stats.n_docs + b.stats.n_docs

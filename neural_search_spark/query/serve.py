@@ -6,13 +6,13 @@ search.py:21-135``), giving per-query millisecond latency but coupling
 serving memory to corpus size and rebuilding everything on restart. Here the
 durable artifact is the sharded compressed parquet index the Spark cluster
 builds (index/build.py); ``IndexReader`` answers a query by reading ONLY the
-query terms' posting blocks via pyarrow predicate pushdown (shard-partition
-dirs + row-group statistics on the sorted ``term`` column), decoding them
-with ``codec.decode_postings`` (the one owner of the block-chain format,
-shared with the WAND kernel, phrase retrieval and maintenance), and scoring
-with ``codec.bm25_term_bound``, the same term kernel as the WAND window
-loop — so results are rank-identical to ``bm25_topk_wand`` and the
-DataFrame batch path (asserted in tests/test_serve.py).
+posting row groups whose ``term`` min/max covers a query term (a row-group
+directory taken from the file footers at ``refresh()``), decoding them with
+``codec.decode_postings`` (the one owner of the block-chain format, shared
+with the WAND kernel, phrase retrieval and maintenance), and scoring with
+``codec.bm25_term_bound``, the same term kernel as the WAND window loop — so
+results are rank-identical to ``bm25_topk_wand`` and the DataFrame batch
+path (asserted in tests/test_serve.py).
 
 Deployment shape at scale:
   * one reader per serving replica; replicas are stateless — everything
@@ -22,8 +22,13 @@ Deployment shape at scale:
     cached in memory; per-shard doc_len arrays are loaded on first touch and
     cached (docs_per_shard x 4 bytes — bounded, shard-granular);
   * posting bytes are fetched on demand; hot terms ride the OS page cache /
-    object-store CDN. A query touches O(|q| x df/block_size) blocks, never a
-    full scan — the latency is decode + score of the query terms' postings;
+    object-store CDN. The build writes one term-sorted file per shard, so a
+    query reads about one row group per query term per shard (more only
+    for a term whose blocks span row groups), never a full scan; the
+    latency is read + decode + score of those row groups. On an index
+    written before the term sort (several unsorted files per shard) most
+    row groups span most terms: answers stay the same, but the read
+    degrades to a scan of the postings;
   * optionally, a ``TtlLruCache`` (query/cache.py, the reference's
     ``utils/cache.py`` analog) caches decoded per-term posting arrays and
     whole search results, keyed by the index snapshot token so a maintenance
@@ -87,6 +92,12 @@ class _ShardState:
 
 
 @dataclass
+class _PostingFile:
+    shard: int
+    handle: object  # pyarrow.parquet.ParquetFile, open for the snapshot
+
+
+@dataclass
 class IndexReader:
     root: str
     cache: TtlLruCache | None = None
@@ -98,6 +109,18 @@ class IndexReader:
     _suggest_index: dict | None = field(init=False, default=None)
     snapshot: str = field(init=False, default="")
     _shards: dict = field(init=False, default_factory=dict)
+    # the snapshot's posting files and their row-group directory: one entry
+    # per row group, in (file, row group) order; a row group without term
+    # statistics (parquet writers drop min/max values over a size limit) is
+    # always read
+    _files: list = field(init=False, default_factory=list)
+    _rg_file: np.ndarray = field(init=False, default=None)
+    _rg_index: np.ndarray = field(init=False, default=None)
+    _rg_min: np.ndarray = field(init=False, default=None)
+    _rg_max: np.ndarray = field(init=False, default=None)
+    _rg_nostats: np.ndarray = field(init=False, default=None)
+    postings_read: dict = field(init=False, default_factory=lambda: {
+        "row_groups_read": 0, "row_groups_total": 0, "files": 0})
 
     def __post_init__(self) -> None:
         self.refresh()
@@ -105,7 +128,8 @@ class IndexReader:
     # -- loading ------------------------------------------------------------
 
     def refresh(self) -> None:
-        """(Re)load stats + term dictionary; drop cached shard state.
+        """(Re)load stats + term dictionary + posting row-group directory;
+        drop cached shard state and close the previous snapshot's files.
 
         Call after a maintenance commit to serve the new snapshot. The
         snapshot token (md5 of the checkpoint manifest, whose atomic rename
@@ -134,6 +158,47 @@ class IndexReader:
         )
         self._shards = {}
         self._suggest_index = None
+        self._open_postings()
+
+    def _open_postings(self) -> None:
+        """Close the previous snapshot's posting files, then open every
+        ``postings/shard=K/*.parquet`` once and record each row group's
+        ``term`` min/max from its footer. Queries read through these
+        handles until the next ``refresh()``, so a maintenance commit that
+        replaces shard files cannot mix into the snapshot being served."""
+        import glob
+
+        import pyarrow.parquet as pq
+
+        self.close()
+        self._files = []
+        rg_file, rg_index, lo, hi, nostats = [], [], [], [], []
+        pattern = os.path.join(self.root, "postings", "shard=*", "*.parquet")
+        for path in sorted(glob.glob(pattern)):
+            shard = int(os.path.basename(os.path.dirname(path))[len("shard="):])
+            pf = pq.ParquetFile(path)
+            md = pf.metadata
+            col = md.schema.names.index("term")
+            for i in range(md.num_row_groups):
+                st = md.row_group(i).column(col).statistics
+                ok = st is not None and st.has_min_max
+                rg_file.append(len(self._files))
+                rg_index.append(i)
+                lo.append(st.min if ok else "")
+                hi.append(st.max if ok else "")
+                nostats.append(not ok)
+            self._files.append(_PostingFile(shard, pf))
+        self._rg_file = np.array(rg_file, dtype=np.int64)
+        self._rg_index = np.array(rg_index, dtype=np.int64)
+        self._rg_min = np.array(lo, dtype=str)
+        self._rg_max = np.array(hi, dtype=str)
+        self._rg_nostats = np.array(nostats, dtype=bool)
+
+    def close(self) -> None:
+        """Close the snapshot's posting files. Queries that need postings
+        fail until the next ``refresh()`` reopens them."""
+        for f in self._files:
+            f.handle.close()
 
     def _shard_state(self, shard: int) -> _ShardState:
         import pyarrow.parquet as pq
@@ -188,9 +253,8 @@ class IndexReader:
     def _postings_for(self, terms: list[str]) -> dict:
         """term -> [(shard, doc_ids, tfs)] (shards ascending), decoded.
 
-        Reads only the missing terms' blocks (pyarrow filter pushdown: the
-        ``term IN (...)`` predicate prunes shard files / row groups whose
-        term-range statistics can't match) and decodes with the shared
+        Reads only the row groups whose term min/max covers a term missing
+        from the cache (see ``_read_chains``) and decodes with the shared
         codec; terms already in the cache skip both the read and the decode.
         """
         return self._read_chains(terms, "")
@@ -198,7 +262,7 @@ class IndexReader:
     def _positions_for(self, terms: list[str]) -> dict:
         """term -> [(shard, doc_ids, tfs, pos_lists)] from a positional index.
 
-        Same pushdown-pruned read shape as ``_postings_for`` plus the
+        Same row-group-pruned read as ``_postings_for`` plus the
         positions stream; cached under a ``pos:``-prefixed keyspace so flat
         posting entries never collide."""
         return self._read_chains(terms, "pos:")
@@ -206,10 +270,16 @@ class IndexReader:
     def _read_chains(self, terms: list[str], prefix: str) -> dict:
         """term -> [(shard, *decoded chain)] for ``_postings_for`` ("") and
         ``_positions_for`` ("pos:", which also reads positions): cached
-        terms skip the read and the decode; the rest are read in one
-        pushdown-pruned scan and decoded by ``codec.decode_postings``."""
+        terms skip the read and the decode. For the rest, the row-group
+        directory picks the row groups whose [term min, term max] covers a
+        missing term; only those are read from the snapshot's open files,
+        filtered to the missing terms, labelled with their shard and decoded
+        together by ``codec.decode_postings``. The selection is conservative
+        for any row order, so an unsorted index answers the same, only
+        reading more row groups. ``postings_read`` counts row groups read,
+        row groups in the directory, and files read."""
+        import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         out: dict = {}
         missing: list[str] = []
@@ -224,17 +294,41 @@ class IndexReader:
             missing.append(t)
         if not missing:
             return out
-        table = pq.read_table(
-            os.path.join(self.root, "postings"),
-            columns=["shard", "term", "block_id", "n_docs", "deltas", "tfs"]
-            + (["positions"] if prefix else []),
-            filters=pc.field("term").isin(missing),
-        )
         for t in missing:
             out[t] = []
-        chains = codec.decode_postings(table, self.docs_per_shard)
-        for (t, shard), chain in chains.items():
-            out[t].append((shard, *chain))
+        want = np.array(sorted(missing), dtype=str)
+        # first wanted term >= each row group's min; a hit if it is <= max
+        first = np.minimum(np.searchsorted(want, self._rg_min), want.size - 1)
+        hit = self._rg_nostats | (
+            (want[first] >= self._rg_min) & (want[first] <= self._rg_max)
+        )
+        counters = self.postings_read
+        counters["row_groups_total"] += int(hit.size)
+        counters["row_groups_read"] += int(hit.sum())
+        cols = ["term", "block_id", "n_docs", "deltas", "tfs"] + (
+            ["positions"] if prefix else []
+        )
+        by_file: dict[int, list[int]] = {}
+        for fi, rg in zip(self._rg_file[hit].tolist(), self._rg_index[hit].tolist()):
+            by_file.setdefault(fi, []).append(rg)
+        wanted = pa.array(want)
+        parts = []
+        for fi, rgs in by_file.items():
+            f = self._files[fi]
+            # a few small row groups: pyarrow's thread pool costs more than
+            # it saves here
+            tbl = f.handle.read_row_groups(rgs, columns=cols, use_threads=False)
+            tbl = tbl.filter(pc.is_in(tbl["term"], value_set=wanted))
+            parts.append(tbl.append_column(
+                "shard", pa.array(np.full(tbl.num_rows, f.shard, dtype=np.int32))
+            ))
+        counters["files"] += len(parts)
+        if parts:
+            chains = codec.decode_postings(
+                pa.concat_tables(parts), self.docs_per_shard
+            )
+            for (t, shard), chain in chains.items():
+                out[t].append((shard, *chain))
         if self.cache is not None:
             for t in missing:
                 key = TtlLruCache.make_postings_key(prefix + t, self.snapshot)

@@ -42,6 +42,32 @@ def test_layout_and_stats(built, oracle):
     assert shards == [0, 1, 2, 3]  # 200 docs / 64 per shard
 
 
+def test_postings_file_layout(built, check_postings_layout):
+    """One term-sorted zstd file per shard (index/build.py:_write_postings)."""
+    assert sorted(check_postings_layout(built.paths.postings)) == [0, 1, 2, 3]
+
+
+def test_postings_row_groups_capped_and_pruned(spark, corpus_small, tmp_path,
+                                               check_postings_layout):
+    """One 200-doc shard with 4-doc blocks holds more rows than one row
+    group may: the build splits it into term-ordered row groups, and the
+    replica reads only the row group that holds a one-block term."""
+    from neural_search_spark.query.serve import IndexReader
+
+    idx = build_index(
+        corpus_small, str(tmp_path / "idx"),
+        layout=IndexLayout(docs_per_shard=256, block_size=4), n_buckets=8,
+    )
+    n_groups = check_postings_layout(idx.paths.postings)[0]
+    assert n_groups >= 2
+    reader = IndexReader(idx.paths.root)
+    rare = min(t for t, df in reader.df.items() if df == 1)
+    assert len(reader.query(rare)) == 1
+    assert reader.postings_read == {
+        "row_groups_read": 1, "row_groups_total": n_groups, "files": 1,
+    }
+
+
 def test_postings_roundtrip_vs_doc_terms(spark, built, corpus_small):
     """Decoding every posting block reproduces the logical (doc_id, term, tf)."""
     import numpy as np

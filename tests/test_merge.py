@@ -100,6 +100,14 @@ def test_b_posting_payloads_are_reused_verbatim(spark, merge_root):
             assert (r.term, r.block_id, bytes(r.deltas), bytes(r.tfs)) in m_payloads
 
 
+def test_merged_postings_keep_the_build_layout(merged_and_fresh, check_postings_layout):
+    """The merge writes postings through the build's ``_write_postings``:
+    one term-sorted zstd file per shard, B's shards relabeled after A's."""
+    merged, _ = merged_and_fresh
+    shards = check_postings_layout(merged.paths.postings)
+    assert sorted(shards) == list(range(len(shards)))
+
+
 def test_serving_reader_rank_identical_on_merged(spark, merged_and_fresh):
     from neural_search_spark.query.serve import IndexReader
 

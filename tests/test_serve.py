@@ -78,6 +78,7 @@ def test_reader_refresh_after_maintenance(spark, tmp_path):
     )
     reader = IndexReader(out_dir)
     assert reader.query("freshterm") == []
+    known = reader.query("w0005", top_k=200, positive_only=False)
 
     new_docs = spark.createDataFrame(
         [("zzz://new/1", "freshterm freshterm w0005")], "url string, text string"
@@ -85,9 +86,102 @@ def test_reader_refresh_after_maintenance(spark, tmp_path):
     add_documents(base.unionByName(new_docs), out_dir, new_docs)
     stale = reader.query("freshterm")  # pre-refresh dictionary: term unknown
     assert stale == []
+    # the commit rewrote shard 1 (new doc 120 holds w0005); before refresh()
+    # the reader still serves the old snapshot through its open files
+    assert reader.query("w0005", top_k=200, positive_only=False) == known
     reader.refresh()
     got = reader.query("freshterm", top_k=5)
     assert len(got) == 1 and got[0][0] == 120  # appended id after max(119)
+
+
+def test_reader_refresh_keeps_open_files_flat(served):
+    """refresh() closes the previous snapshot's posting files before it
+    opens the new ones: 20 refreshes leave the open-fd count unchanged."""
+    import os
+
+    _, base_reader = served
+    reader = IndexReader(base_reader.root)
+    held = [f.handle for f in reader._files]
+    before = len(os.listdir("/proc/self/fd"))
+    for _ in range(20):
+        reader.refresh()
+    assert len(os.listdir("/proc/self/fd")) == before
+    assert held and all(h.closed for h in held)
+    assert reader.query("w0005 w0010") == base_reader.query("w0005 w0010")
+    reader.close()
+    assert len(os.listdir("/proc/self/fd")) == before - len(held)
+
+
+def _rewrite_postings(src_root, dst_root, files_per_shard, row_group_size, shuffle):
+    """Copy an index, rewriting each shard's postings with pyarrow into
+    ``files_per_shard`` files of ``row_group_size``-row groups, rows either
+    shuffled (the unsorted layout of indexes written before the term sort)
+    or sorted by (term, block_id)."""
+    import glob
+    import os
+    import shutil
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    shutil.copytree(src_root, dst_root)
+    rng = np.random.default_rng(0)
+    for shard_dir in glob.glob(os.path.join(dst_root, "postings", "shard=*")):
+        files = glob.glob(os.path.join(shard_dir, "*.parquet"))
+        table = pq.read_table(files[0])
+        for f in files:
+            os.remove(f)
+        if shuffle:
+            table = table.take(rng.permutation(table.num_rows))
+        else:
+            table = table.sort_by([("term", "ascending"), ("block_id", "ascending")])
+        for i, part in enumerate(np.array_split(np.arange(table.num_rows), files_per_shard)):
+            pq.write_table(
+                table.take(part), os.path.join(shard_dir, f"part-{i}.parquet"),
+                row_group_size=row_group_size,
+            )
+
+
+def test_reader_legacy_unsorted_layout_answers_identically(served, tmp_path):
+    """An index whose postings are unsorted and split over several files per
+    shard still answers exactly as the term-sorted one; the row-group
+    directory only selects conservatively, so it reads more."""
+    _, reader = served
+    legacy = str(tmp_path / "legacy")
+    _rewrite_postings(reader.root, legacy, files_per_shard=3, row_group_size=100,
+                      shuffle=True)
+    old = IndexReader(legacy)
+    assert len(old._files) == 3 * len(reader._files)
+    for positive_only in (True, False):
+        for text in QUERIES:
+            assert old.query(text, top_k=12, positive_only=positive_only) == (
+                reader.query(text, top_k=12, positive_only=positive_only)
+            ), text
+
+
+def test_reader_reads_one_row_group_per_shard(served, tmp_path):
+    """On a term-sorted index a one-term query reads, in each shard holding
+    the term, only the row group that holds it (postings_read counters)."""
+    _, reader = served
+    sorted_root = str(tmp_path / "sorted")
+    _rewrite_postings(reader.root, sorted_root, files_per_shard=1, row_group_size=64,
+                      shuffle=False)
+    rd = IndexReader(sorted_root)
+    # a term with exactly one block in every shard, so no row-group boundary
+    # can split it
+    shards = sorted(f.shard for f in rd._files)
+    rows: dict = {}
+    for f in rd._files:
+        for t in f.handle.read(columns=["term"]).column("term").to_pylist():
+            rows.setdefault(t, []).append(f.shard)
+    term = min(t for t, sh in rows.items() if sorted(sh) == shards)
+    n_shards = len(shards)
+    total = sum(f.handle.metadata.num_row_groups for f in rd._files)
+    assert rd.query(term, top_k=50) == reader.query(term, top_k=50)
+    assert rd.postings_read == {
+        "row_groups_read": n_shards, "row_groups_total": total, "files": n_shards,
+    }
+    assert total > 5 * n_shards
 
 
 def test_reader_allowed_docs_filter(served):
@@ -592,6 +686,9 @@ def test_cli_serve_health_and_stats(served):
     assert stats["index"]["n_docs"] == 400
     assert stats["index"]["avgdl"] > 0
     assert stats["uptime_s"] >= 0
+    # the first query read posting row groups; the cached repeat read none
+    assert stats["postings"]["files"] > 0
+    assert 0 < stats["postings"]["row_groups_read"] <= stats["postings"]["row_groups_total"]
 
 
 def test_cli_serve_health_exempt_from_rate_limit(served):
