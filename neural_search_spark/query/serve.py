@@ -1090,17 +1090,24 @@ class IndexReader:
 
         # accumulate per-shard dense score arrays (shards touched by >=1
         # term); iteration order is sorted (term, shard) — deterministic and
-        # independent of which terms came from the cache
+        # independent of which terms came from the cache. Each array stops at
+        # the highest local doc id the query's postings reach in that shard,
+        # so the memory a request zeroes and scans follows its postings, not
+        # the docs_per_shard span (576 KB per shard at the default layout)
+        width: dict[int, int] = {}
+        for term in qterms:
+            for shard, ids, _ in postings[term]:
+                if ids.size:
+                    top = int(ids.max()) - shard * span + 1
+                    width[shard] = max(width.get(shard, 0), top)
         acc: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         for term in sorted(qterms):
             qtf, idf = qterms[term]
             for shard, ids, tfs in postings[term]:
                 st = self._shard_state(shard)
                 if shard not in acc:
-                    acc[shard] = (
-                        np.zeros(span, dtype=np.float64),
-                        np.zeros(span, dtype=bool),
-                    )
+                    n = width.get(shard, 0)
+                    acc[shard] = (np.zeros(n, dtype=np.float64), np.zeros(n, dtype=bool))
                 scores, touched = acc[shard]
                 loc = ids - shard * span
                 scores[loc] += codec.bm25_term_bound(
