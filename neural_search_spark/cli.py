@@ -616,7 +616,8 @@ def cmd_serve(args) -> int:
                 "cache": cs,
                 "postings": {
                     k: sum(r.postings_read[k] for r in readers)
-                    for k in ("row_groups_read", "row_groups_total", "files")
+                    for k in ("row_groups_read", "row_group_hits", "row_groups_total",
+                              "files", "row_group_cache_bytes")
                 },
                 "index": {
                     k: srow[k] for k in ("n_docs", "avgdl", "k1", "b") if k in srow
@@ -1111,7 +1112,11 @@ def main(argv: list[str] | None = None) -> int:
     sv.add_argument("--index", required=True)
     sv.add_argument("--top-k", type=int, default=10)
     sv.add_argument("--match-all", action="store_true")
-    sv.add_argument("--cache-entries", type=int, default=4096, help="0 disables caching")
+    sv.add_argument(
+        "--cache-entries", type=int, default=4096,
+        help="0 disables the result and per-term posting caches (not the "
+        "bounded cache of decompressed posting row groups)",
+    )
     sv.add_argument("--cache-ttl", type=float, default=3600.0)
     # reference config declares 100 req / 60 s (config.py:51-52) but never
     # enforces it (no-op middleware); 0 keeps the reference's effective

@@ -15,10 +15,16 @@ the API but leaves it disabled in the search path
     commit followed by ``refresh()`` invalidates logically and immediately —
     the reference's TTL-only design would serve stale results for up to
     ``ttl`` seconds after an upsert.
-  * **two cacheable granularities.** Besides whole search results (the
+  * **three cacheable granularities.** Besides whole search results (the
     reference's unit), the reader caches decoded per-term posting arrays —
     hot query *terms* are far more repetitive than whole query strings, and
-    a term hit skips both the parquet read and the varint decode.
+    a term hit skips both the parquet read and the varint decode. Below
+    both, ``IndexReader`` itself keeps decompressed posting row groups in a
+    byte-bounded LRU (``serve.POSTINGS_ROW_GROUP_CACHE_BYTES``, not this
+    class): a cold term whose row group an earlier query read skips the
+    parquet read and decompression and pays only the decode. That cache is
+    always on and is emptied by ``refresh()``, since its keys name the
+    snapshot's open files.
 """
 
 from __future__ import annotations

@@ -19,16 +19,21 @@ Deployment shape at scale:
     durable lives in the index files, so restart = reopen, and maintenance
     commits (index/maintenance.py) are picked up with ``refresh()``;
   * the term dictionary (term -> idf, vocabulary-sized) and corpus stats are
-    cached in memory; per-shard doc_len arrays are loaded on first touch and
-    cached (docs_per_shard x 4 bytes — bounded, shard-granular);
-  * posting bytes are fetched on demand; hot terms ride the OS page cache /
-    object-store CDN. The build writes one term-sorted file per shard, so a
-    query reads about one row group per query term per shard (more only
-    for a term whose blocks span row groups), never a full scan; the
-    latency is read + decode + score of those row groups. On an index
-    written before the term sort (several unsorted files per shard) most
-    row groups span most terms: answers stay the same, but the read
-    degrades to a scan of the postings;
+    cached in memory; per-shard doc_len arrays are loaded on first touch,
+    through the docmap files ``refresh()`` opened, and cached
+    (docs_per_shard x 8 bytes — bounded, shard-granular);
+  * posting bytes are fetched on demand, a posting row group at a time. The
+    build writes one term-sorted file per shard, so a query needs about one
+    row group per query term per shard (more only for a term whose blocks
+    span row groups), never a full scan. A row group read from a file is
+    decompressed once and kept, with a sorted index of its terms, in a
+    bounded LRU (``POSTINGS_ROW_GROUP_CACHE_BYTES`` of Arrow bytes, the
+    storage engine's block cache): a later query for any term of that group
+    reads no file, and only the decode and score of its blocks remain. The
+    cache belongs to the snapshot: ``refresh()`` and ``close()`` empty it.
+    On an index written before the term sort (several unsorted files per
+    shard) most row groups span most terms: answers stay the same, but the
+    first reads degrade to a scan of the postings;
   * optionally, a ``TtlLruCache`` (query/cache.py, the reference's
     ``utils/cache.py`` analog) caches decoded per-term posting arrays and
     whole search results, keyed by the index snapshot token so a maintenance
@@ -42,6 +47,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -50,6 +56,12 @@ from ..config import MAX_TOP_K
 from ..functions.tokenize import _TOKEN_RE, tokenize_py
 from ..index import codec
 from .cache import TtlLruCache
+
+# Memory budget of the replica's decompressed posting row groups
+# (``IndexReader._read_chains``), in Arrow bytes plus the groups' term
+# indexes. The newest group is always kept, so the cache can exceed the
+# budget by at most one row group.
+POSTINGS_ROW_GROUP_CACHE_BYTES = 64 << 20
 
 
 def round_half_up(values: np.ndarray, digits: int) -> np.ndarray:
@@ -98,6 +110,37 @@ class _PostingFile:
 
 
 @dataclass
+class _RowGroup:
+    """One decompressed posting row group, rows in term order, plus its
+    term column as UTF-8 bytes (numpy ``S``: compact, and ordered like the
+    parquet term statistics), so a term's rows are one ``searchsorted``
+    range."""
+
+    table: object  # pyarrow.Table
+    terms: np.ndarray
+    nbytes: int
+
+    @classmethod
+    def of(cls, table) -> "_RowGroup":
+        import pyarrow as pa
+
+        terms = np.asarray(
+            table.column("term").cast(pa.binary()).to_numpy(), dtype="S"
+        )
+        # the build writes term-sorted groups; an index written before the
+        # term sort has unsorted ones, and this one permutation covers both
+        order = np.argsort(terms, kind="stable")
+        table, terms = table.take(order), terms[order]
+        return cls(table, terms, table.nbytes + terms.nbytes)
+
+    def rows_of(self, needles: np.ndarray) -> list:
+        """Table slices holding the rows of each term in ``needles``."""
+        lo = np.searchsorted(self.terms, needles, "left").tolist()
+        hi = np.searchsorted(self.terms, needles, "right").tolist()
+        return [self.table.slice(a, b - a) for a, b in zip(lo, hi) if b > a]
+
+
+@dataclass
 class IndexReader:
     root: str
     cache: TtlLruCache | None = None
@@ -119,8 +162,14 @@ class IndexReader:
     _rg_min: np.ndarray = field(init=False, default=None)
     _rg_max: np.ndarray = field(init=False, default=None)
     _rg_nostats: np.ndarray = field(init=False, default=None)
+    # decompressed row groups, (file index, row group, positional) ->
+    # _RowGroup in LRU order; emptied with the files it was read from
+    _rg_cache: OrderedDict = field(init=False, default_factory=OrderedDict)
+    # the snapshot's docmap files, shard -> [ParquetFile]
+    _docmap: dict = field(init=False, default_factory=dict)
     postings_read: dict = field(init=False, default_factory=lambda: {
-        "row_groups_read": 0, "row_groups_total": 0, "files": 0})
+        "row_groups_read": 0, "row_group_hits": 0, "row_groups_total": 0,
+        "files": 0, "row_group_cache_bytes": 0})
 
     def __post_init__(self) -> None:
         self.refresh()
@@ -129,7 +178,8 @@ class IndexReader:
 
     def refresh(self) -> None:
         """(Re)load stats + term dictionary + posting row-group directory;
-        drop cached shard state and close the previous snapshot's files.
+        drop cached shard state and row groups and close the previous
+        snapshot's files.
 
         Call after a maintenance commit to serve the new snapshot. The
         snapshot token (md5 of the checkpoint manifest, whose atomic rename
@@ -150,33 +200,39 @@ class IndexReader:
         terms = pq.read_table(
             os.path.join(self.root, "term_stats"), columns=["term", "df", "idf"]
         )
-        self.idf = dict(
-            zip(terms.column("term").to_pylist(), terms.column("idf").to_pylist())
-        )
-        self.df = dict(
-            zip(terms.column("term").to_pylist(), terms.column("df").to_pylist())
-        )
+        # one key list for both dicts: each vocabulary string exists once
+        keys = terms.column("term").to_pylist()
+        self.idf = dict(zip(keys, terms.column("idf").to_pylist()))
+        self.df = dict(zip(keys, terms.column("df").to_pylist()))
         self._shards = {}
         self._suggest_index = None
-        self._open_postings()
+        self._open_snapshot()
 
-    def _open_postings(self) -> None:
-        """Close the previous snapshot's posting files, then open every
-        ``postings/shard=K/*.parquet`` once and record each row group's
-        ``term`` min/max from its footer. Queries read through these
-        handles until the next ``refresh()``, so a maintenance commit that
-        replaces shard files cannot mix into the snapshot being served."""
+    def _shard_files(self, kind: str):
+        """(shard, ParquetFile) for every ``<kind>/shard=K/*.parquet``."""
         import glob
 
         import pyarrow.parquet as pq
 
-        self.close()
-        self._files = []
-        rg_file, rg_index, lo, hi, nostats = [], [], [], [], []
-        pattern = os.path.join(self.root, "postings", "shard=*", "*.parquet")
+        pattern = os.path.join(self.root, kind, "shard=*", "*.parquet")
         for path in sorted(glob.glob(pattern)):
             shard = int(os.path.basename(os.path.dirname(path))[len("shard="):])
-            pf = pq.ParquetFile(path)
+            yield shard, pq.ParquetFile(path)
+
+    def _open_snapshot(self) -> None:
+        """Close the previous snapshot's files and empty its row-group
+        cache, then open every ``postings/shard=K/*.parquet`` and
+        ``docmap/shard=K/*.parquet`` once and record each posting row
+        group's ``term`` min/max from its footer. Queries read through these
+        handles until the next ``refresh()``, so a maintenance commit that
+        replaces shard files cannot mix into the snapshot being served."""
+        self.close()
+        self._files = []
+        self._docmap = {}
+        for shard, pf in self._shard_files("docmap"):
+            self._docmap.setdefault(shard, []).append(pf)
+        rg_file, rg_index, lo, hi, nostats = [], [], [], [], []
+        for shard, pf in self._shard_files("postings"):
             md = pf.metadata
             col = md.schema.names.index("term")
             for i in range(md.num_row_groups):
@@ -195,20 +251,34 @@ class IndexReader:
         self._rg_nostats = np.array(nostats, dtype=bool)
 
     def close(self) -> None:
-        """Close the snapshot's posting files. Queries that need postings
-        fail until the next ``refresh()`` reopens them."""
+        """Close the snapshot's posting and docmap files and empty the
+        row-group cache. Queries that need postings fail until the next
+        ``refresh()`` reopens them."""
         for f in self._files:
             f.handle.close()
+        for files in self._docmap.values():
+            for pf in files:
+                pf.close()
+        self._rg_cache.clear()
+        self.postings_read["row_group_cache_bytes"] = 0
+
+    def _docmap_table(self, shard: int, columns: list[str]):
+        """The snapshot's docmap rows of one shard (None for a shard the
+        docmap does not hold), read through the handles ``refresh()``
+        opened."""
+        import pyarrow as pa
+
+        files = self._docmap.get(shard)
+        if not files:
+            return None
+        return pa.concat_tables(
+            [pf.read(columns=columns, use_threads=False) for pf in files]
+        )
 
     def _shard_state(self, shard: int) -> _ShardState:
-        import pyarrow.parquet as pq
-
         st = self._shards.get(shard)
         if st is None:
-            t = pq.read_table(
-                os.path.join(self.root, "docmap", f"shard={shard}"),
-                columns=["doc_id", "doc_len"],
-            )
+            t = self._docmap_table(shard, ["doc_id", "doc_len"])
             dl = np.zeros(self.docs_per_shard, dtype=np.float64)
             local = np.asarray(t.column("doc_id"), dtype=np.int64) - shard * self.docs_per_shard
             dl[local] = np.asarray(t.column("doc_len"), dtype=np.float64)
@@ -222,8 +292,6 @@ class IndexReader:
         cached dense per-shard host arrays from the docmap."""
         import re
 
-        import pyarrow.parquet as pq
-
         from ..functions.urls import RE_HOST
 
         host_re = re.compile(RE_HOST)
@@ -232,10 +300,7 @@ class IndexReader:
         for shard in np.unique(ids // span):
             st = self._shard_state(int(shard))
             if st.host is None:
-                t = pq.read_table(
-                    os.path.join(self.root, "docmap", f"shard={int(shard)}"),
-                    columns=["doc_id", "url"],
-                )
+                t = self._docmap_table(int(shard), ["doc_id", "url"])
                 dense = np.full(span, "", dtype=object)
                 local = (
                     np.asarray(t.column("doc_id"), dtype=np.int64) - shard * span
@@ -272,14 +337,17 @@ class IndexReader:
         ``_positions_for`` ("pos:", which also reads positions): cached
         terms skip the read and the decode. For the rest, the row-group
         directory picks the row groups whose [term min, term max] covers a
-        missing term; only those are read from the snapshot's open files,
-        filtered to the missing terms, labelled with their shard and decoded
-        together by ``codec.decode_postings``. The selection is conservative
-        for any row order, so an unsorted index answers the same, only
-        reading more row groups. ``postings_read`` counts row groups read,
-        row groups in the directory, and files read."""
+        missing term. Each picked group comes from the row-group cache or,
+        on a miss, is read once from the snapshot's open file and cached
+        (``_read_row_group``); the missing terms' rows are cut from it,
+        labelled with their shard and decoded together by
+        ``codec.decode_postings``.
+        The selection is conservative for any row order, so an unsorted
+        index answers the same, only reading more row groups.
+        ``postings_read`` counts row groups read from files, row groups
+        served from the cache, row groups in the directory and files read,
+        and holds the cache's current bytes."""
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         out: dict = {}
         missing: list[str] = []
@@ -302,27 +370,25 @@ class IndexReader:
         hit = self._rg_nostats | (
             (want[first] >= self._rg_min) & (want[first] <= self._rg_max)
         )
-        counters = self.postings_read
-        counters["row_groups_total"] += int(hit.size)
-        counters["row_groups_read"] += int(hit.sum())
-        cols = ["term", "block_id", "n_docs", "deltas", "tfs"] + (
-            ["positions"] if prefix else []
-        )
-        by_file: dict[int, list[int]] = {}
-        for fi, rg in zip(self._rg_file[hit].tolist(), self._rg_index[hit].tolist()):
-            by_file.setdefault(fi, []).append(rg)
-        wanted = pa.array(want)
+        self.postings_read["row_groups_total"] += int(hit.size)
+        needles = np.array([t.encode() for t in want.tolist()], dtype="S")
+        files_read: set[int] = set()
         parts = []
-        for fi, rgs in by_file.items():
-            f = self._files[fi]
-            # a few small row groups: pyarrow's thread pool costs more than
-            # it saves here
-            tbl = f.handle.read_row_groups(rgs, columns=cols, use_threads=False)
-            tbl = tbl.filter(pc.is_in(tbl["term"], value_set=wanted))
-            parts.append(tbl.append_column(
-                "shard", pa.array(np.full(tbl.num_rows, f.shard, dtype=np.int32))
-            ))
-        counters["files"] += len(parts)
+        for fi, rg in zip(self._rg_file[hit].tolist(), self._rg_index[hit].tolist()):
+            key = (fi, rg, bool(prefix))
+            group = self._rg_cache.get(key)
+            if group is None:
+                group = self._read_row_group(key)
+                files_read.add(fi)
+            else:
+                self._rg_cache.move_to_end(key)
+                self.postings_read["row_group_hits"] += 1
+            shard = self._files[fi].shard
+            for part in group.rows_of(needles):
+                parts.append(part.append_column(
+                    "shard", pa.array(np.full(part.num_rows, shard, dtype=np.int32))
+                ))
+        self.postings_read["files"] += len(files_read)
         if parts:
             chains = codec.decode_postings(
                 pa.concat_tables(parts), self.docs_per_shard
@@ -334,6 +400,30 @@ class IndexReader:
                 key = TtlLruCache.make_postings_key(prefix + t, self.snapshot)
                 self.cache.set(key, out[t])
         return out
+
+    def _read_row_group(self, key: tuple[int, int, bool]) -> _RowGroup:
+        """Read, decompress and cache row group ``rg`` of posting file
+        ``fi`` (``key = (fi, rg, positional)``; a positional read also holds
+        the positions column, so it is cached under its own key). Least
+        recently used groups are evicted while the cache holds more than
+        ``POSTINGS_ROW_GROUP_CACHE_BYTES`` and more than this group."""
+        fi, rg, positional = key
+        cols = ["term", "block_id", "n_docs", "deltas", "tfs"] + (
+            ["positions"] if positional else []
+        )
+        # one small row group: pyarrow's thread pool costs more than it
+        # saves here
+        group = _RowGroup.of(
+            self._files[fi].handle.read_row_group(rg, columns=cols, use_threads=False)
+        )
+        counters, cache = self.postings_read, self._rg_cache
+        counters["row_groups_read"] += 1
+        cache[key] = group
+        held = counters["row_group_cache_bytes"] + group.nbytes
+        while held > POSTINGS_ROW_GROUP_CACHE_BYTES and len(cache) > 1:
+            held -= cache.popitem(last=False)[1].nbytes
+        counters["row_group_cache_bytes"] = held
+        return group
 
     def query_phrase(self, text: str, top_k: int = 10) -> list[tuple[int, int]]:
         """[(doc_id, phrase_tf)] — exact-phrase retrieval from the positional
@@ -465,15 +555,15 @@ class IndexReader:
         """The ES ``_termvectors`` analog: a document's terms with tf (and,
         on a positional index, 1-based positions) recovered from the index
         alone — the posting blocks are lossless, so no document store is
-        needed. Reads exactly one shard's posting files (the doc's shard
-        directory) and decodes only blocks whose [first_doc_id,
-        last_doc_id] range covers the doc.
+        needed. Reads exactly one shard's posting files (the doc's shard,
+        through the snapshot's open handles) and decodes only blocks whose
+        [first_doc_id, last_doc_id] range covers the doc.
 
         Returns {"doc_id", "doc_len", "terms": {term: tf | [positions]}};
         unknown doc_ids return an empty terms dict.
         """
+        import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         from ..index.codec import decode_ints, decode_position_lists
 
@@ -483,16 +573,15 @@ class IndexReader:
             )
         span = self.docs_per_shard
         shard = int(doc_id) // span
-        shard_dir = os.path.join(self.root, "postings", f"shard={shard}")
-        if not os.path.isdir(shard_dir):
+        files = [f.handle for f in self._files if f.shard == shard]
+        if not files:
             return {"doc_id": int(doc_id), "doc_len": 0, "terms": {}}
         cols = ["term", "block_id", "first_doc_id", "last_doc_id", "n_docs",
                 "deltas", "tfs"] + (["positions"] if positions else [])
-        table = pq.read_table(
-            shard_dir,
-            columns=cols,
-            filters=(pc.field("first_doc_id") <= doc_id)
-            & (pc.field("last_doc_id") >= doc_id),
+        table = pa.concat_tables(
+            [pf.read(columns=cols, use_threads=False) for pf in files]
+        ).filter(
+            (pc.field("first_doc_id") <= doc_id) & (pc.field("last_doc_id") >= doc_id)
         )
         terms: dict = {}
         for blk in table.to_pylist():
@@ -681,10 +770,9 @@ class IndexReader:
         span = self.docs_per_shard
         urls: dict[int, str] = {}
         for s in sorted({d // span for d in doc_ids if d >= 0}):
-            shard_dir = os.path.join(self.root, "docmap", f"shard={s}")
-            if not os.path.isdir(shard_dir):
+            t = self._docmap_table(s, ["doc_id", "url"])
+            if t is None:
                 continue  # unknown ids resolve to no doc, not an error
-            t = pq.read_table(shard_dir, columns=["doc_id", "url"])
             m = dict(
                 zip(t.column("doc_id").to_pylist(), t.column("url").to_pylist())
             )
@@ -1033,12 +1121,7 @@ class IndexReader:
         import time
 
         t0 = time.perf_counter()
-        docmap_dir = os.path.join(self.root, "docmap")
-        shards = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(docmap_dir)
-            if d.startswith("shard=")
-        )
+        shards = sorted(self._docmap)
         for s in shards:
             self._shard_state(s)
         posting_bytes = 0

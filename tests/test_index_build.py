@@ -64,7 +64,9 @@ def test_postings_row_groups_capped_and_pruned(spark, corpus_small, tmp_path,
     rare = min(t for t, df in reader.df.items() if df == 1)
     assert len(reader.query(rare)) == 1
     assert reader.postings_read == {
-        "row_groups_read": 1, "row_groups_total": n_groups, "files": 1,
+        "row_groups_read": 1, "row_group_hits": 0, "row_groups_total": n_groups,
+        "files": 1,
+        "row_group_cache_bytes": sum(g.nbytes for g in reader._rg_cache.values()),
     }
 
 

@@ -79,6 +79,9 @@ def test_reader_refresh_after_maintenance(spark, tmp_path):
     reader = IndexReader(out_dir)
     assert reader.query("freshterm") == []
     known = reader.query("w0005", top_k=200, positive_only=False)
+    # doc 120 does not exist yet; d is an old shard-1 doc holding w0005
+    d = min(doc for doc, _ in known if doc >= 64)
+    explained = {doc: reader.explain("w0005", doc) for doc in (d, 120)}
 
     new_docs = spark.createDataFrame(
         [("zzz://new/1", "freshterm freshterm w0005")], "url string, text string"
@@ -89,9 +92,16 @@ def test_reader_refresh_after_maintenance(spark, tmp_path):
     # the commit rewrote shard 1 (new doc 120 holds w0005); before refresh()
     # the reader still serves the old snapshot through its open files
     assert reader.query("w0005", top_k=200, positive_only=False) == known
+    # explain reads postings and docmap through the same snapshot handles
+    for doc, before in explained.items():
+        assert reader.explain("w0005", doc) == before, doc
     reader.refresh()
     got = reader.query("freshterm", top_k=5)
     assert len(got) == 1 and got[0][0] == 120  # appended id after max(119)
+    # refresh() dropped the old snapshot's cached row groups, so the new
+    # shard-1 postings are read
+    assert 120 in [doc for doc, _ in reader.query("w0005", top_k=200,
+                                                  positive_only=False)]
 
 
 def test_reader_refresh_keeps_open_files_flat(served):
@@ -101,7 +111,9 @@ def test_reader_refresh_keeps_open_files_flat(served):
 
     _, base_reader = served
     reader = IndexReader(base_reader.root)
-    held = [f.handle for f in reader._files]
+    held = [f.handle for f in reader._files] + [
+        pf for files in reader._docmap.values() for pf in files
+    ]
     before = len(os.listdir("/proc/self/fd"))
     for _ in range(20):
         reader.refresh()
@@ -152,11 +164,17 @@ def test_reader_legacy_unsorted_layout_answers_identically(served, tmp_path):
                       shuffle=True)
     old = IndexReader(legacy)
     assert len(old._files) == 3 * len(reader._files)
-    for positive_only in (True, False):
-        for text in QUERIES:
-            assert old.query(text, top_k=12, positive_only=positive_only) == (
-                reader.query(text, top_k=12, positive_only=positive_only)
-            ), text
+    # the second pass is served from the cached, unsorted row groups
+    reads = []
+    for _ in range(2):
+        for positive_only in (True, False):
+            for text in QUERIES:
+                assert old.query(text, top_k=12, positive_only=positive_only) == (
+                    reader.query(text, top_k=12, positive_only=positive_only)
+                ), text
+        reads.append(dict(old.postings_read))
+    assert reads[1]["row_groups_read"] == reads[0]["row_groups_read"]
+    assert reads[1]["row_group_hits"] > reads[0]["row_group_hits"]
 
 
 def test_reader_reads_one_row_group_per_shard(served, tmp_path):
@@ -179,9 +197,56 @@ def test_reader_reads_one_row_group_per_shard(served, tmp_path):
     total = sum(f.handle.metadata.num_row_groups for f in rd._files)
     assert rd.query(term, top_k=50) == reader.query(term, top_k=50)
     assert rd.postings_read == {
-        "row_groups_read": n_shards, "row_groups_total": total, "files": n_shards,
+        "row_groups_read": n_shards, "row_group_hits": 0, "row_groups_total": total,
+        "files": n_shards,
+        "row_group_cache_bytes": sum(g.nbytes for g in rd._rg_cache.values()),
     }
     assert total > 5 * n_shards
+
+
+def test_reader_row_group_cache_serves_later_terms(served):
+    """A query whose terms sit in row groups an earlier query read reads no
+    file: the groups come from the row-group cache (one group per shard
+    here, and w0001 occurs in every shard)."""
+    _, reader = served
+    rd = IndexReader(reader.root)
+    assert rd.query("w0001") == reader.query("w0001")
+    read = dict(rd.postings_read)
+    assert read["row_groups_read"] == read["files"] == len(rd._files)
+    assert read["row_group_cache_bytes"] > 0
+    assert rd.query("w0002 w0007") == reader.query("w0002 w0007")
+    assert rd.postings_read["row_groups_read"] == read["row_groups_read"]
+    assert rd.postings_read["files"] == read["files"]
+    assert rd.postings_read["row_group_hits"] > read["row_group_hits"]
+    rd.close()
+    assert not rd._rg_cache and rd.postings_read["row_group_cache_bytes"] == 0
+
+
+def test_reader_row_group_cache_bounded(served, tmp_path, monkeypatch):
+    """With a budget of one row group, every query answers as an uncached
+    reader does, and after each read the cache holds at most the budget or
+    a single group."""
+    from neural_search_spark.query import serve
+
+    _, reader = served
+    sorted_root = str(tmp_path / "sorted")
+    _rewrite_postings(reader.root, sorted_root, files_per_shard=1, row_group_size=64,
+                      shuffle=False)
+    probe = IndexReader(sorted_root)
+    probe.query("w0001")
+    budget = next(iter(probe._rg_cache.values())).nbytes
+    monkeypatch.setattr(serve, "POSTINGS_ROW_GROUP_CACHE_BYTES", budget)
+    rd = IndexReader(sorted_root)
+    for positive_only in (True, False):
+        for text in QUERIES:
+            assert rd.query(text, top_k=12, positive_only=positive_only) == (
+                reader.query(text, top_k=12, positive_only=positive_only)
+            ), text
+            held = rd.postings_read["row_group_cache_bytes"]
+            assert held == sum(g.nbytes for g in rd._rg_cache.values())
+            assert held <= budget or len(rd._rg_cache) == 1
+    # groups were evicted and read again
+    assert rd.postings_read["row_groups_read"] > len(rd._rg_cache) + 1
 
 
 def test_reader_allowed_docs_filter(served):
@@ -563,6 +628,14 @@ def test_reader_phrase_and_near_on_positional_index(spark, tmp_path_factory):
     assert got_nr == want_nr
     assert (1, 2) in got_nr and (0, 2) in got_nr and (2, 5) in got_nr
 
+    # a flat read of the same row groups is cached without positions;
+    # phrase and NEAR still read and decode the positions
+    warm = IndexReader(out)
+    warm.query("alpha beta", top_k=10)
+    assert warm._rg_cache and not any(pos for _, _, pos in warm._rg_cache)
+    assert warm.query_phrase("alpha beta", top_k=10) == got_ph
+    assert warm.query_near("alpha beta", max_span=5, top_k=10) == got_nr
+
     # non-positional index refuses with a clear error
     flat_out = str(root / "flat")
     build_index(
@@ -689,6 +762,9 @@ def test_cli_serve_health_and_stats(served):
     # the first query read posting row groups; the cached repeat read none
     assert stats["postings"]["files"] > 0
     assert 0 < stats["postings"]["row_groups_read"] <= stats["postings"]["row_groups_total"]
+    # the read row groups stay decompressed in the replica
+    assert stats["postings"]["row_group_hits"] == 0
+    assert stats["postings"]["row_group_cache_bytes"] > 0
 
 
 def test_cli_serve_health_exempt_from_rate_limit(served):
