@@ -30,6 +30,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+import time
 
 
 def _spark(app: str):
@@ -48,8 +49,19 @@ from .config import MAX_TOP_K
 BATCH_MAX = 100
 
 
+def _number(value, name: str, cast=int):
+    """``cast(value)`` for request field ``name``. A value the cast refuses
+    (null, a list, text) or cannot hold (``1e400`` as an int, a 400-digit
+    int as a float) is a ValueError that names the field."""
+    try:
+        return cast(value)
+    except (TypeError, ValueError, OverflowError):
+        kind = "an integer" if cast is int else "a number"
+        raise ValueError(f"{name} must be {kind}, got {value!r}") from None
+
+
 def _req_top_k(req: dict, default: int) -> int:
-    k = int(req.get("top_k", default))
+    k = _number(req.get("top_k", default), "top_k")
     if not 1 <= k <= MAX_TOP_K:
         raise ValueError(f"top_k must be in [1, {MAX_TOP_K}], got {k}")
     return k
@@ -495,468 +507,393 @@ def cmd_stats(args) -> int:
     return 0
 
 
+# -- serve: the replica's request protocol ------------------------------------
+#
+# A request line is parsed once (``_parse``) into (kind, request) and
+# answered by the kind's handler in ``_HANDLERS``; ``_dispatch`` wraps every
+# handler with the rate limiter, the multi-partition capability check, the
+# error replies and the per-kind counts. Each handler takes the replica
+# state ``s`` (built by ``cmd_serve``) and the request object, and returns
+# the reply object.
+
+
+def _hits(pairs) -> list:
+    return [{"doc_id": d, "score": s} for d, s in pairs]
+
+
+def _snapshot(s) -> str:
+    # a multi-partition replica has no single snapshot token
+    return "" if s.multi else s.reader.snapshot
+
+
+def _serve_refresh(s, req) -> dict:
+    # picks up a maintenance commit (the analog of the reference
+    # re-opening its store)
+    s.reader.refresh()
+    return {"refreshed": True, "snapshot": _snapshot(s)}
+
+
+def _serve_health(s, req) -> dict:
+    # the reference's GET /health (main.py:129-151): liveness plus what this
+    # replica has loaded; never an error
+    from . import __version__
+
+    out = {
+        "status": "healthy",
+        "version": __version__,
+        "snapshot": _snapshot(s),
+        "mode": "multi" if s.multi else "single",
+        "n_terms": len(s.reader.idf),
+    }
+    if not s.multi:
+        out["n_docs"] = int(s.reader.stats["n_docs"])
+    return out
+
+
+def _serve_stats(s, req) -> dict:
+    # the reference's GET /metrics (main.py:156-163) as one JSON line:
+    # request counters, per-kind counts, cache hit rates (null when the
+    # replica has no cache), posting row groups read vs in the directory, and
+    # the loaded index's corpus stats (global ones on a multi-partition
+    # replica)
+    cs = None
+    if s.cache is not None:
+        st = s.cache.stats
+        tot = st.hits + st.misses
+        cs = {
+            "hits": st.hits,
+            "misses": st.misses,
+            "hit_rate": round(st.hits / tot, 4) if tot else 0.0,
+            "evictions": st.evictions,
+            "expirations": st.expirations,
+            "entries": s.cache.live_entries(),
+        }
+    r = s.reader
+    parts = r.readers if s.multi else [r]
+    srow = {**parts[0].stats, "n_docs": r.n_docs, "avgdl": r.avgdl} if s.multi else r.stats
+    return {
+        "snapshot": _snapshot(s),
+        "uptime_s": round(time.time() - s.t_up, 3),
+        "requests": {
+            **s.counters,
+            "search_ms_total": round(s.counters["search_ms_total"], 3),
+        },
+        "cache": cs,
+        "postings": {
+            k: sum(p.postings_read[k] for p in parts)
+            for k in ("row_groups_read", "row_group_hits", "row_groups_total",
+                      "files", "row_group_cache_bytes")
+        },
+        "index": {k: srow[k] for k in ("n_docs", "avgdl", "k1", "b")},
+        "n_terms": len(r.idf),
+        # the live counts, serialized after _dispatch has counted this
+        # request too (as "requests" has)
+        "kinds": s.kinds,
+    }
+
+
+def _serve_phrase(s, req) -> dict:
+    # {"phrase": str, "top_k"?: int}: exact-phrase retrieval from a
+    # positional index
+    ph = s.reader.query_phrase(req["phrase"], top_k=_req_top_k(req, s.args.top_k))
+    return {"phrase": req["phrase"],
+            "hits": [{"doc_id": d, "phrase_tf": tf} for d, tf in ph]}
+
+
+def _serve_near(s, req) -> dict:
+    # {"near": str, "span": int, "top_k"?: int, "ordered"?: bool}: proximity
+    # from a positional index; ordered=true requires the terms in query
+    # order (SpanNear inOrder)
+    nh = s.reader.query_near(
+        req["near"], max_span=_number(req["span"], "span"),
+        top_k=_req_top_k(req, s.args.top_k), ordered=bool(req.get("ordered")),
+    )
+    return {"near": req["near"],
+            "hits": [{"doc_id": d, "min_window": w} for d, w in nh]}
+
+
+def _serve_mget(s, req) -> dict:
+    # {"mget": [doc_id, ...]}: the ES _mget analog, through the hydration
+    # path (needs --corpus); unknown ids are absent
+    ids = req["mget"]
+    if not isinstance(ids, list):
+        raise ValueError("mget must be a list of doc ids")
+    docs = s.reader.hydrate([_number(d, "mget") for d in ids])
+    return {"docs": [{"doc_id": d, **rec} for d, rec in sorted(docs.items())]}
+
+
+def _serve_termvectors(s, req) -> dict:
+    # {"termvectors": doc_id, "positions"?: bool}: the ES _termvectors
+    # analog, recovered from the lossless index
+    return s.reader.term_vector(
+        _number(req["termvectors"], "termvectors"),
+        positions=bool(req.get("positions")),
+    )
+
+
+def _serve_dsl(s, req) -> dict:
+    # {"dsl": {<search_dsl request>}}: the cluster DSL's replica-servable
+    # subset (match/bool/match_phrase/prefix/wildcard/more_like_this);
+    # cluster-only forms answer a routing error
+    if not isinstance(req["dsl"], dict):
+        raise ValueError("dsl must be a JSON object")
+    return {"hits": _hits(s.reader.query_dsl(req["dsl"], positive_only=not s.args.match_all))}
+
+
+def _serve_explain(s, req) -> dict:
+    # {"explain": "<query text>", "doc_id": id}: the ES _explain analog, the
+    # per-term score breakdown of one (query, doc) pair
+    return s.reader.explain(str(req["explain"]), _number(req["doc_id"], "doc_id"))
+
+
+def _serve_percolate(s, req) -> dict:
+    # {"percolate": "<doc text>"}: the ES single-doc percolate API, which
+    # saved searches (serve --percolate-queries FILE.jsonl) match this doc
+    if s.matcher is None:
+        raise ValueError("no --percolate-queries configured")
+    return {"matches": s.matcher.match(str(req["percolate"]))}
+
+
+def _serve_more_like_this(s, req) -> dict:
+    # {"more_like_this": doc_id, "m"?: int, "top_k"?: int}: docs similar to
+    # an indexed doc (Lucene MLT), its term vector read from the index
+    doc_id = _number(req["more_like_this"], "more_like_this")
+    hits = s.reader.more_like_this(
+        doc_id, m=_number(req.get("m", 10), "m"),
+        top_k=_req_top_k(req, s.args.top_k), positive_only=not s.args.match_all,
+    )
+    return {"more_like_this": doc_id, "hits": _hits(hits)}
+
+
+def _serve_suggest(s, req) -> dict:
+    # {"suggest": str, "n"?: int}: fuzzy vocabulary suggestion ("did you
+    # mean") -> [(term, distance, df)]
+    sug = s.reader.suggest(req["suggest"], n=_number(req.get("n", 3), "n"))
+    return {"suggest": req["suggest"],
+            "suggestions": [{"term": t, "distance": d, "df": df} for t, d, df in sug]}
+
+
+def _serve_queries(s, req) -> dict:
+    # {"queries": [str, ...], "top_k"?: int}: the reference's POST
+    # /search/batch (api/search.py:89-98), up to BATCH_MAX queries on one
+    # snapshot, one hits array each
+    qs = req["queries"]
+    if not isinstance(qs, list) or not qs:
+        raise ValueError("queries must be a non-empty list")
+    if len(qs) > BATCH_MAX:
+        raise ValueError(f"batch is limited to {BATCH_MAX} queries, got {len(qs)}")
+    if not all(isinstance(q, str) and q.strip() for q in qs):
+        raise ValueError("every batch query must be a non-empty string")
+    top_k = _req_top_k(req, s.args.top_k)
+    positive_only = not s.args.match_all
+    return {"results": [
+        {"query": q, "hits": _hits(s.reader.query(q, top_k=top_k, positive_only=positive_only))}
+        for q in qs
+    ]}
+
+
+def _serve_query(s, req) -> dict:
+    # a plain-text line (every option at its default, --top-k as given), or
+    # the api/search.py request body:
+    # {"query": str, "top_k"?: int, "offset"?: int,
+    #  "search_after"?: [score, doc_id], "filter_ids"?: [doc_id, ...],
+    #  "bool"?: bool, "minimum_should_match"?: int, "collapse_hosts"?: int,
+    #  "hydrate"?: bool, "snippet_window"?: int}
+    # filter_ids is the resolved metadata-filter id set, applied pre-rank;
+    # offset paginates (ranks offset+1 .. offset+top_k); search_after is the
+    # cursor form of deep pagination (the [score, doc_id] of the last hit
+    # received); bool reads "+must -not should" clause syntax
+    kw = {"top_k": s.args.top_k, "positive_only": not s.args.match_all}
+    if isinstance(req, str):
+        text, req, window = req, {}, None
+    else:
+        text = _req_query_text(req)
+        kw["top_k"] = _req_top_k(req, s.args.top_k)
+        kw["offset"] = _number(req.get("offset", 0), "offset")
+        if kw["offset"] < 0:
+            # checked here too: a query with no known term never reaches
+            # the reader's own check
+            raise ValueError(f"offset must be >= 0, got {kw['offset']}")
+        allowed = req.get("filter_ids")
+        if allowed is not None and not (
+            isinstance(allowed, list)
+            and all(type(d) is int and -(2**63) <= d < 2**63 for d in allowed)
+        ):
+            raise ValueError("filter_ids must be a list of integer doc ids")
+        kw["allowed_docs"] = allowed
+        sa = req.get("search_after")
+        if sa is not None:
+            if not (isinstance(sa, list) and len(sa) == 2):
+                raise ValueError("search_after must be [score, doc_id]")
+            kw["search_after"] = (_number(sa[0], "search_after[0]", float),
+                                  _number(sa[1], "search_after[1]"))
+        msm = _number(req.get("minimum_should_match", 0), "minimum_should_match")
+        collapse = _number(req.get("collapse_hosts", 0), "collapse_hosts")
+        if req.get("bool"):
+            kw["min_should_match"] = msm
+        elif collapse:
+            kw["collapse_hosts"] = collapse
+        window = (_number(req["snippet_window"], "snippet_window")
+                  if "snippet_window" in req else None)
+    t0 = time.perf_counter()
+    hits = (s.reader.query_bool if req.get("bool") else s.reader.query)(text, **kw)
+    ms = (time.perf_counter() - t0) * 1000
+    s.counters["searches"] += 1
+    s.counters["search_ms_total"] += ms
+    rows = _hits(hits)
+    if req.get("hydrate"):
+        hd = s.reader.hydrate([d for d, _ in hits], query=text, snippet_window=window)
+        for row in rows:
+            row.update(hd.get(row["doc_id"], {}))
+    return {"query": text, "latency_ms": round(ms, 3), "hits": rows}
+
+
+# The protocol: request kind -> handler, in precedence order. A JSON object
+# is the first kind whose key it holds; an object with none of them, and a
+# plain-text line, is a "query".
+_HANDLERS = {
+    ":refresh": _serve_refresh,
+    "health": _serve_health,
+    "stats": _serve_stats,
+    "phrase": _serve_phrase,
+    "near": _serve_near,
+    "mget": _serve_mget,
+    "termvectors": _serve_termvectors,
+    "dsl": _serve_dsl,
+    "explain": _serve_explain,
+    "percolate": _serve_percolate,
+    "more_like_this": _serve_more_like_this,
+    "suggest": _serve_suggest,
+    "queries": _serve_queries,
+    "query": _serve_query,
+}
+_JSON_KINDS = [k for k in _HANDLERS if k != ":refresh"]
+# liveness/metrics probes (and :refresh) skip the rate limiter: the
+# reference's GET /health stays answerable under load, since a probe that
+# answered "rate limited" mid-burst would get a healthy-but-busy replica
+# drained, and probes must not use up query slots
+_UNLIMITED = {":refresh", "health", "stats"}
+# what a multi-partition replica (serve --shards, query/serve_multi.py)
+# answers; every other kind, and these query options, need one index
+_MULTI_KINDS = {":refresh", "health", "stats", "queries", "query"}
+_SINGLE_INDEX_OPTIONS = ("bool", "collapse_hosts", "hydrate")
+# a request's own fault; anything else a handler raises is an internal error
+_REQUEST_ERRORS = (ValueError, KeyError, TypeError, IndexError, OverflowError)
+
+
+def _parse(text: str) -> tuple:
+    """One non-empty request line -> (kind, request), with at most one JSON
+    parse: ``:refresh`` is its own kind, a line starting with ``{`` or
+    ``[`` must be a JSON object, and any other line is a "query" whose
+    request is the text itself."""
+    if text == ":refresh":
+        return ":refresh", None
+    if text[0] not in "{[":
+        return "query", text
+    try:
+        req = json.loads(text)
+    except (ValueError, RecursionError) as e:
+        raise ValueError(f"bad request line: {e}") from None
+    if not isinstance(req, dict):
+        raise ValueError("bad request line: a request must be a JSON object")
+    return next((k for k in _JSON_KINDS if k in req), "query"), req
+
+
+def _single_index_only(kind: str, req):
+    """The kind, or the query option, of a request that a multi-partition
+    replica cannot answer; None if it can."""
+    if kind not in _MULTI_KINDS:
+        return kind
+    if kind == "query" and isinstance(req, dict):
+        return next((o for o in _SINGLE_INDEX_OPTIONS if req.get(o)), None)
+    return None
+
+
+def _dispatch(s, text: str) -> dict:
+    """The reply to one request line. A request error (bad JSON, a missing
+    or malformed field, a kind this replica cannot answer, a limit) is one
+    ``{"error": message}`` reply; any other exception is one ``internal
+    error`` reply and a traceback on stderr. Either way the loop goes on."""
+    s.counters["requests"] += 1
+    kind = "invalid"  # the count a line that does not parse goes to
+    try:
+        kind, req = _parse(text)
+        ok, retry_after = (
+            s.limiter.check() if s.limiter is not None and kind not in _UNLIMITED
+            else (True, 0.0)
+        )
+        if not ok:
+            out = {"error": "rate limited", "retry_after_s": round(retry_after, 3)}
+        else:
+            what = s.multi and _single_index_only(kind, req)
+            if what:
+                raise ValueError(f"{what} not supported on a multi-partition replica")
+            out = _HANDLERS[kind](s, req)
+    except _REQUEST_ERRORS as e:
+        out = {"error": f"missing key {e.args[0]!r}" if type(e) is KeyError else str(e)}
+    except Exception as e:  # noqa: BLE001 — a handler bug must not end the replica
+        import traceback
+
+        traceback.print_exc()
+        out = {"error": f"internal error: {type(e).__name__}: {e}"}
+    tally = s.kinds[kind]
+    tally["count"] += 1
+    tally["errors"] += "error" in out
+    return out
+
+
 def cmd_serve(args) -> int:
-    """Serving loop: query lines on stdin -> one JSON result line each.
+    """Serving loop: request lines on stdin -> one JSON reply line each.
 
     The reference's API tier (``api/main.py`` + ``api/search.py``) as a
     library process: no Spark session, no HTTP — an IndexReader over the
-    parquet index plus the TTL+LRU cache (query/cache.py). ``:refresh`` on
-    stdin picks up a maintenance commit (the API analog of the reference
-    re-opening its store). One process per serving replica; scale-out is
-    N identical stateless processes behind any front end."""
-    import time
+    parquet index plus the TTL+LRU cache (query/cache.py), or with
+    ``--shards`` a MultiReader that scatter-gathers over partial indexes
+    (query/serve_multi.py). ``_HANDLERS`` above is the protocol's single
+    definition: every request kind in precedence order, with its handler.
+    One process per serving replica; scale-out is N identical stateless
+    processes behind any front end."""
+    from collections import defaultdict
+    from types import SimpleNamespace
 
-    from .query.cache import TtlLruCache
-    from .query.serve import IndexReader
+    multi = bool(args.shards)
+    cache = None
+    if multi:
+        from .query.serve_multi import MultiReader
 
-    cache = (
-        TtlLruCache(max_entries=args.cache_entries, ttl=args.cache_ttl)
-        if args.cache_entries > 0
-        else None
-    )
+        reader = MultiReader([args.index] + args.shards.split(","))
+    else:
+        from .query.cache import TtlLruCache
+        from .query.serve import IndexReader
+
+        if args.cache_entries > 0:
+            cache = TtlLruCache(max_entries=args.cache_entries, ttl=args.cache_ttl)
+        reader = IndexReader(args.index, cache=cache, corpus_path=args.corpus)
     limiter = None
     if args.rate_limit > 0:
         from .query.ratelimit import SlidingWindowLimiter
 
         limiter = SlidingWindowLimiter(args.rate_limit, args.rate_window)
-    if getattr(args, "shards", None):
-        # scatter-gather replica over partial indexes (exact global scoring,
-        # query/serve_multi.py); flat queries only — clause/phrase/suggest
-        # surfaces answer with an explicit error
-        from .query.serve_multi import MultiReader
-
-        reader = MultiReader([args.index] + args.shards.split(","))
-    else:
-        reader = IndexReader(args.index, cache=cache, corpus_path=args.corpus)
     matcher = None
-    if getattr(args, "percolate_queries", None):
+    if args.percolate_queries:
         from .query.percolate import PercolateMatcher
 
         matcher = PercolateMatcher.from_jsonl(args.percolate_queries)
     # the reference's metrics middleware (main.py:96-110) counts requests and
-    # search latency per process; same counters here, reported by {"stats"}
-    t_up = time.time()
-    counters = {"requests": 0, "searches": 0, "search_ms_total": 0.0}
+    # search latency per process; same counters here, plus per-kind counts
+    s = SimpleNamespace(
+        args=args, multi=multi, reader=reader, cache=cache, limiter=limiter,
+        matcher=matcher, t_up=time.time(),
+        kinds=defaultdict(lambda: {"count": 0, "errors": 0}),
+        counters={"requests": 0, "searches": 0, "search_ms_total": 0.0},
+    )
+    # a line that is not UTF-8 is read with U+FFFD in place of its bad
+    # bytes, not a decode error that ends the loop
+    sys.stdin.reconfigure(errors="replace")
     for line in sys.stdin:
         text = line.strip()
-        if not text:
-            continue
-        counters["requests"] += 1
-        if text == ":refresh":
-            reader.refresh()
-            print(
-                json.dumps(
-                    {"refreshed": True, "snapshot": getattr(reader, "snapshot", "")}
-                ),
-                flush=True,
-            )
-            continue
-        # a JSON object line is the structured request form (the api/search.py
-        # request-body analog): {"query": str, "top_k"?: int, "offset"?: int,
-        # "search_after"?: [score, doc_id], "filter_ids"?: [doc_id, ...]} —
-        # filter_ids is the resolved metadata-filter id set, applied pre-rank
-        # (IndexReader.allowed_docs); offset paginates (ranks offset+1 ..
-        # offset+top_k); search_after is the cursor form of deep pagination
-        # (the [score, doc_id] of the last hit received; pages tile with
-        # offset paging on a fixed snapshot)
-        # liveness/metrics probes answer BEFORE the rate limiter (and are
-        # exempt from it): the reference's GET /health stays answerable under
-        # load — a probe that returns "rate limited" mid-burst would get the
-        # replica drained exactly when it is healthy-but-busy — and probes
-        # must not consume query slots
-        probe = None
-        if text.startswith("{"):
-            try:
-                probe = json.loads(text)
-            except json.JSONDecodeError:
-                probe = None  # fall through; the request path reports it
-        if isinstance(probe, dict) and ("health" in probe or "stats" in probe):
-            if "health" in probe:
-                # the reference's GET /health (main.py:129-151): liveness
-                # plus what this replica has loaded; answers even when
-                # stats extras are missing (MultiReader), never an error
-                from . import __version__
-
-                srow = getattr(reader, "stats", None) or {}
-                out = {
-                    "status": "healthy",
-                    "version": __version__,
-                    "snapshot": getattr(reader, "snapshot", ""),
-                    "mode": "multi" if getattr(args, "shards", None) else "single",
-                    "n_terms": len(getattr(reader, "idf", None) or {}),
-                }
-                if "n_docs" in srow:
-                    out["n_docs"] = int(srow["n_docs"])
-                print(json.dumps(out), flush=True)
-                continue
-            # the reference's GET /metrics (main.py:156-163) as one
-            # JSON line: request counters, cache hit rates, posting row
-            # groups read vs in the directory, and the loaded index's
-            # corpus stats
-            cs = None
-            if cache is not None:
-                tot = cache.stats.hits + cache.stats.misses
-                cs = {
-                    "hits": cache.stats.hits,
-                    "misses": cache.stats.misses,
-                    "hit_rate": round(cache.stats.hits / tot, 4) if tot else 0.0,
-                    "evictions": cache.stats.evictions,
-                    "expirations": cache.stats.expirations,
-                    "entries": cache.live_entries(),
-                }
-            srow = getattr(reader, "stats", None) or {}
-            readers = getattr(reader, "readers", [reader])  # MultiReader parts
-            out = {
-                "snapshot": getattr(reader, "snapshot", ""),
-                "uptime_s": round(time.time() - t_up, 3),
-                "requests": {
-                    **counters,
-                    "search_ms_total": round(counters["search_ms_total"], 3),
-                },
-                "cache": cs,
-                "postings": {
-                    k: sum(r.postings_read[k] for r in readers)
-                    for k in ("row_groups_read", "row_group_hits", "row_groups_total",
-                              "files", "row_group_cache_bytes")
-                },
-                "index": {
-                    k: srow[k] for k in ("n_docs", "avgdl", "k1", "b") if k in srow
-                },
-                "n_terms": len(getattr(reader, "idf", None) or {}),
-            }
-            print(json.dumps(out), flush=True)
-            continue
-        if limiter is not None:
-            ok, retry_after = limiter.check()
-            if not ok:
-                print(
-                    json.dumps(
-                        {"error": "rate limited", "retry_after_s": round(retry_after, 3)}
-                    ),
-                    flush=True,
-                )
-                continue
-        top_k, allowed = args.top_k, None
-        if text.startswith("{"):
-            try:
-                req = json.loads(text)
-                if "phrase" in req:
-                    # exact-phrase retrieval from a positional index:
-                    # {"phrase": str, "top_k"?: int} -> [(doc_id, phrase_tf)]
-                    if not hasattr(reader, "query_phrase"):
-                        print(json.dumps({"error": "phrase not supported on a multi-partition replica"}), flush=True)
-                        continue
-                    try:
-                        ph = reader.query_phrase(
-                            req["phrase"], top_k=_req_top_k(req, args.top_k)
-                        )
-                    except ValueError as e:
-                        print(json.dumps({"error": str(e)}), flush=True)
-                        continue
-                    print(
-                        json.dumps(
-                            {
-                                "phrase": req["phrase"],
-                                "hits": [
-                                    {"doc_id": d, "phrase_tf": tf} for d, tf in ph
-                                ],
-                            }
-                        ),
-                        flush=True,
-                    )
-                    continue
-                if "near" in req:
-                    # proximity from a positional index:
-                    # {"near": str, "span": int, "top_k"?: int,
-                    #  "ordered"?: bool} — ordered=true requires the terms
-                    # in query order (SpanNear inOrder)
-                    if not hasattr(reader, "query_near"):
-                        print(json.dumps({"error": "near not supported on a multi-partition replica"}), flush=True)
-                        continue
-                    try:
-                        nh = reader.query_near(
-                            req["near"], max_span=int(req["span"]),
-                            top_k=_req_top_k(req, args.top_k),
-                            ordered=bool(req.get("ordered")),
-                        )
-                    except ValueError as e:
-                        print(json.dumps({"error": str(e)}), flush=True)
-                        continue
-                    print(
-                        json.dumps(
-                            {
-                                "near": req["near"],
-                                "hits": [
-                                    {"doc_id": d, "min_window": w} for d, w in nh
-                                ],
-                            }
-                        ),
-                        flush=True,
-                    )
-                    continue
-                if "mget" in req:
-                    # {"mget": [doc_id, ...]} — ES _mget analog: fetch docs
-                    # by id through the hydration path (needs --corpus)
-                    if not hasattr(reader, "hydrate"):
-                        print(json.dumps({"error": "mget not supported on a multi-partition replica"}), flush=True)
-                        continue
-                    try:
-                        docs = reader.hydrate([int(d) for d in req["mget"]])
-                    except ValueError as e:
-                        print(json.dumps({"error": str(e)}), flush=True)
-                        continue
-                    print(
-                        json.dumps(
-                            {
-                                "docs": [
-                                    {"doc_id": d, **rec}
-                                    for d, rec in sorted(docs.items())
-                                ]
-                            }
-                        ),
-                        flush=True,
-                    )
-                    continue
-                if "termvectors" in req:
-                    # {"termvectors": doc_id, "positions"?: bool} — the ES
-                    # _termvectors analog, recovered from the lossless index
-                    if not hasattr(reader, "term_vector"):
-                        print(json.dumps({"error": "termvectors not supported on a multi-partition replica"}), flush=True)
-                        continue
-                    try:
-                        tv = reader.term_vector(
-                            int(req["termvectors"]),
-                            positions=bool(req.get("positions")),
-                        )
-                    except ValueError as e:
-                        print(json.dumps({"error": str(e)}), flush=True)
-                        continue
-                    print(json.dumps(tv), flush=True)
-                    continue
-                if "dsl" in req:
-                    # {"dsl": {<search_dsl request>}} — the cluster DSL's
-                    # replica-servable subset (match/bool/match_phrase/
-                    # prefix/wildcard/more_like_this); cluster-only forms
-                    # return a routing error
-                    if not hasattr(reader, "query_dsl"):
-                        print(json.dumps({"error": "dsl not supported on a multi-partition replica"}), flush=True)
-                        continue
-                    try:
-                        hits = reader.query_dsl(
-                            dict(req["dsl"]), positive_only=not args.match_all
-                        )
-                    # AttributeError deliberately NOT caught: capability
-                    # probing is done via hasattr above, so one here is an
-                    # internal bug that must surface, not a request error.
-                    except (KeyError, ValueError, TypeError) as e:
-                        print(json.dumps({"error": str(e)}), flush=True)
-                        continue
-                    print(
-                        json.dumps(
-                            {"hits": [{"doc_id": d, "score": s} for d, s in hits]}
-                        ),
-                        flush=True,
-                    )
-                    continue
-                if "explain" in req:
-                    # {"explain": "<query text>", "doc_id": id} — the ES
-                    # _explain analog: per-term score breakdown for one
-                    # (query, doc) pair, from the index alone
-                    if not hasattr(reader, "explain"):
-                        print(json.dumps({"error": "explain not supported on a multi-partition replica"}), flush=True)
-                        continue
-                    if "doc_id" not in req:
-                        print(json.dumps({"error": "explain needs a 'doc_id' key"}), flush=True)
-                        continue
-                    try:
-                        print(
-                            json.dumps(
-                                reader.explain(
-                                    str(req["explain"]), int(req["doc_id"])
-                                )
-                            ),
-                            flush=True,
-                        )
-                    except (KeyError, ValueError, TypeError) as e:
-                        print(json.dumps({"error": str(e)}), flush=True)
-                    continue
-                if "percolate" in req:
-                    # {"percolate": "<doc text>"} — the ES single-doc
-                    # percolate API: which saved searches match this doc
-                    # (requires serve --percolate-queries FILE.jsonl)
-                    if matcher is None:
-                        print(json.dumps({"error": "no --percolate-queries configured"}), flush=True)
-                        continue
-                    print(
-                        json.dumps(
-                            {"matches": matcher.match(str(req["percolate"]))}
-                        ),
-                        flush=True,
-                    )
-                    continue
-                if "more_like_this" in req:
-                    # {"more_like_this": doc_id, "m"?: int, "top_k"?: int} —
-                    # find docs similar to an indexed doc (Lucene MLT);
-                    # term vector comes from the index itself
-                    if not hasattr(reader, "more_like_this"):
-                        print(json.dumps({"error": "more_like_this not supported on a multi-partition replica"}), flush=True)
-                        continue
-                    try:
-                        hits = reader.more_like_this(
-                            int(req["more_like_this"]),
-                            m=int(req.get("m", 10)),
-                            top_k=_req_top_k(req, args.top_k),
-                            positive_only=not args.match_all,
-                        )
-                    except ValueError as e:
-                        print(json.dumps({"error": str(e)}), flush=True)
-                        continue
-                    print(
-                        json.dumps(
-                            {
-                                "more_like_this": int(req["more_like_this"]),
-                                "hits": [
-                                    {"doc_id": d, "score": s} for d, s in hits
-                                ],
-                            }
-                        ),
-                        flush=True,
-                    )
-                    continue
-                if "suggest" in req and not hasattr(reader, "suggest"):
-                    print(json.dumps({"error": "suggest not supported on a multi-partition replica"}), flush=True)
-                    continue
-                if "suggest" in req:
-                    # fuzzy vocabulary suggestion ("did you mean"):
-                    # {"suggest": str, "n"?: int} -> [(term, distance, df)]
-                    sug = reader.suggest(req["suggest"], n=int(req.get("n", 3)))
-                    print(
-                        json.dumps(
-                            {
-                                "suggest": req["suggest"],
-                                "suggestions": [
-                                    {"term": t, "distance": d, "df": df}
-                                    for t, d, df in sug
-                                ],
-                            }
-                        ),
-                        flush=True,
-                    )
-                    continue
-                if "queries" in req:
-                    # batch search — the reference's POST /search/batch
-                    # (api/search.py:89-98): up to BATCH_MAX queries per
-                    # request, one hits array per query, same snapshot
-                    qs = req["queries"]
-                    if not isinstance(qs, list) or not qs:
-                        raise ValueError("queries must be a non-empty list")
-                    if len(qs) > BATCH_MAX:
-                        raise ValueError(
-                            f"batch is limited to {BATCH_MAX} queries, got {len(qs)}"
-                        )
-                    bk = _req_top_k(req, args.top_k)
-                    results = []
-                    for q in qs:
-                        if not isinstance(q, str) or not q.strip():
-                            raise ValueError("every batch query must be a non-empty string")
-                        bh = reader.query(
-                            q, top_k=bk, positive_only=not args.match_all
-                        )
-                        results.append(
-                            {
-                                "query": q,
-                                "hits": [
-                                    {"doc_id": d, "score": s} for d, s in bh
-                                ],
-                            }
-                        )
-                    print(json.dumps({"results": results}), flush=True)
-                    continue
-                text = _req_query_text(req)
-                top_k = _req_top_k(req, args.top_k)
-                allowed = req.get("filter_ids")
-                if allowed is not None and not (
-                    isinstance(allowed, list) and all(type(d) is int for d in allowed)
-                ):
-                    raise ValueError("filter_ids must be a list of integer doc ids")
-                use_bool = bool(req.get("bool"))
-                msm = int(req.get("minimum_should_match", 0))
-                collapse = int(req.get("collapse_hosts", 0))
-                offset = int(req.get("offset", 0))
-                sa = req.get("search_after")
-                search_after = (
-                    (float(sa[0]), int(sa[1])) if sa is not None else None
-                )
-                hydrate = bool(req.get("hydrate"))
-                snippet_window = (
-                    int(req["snippet_window"]) if "snippet_window" in req else None
-                )
-            except (ValueError, KeyError, IndexError, TypeError) as e:
-                print(json.dumps({"error": f"bad request line: {e}"}), flush=True)
-                continue
-        else:
-            use_bool = False
-            msm = 0
-            collapse = 0
-            offset = 0
-            search_after = None
-            hydrate = False
-            snippet_window = None
-        t0 = time.perf_counter()
-        if use_bool and not hasattr(reader, "query_bool"):
-            print(json.dumps({"error": "bool not supported on a multi-partition replica"}), flush=True)
-            continue
-        if collapse and not hasattr(reader, "_hosts_for"):
-            print(json.dumps({"error": "collapse_hosts not supported on a multi-partition replica"}), flush=True)
-            continue
-        if hydrate and not hasattr(reader, "hydrate"):
-            print(json.dumps({"error": "hydrate not supported on a multi-partition replica"}), flush=True)
-            continue
-        try:
-            if use_bool:
-                # {"query": "+must -not should", "bool": true,
-                #  "minimum_should_match"?: n}: Lucene-style clause syntax via
-                # IndexReader.query_bool
-                hits = reader.query_bool(
-                    text, top_k=top_k, positive_only=not args.match_all,
-                    allowed_docs=allowed, offset=offset, search_after=search_after,
-                    min_should_match=msm,
-                )
-            else:
-                extra = {"collapse_hosts": collapse} if collapse else {}
-                hits = reader.query(
-                    text, top_k=top_k, positive_only=not args.match_all,
-                    allowed_docs=allowed, offset=offset, search_after=search_after,
-                    **extra,
-                )
-        except ValueError as e:
-            # e.g. a negative offset: an error line, the loop keeps serving
-            print(json.dumps({"error": str(e)}), flush=True)
-            continue
-        ms = (time.perf_counter() - t0) * 1000
-        counters["searches"] += 1
-        counters["search_ms_total"] += ms
-        hit_rows = [{"doc_id": d, "score": s} for d, s in hits]
-        if hydrate:
-            try:
-                hd = reader.hydrate(
-                    [d for d, _ in hits], query=text, snippet_window=snippet_window
-                )
-            except ValueError as e:
-                print(json.dumps({"error": str(e)}), flush=True)
-                continue
-            for row in hit_rows:
-                row.update(hd.get(row["doc_id"], {}))
-        print(
-            json.dumps(
-                {
-                    "query": text,
-                    "latency_ms": round(ms, 3),
-                    "hits": hit_rows,
-                }
-            ),
-            flush=True,
-        )
+        if text:
+            print(json.dumps(_dispatch(s, text)), flush=True)
     return 0
 
 

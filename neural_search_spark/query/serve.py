@@ -556,16 +556,16 @@ class IndexReader:
         on a positional index, 1-based positions) recovered from the index
         alone — the posting blocks are lossless, so no document store is
         needed. Reads exactly one shard's posting files (the doc's shard,
-        through the snapshot's open handles) and decodes only blocks whose
-        [first_doc_id, last_doc_id] range covers the doc.
+        through the snapshot's open handles), decodes the delta and tf
+        streams of every block whose [first_doc_id, last_doc_id] range
+        covers the doc in one ``codec.decode_ints_many`` call, and the
+        position streams of the blocks that hold the doc in a second.
 
         Returns {"doc_id", "doc_len", "terms": {term: tf | [positions]}};
         unknown doc_ids return an empty terms dict.
         """
         import pyarrow as pa
         import pyarrow.compute as pc
-
-        from ..index.codec import decode_ints, decode_position_lists
 
         if positions and not bool(self.stats.get("positional")):
             raise ValueError(
@@ -576,30 +576,49 @@ class IndexReader:
         files = [f.handle for f in self._files if f.shard == shard]
         if not files:
             return {"doc_id": int(doc_id), "doc_len": 0, "terms": {}}
-        cols = ["term", "block_id", "first_doc_id", "last_doc_id", "n_docs",
-                "deltas", "tfs"] + (["positions"] if positions else [])
+        cols = ["term", "first_doc_id", "last_doc_id", "n_docs", "deltas",
+                "tfs"] + (["positions"] if positions else [])
         table = pa.concat_tables(
             [pf.read(columns=cols, use_threads=False) for pf in files]
         ).filter(
             (pc.field("first_doc_id") <= doc_id) & (pc.field("last_doc_id") >= doc_id)
         )
+        nb = table.num_rows
         terms: dict = {}
-        for blk in table.to_pylist():
-            n = int(blk["n_docs"])
+        if nb:
+            counts = table.column("n_docs").to_numpy().astype(np.int64)
+            streams = codec.decode_ints_many(
+                table.column("deltas").to_pylist() + table.column("tfs").to_pylist(),
+                counts.tolist() * 2,
+            )
+            deltas = np.concatenate(streams[:nb]).astype(np.int64)
+            tfs = np.concatenate(streams[nb:]).astype(np.int64)
             # block deltas are relative to the PREVIOUS block's last id; for
-            # a direct block probe, reconstruct from first_doc_id instead
-            deltas = decode_ints(bytes(blk["deltas"]), n).astype(np.int64)
-            ids = np.cumsum(deltas) - int(deltas[0]) + int(blk["first_doc_id"])
-            hit = np.flatnonzero(ids == int(doc_id))
-            if hit.size == 0:
-                continue
-            tfs = decode_ints(bytes(blk["tfs"]), n).astype(np.int64)
-            i = int(hit[0])
+            # a direct block probe, each block's ids restart from its
+            # first_doc_id
+            starts = np.cumsum(counts) - counts
+            c = np.cumsum(deltas)
+            first = table.column("first_doc_id").to_numpy().astype(np.int64)
+            ids = c - np.repeat(c[starts] - first, counts)
+            rows = np.flatnonzero(ids == int(doc_id))  # at most one per block
+            blocks = np.searchsorted(starts, rows, side="right") - 1
+            names = table.column("term").take(blocks).to_pylist()
             if positions:
-                plists = decode_position_lists(bytes(blk["positions"]), tfs)
-                terms[blk["term"]] = [int(p) for p in plists[i]]
+                # a block's positions stream holds one segment per doc, tf
+                # values long: the first absolute, the rest gaps
+                ahead = np.cumsum(tfs) - tfs  # tf values before each row
+                pos = codec.decode_ints_many(
+                    table.column("positions").take(blocks).to_pylist(),
+                    np.add.reduceat(tfs, starts)[blocks].tolist(),
+                )
+                lo = (ahead[rows] - ahead[starts[blocks]]).tolist()
+                vals = [
+                    np.cumsum(p[a : a + n].astype(np.int64)).tolist()
+                    for p, a, n in zip(pos, lo, tfs[rows].tolist())
+                ]
             else:
-                terms[blk["term"]] = int(tfs[i])
+                vals = tfs[rows].tolist()
+            terms = dict(zip(names, vals))
         dl = self._shard_state(shard).doc_len[int(doc_id) - shard * span]
         return {"doc_id": int(doc_id), "doc_len": int(dl), "terms": terms}
 
@@ -692,7 +711,7 @@ class IndexReader:
             )
         if kind == "bool":
             # boundary validation: a non-object body is a client error, not
-            # an AttributeError crash (the serve loop only catches ValueError)
+            # an AttributeError (which the serve loop answers as internal)
             if not isinstance(body, dict):
                 raise ValueError("bool query body must be an object")
             text = " ".join(

@@ -58,9 +58,6 @@ class MultiReader:
     def refresh(self) -> None:
         """Recompute shard offsets + global stats from the current partial
         snapshots (call after any partition's maintenance commit)."""
-        import pyarrow.parquet as pq
-        import os
-
         first = self.readers[0].stats
         for rd in self.readers:
             rd.refresh()
@@ -77,9 +74,9 @@ class MultiReader:
         next_free = 0
         for rd in self.readers:
             self.offsets.append(next_free)
-            t = pq.read_table(
-                os.path.join(rd.root, "docmap"), columns=["doc_id"]
-            )
+            # the partition's max doc id is in its highest shard, read
+            # through the docmap handles of the snapshot it just opened
+            t = rd._docmap_table(max(rd._docmap), ["doc_id"])
             max_id = max(t.column("doc_id").to_pylist())
             next_free += (max_id // span + 1) * span
 

@@ -8,6 +8,7 @@ touching Spark.
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
@@ -733,6 +734,9 @@ def test_cli_serve_health_and_stats(served):
         json.dumps({"query": "w0005 w0010", "top_k": 2}),
         json.dumps({"query": "w0005 w0010", "top_k": 2}),
         json.dumps({"stats": True}),
+        json.dumps({"query": "w0005", "top_k": 0}),  # a bad query
+        "{bad",  # a line that does not parse
+        json.dumps({"stats": True}),
     ]
     proc = subprocess.run(
         [sys.executable, "-m", "neural_search_spark.cli", "serve",
@@ -742,7 +746,7 @@ def test_cli_serve_health_and_stats(served):
     )
     assert proc.returncode == 0, proc.stderr
     out = [json.loads(ln) for ln in proc.stdout.strip().splitlines()]
-    assert len(out) == 4
+    assert len(out) == 7
     health = out[0]
     assert health["status"] == "healthy"
     assert health["mode"] == "single"
@@ -765,6 +769,16 @@ def test_cli_serve_health_and_stats(served):
     # the read row groups stay decompressed in the replica
     assert stats["postings"]["row_group_hits"] == 0
     assert stats["postings"]["row_group_cache_bytes"] > 0
+    # per-kind counts of the answered requests
+    assert stats["kinds"]["query"] == {"count": 2, "errors": 0}
+    assert stats["kinds"]["health"] == {"count": 1, "errors": 0}
+    later = out[6]
+    assert later["requests"]["requests"] == 7
+    assert later["requests"]["searches"] == 2
+    assert later["kinds"]["query"] == {"count": 3, "errors": 1}
+    assert later["kinds"]["invalid"] == {"count": 1, "errors": 1}
+    # like "requests", the counts include the stats request answering them
+    assert later["kinds"]["stats"] == {"count": 2, "errors": 0}
 
 
 def test_cli_serve_health_exempt_from_rate_limit(served):
@@ -894,6 +908,7 @@ def test_cli_serve_shards_scatter_gather(spark, tmp_path_factory):
             '{"query": "w0005 w0010", "top_k": 5}',
             '{"query": "+w0005", "bool": true}',
             '{"suggest": "w005"}',
+            '{"stats": true}',
         ]
     )
     proc = subprocess.run(
@@ -910,6 +925,13 @@ def test_cli_serve_shards_scatter_gather(spark, tmp_path_factory):
         assert gs == pytest.approx(ws, abs=1e-9)
     assert "not supported" in lines[1]["error"]
     assert "not supported" in lines[2]["error"]
+    # the multi-partition replica has no result cache, and reports the
+    # global corpus stats it scores with
+    stats = lines[3]
+    assert stats["cache"] is None
+    merged_stats = IndexReader(merged).stats
+    assert stats["index"]["n_docs"] == merged_stats["n_docs"] == 200
+    assert stats["index"]["avgdl"] == pytest.approx(merged_stats["avgdl"], rel=1e-12)
 
 
 def test_reader_query_near_ordered_parity(spark, tmp_path_factory):
@@ -1135,6 +1157,111 @@ def test_cli_serve_request_bounds(served):
         assert len(out[i]["hits"]) == 3
     with pytest.raises(ValueError, match="offset must be >= 0"):
         reader.query("w0005 w0010", top_k=3, offset=-1)
+
+
+# the repo root, so ``python -m neural_search_spark.cli`` resolves
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# request lines that must each get one error reply and leave the replica
+# serving: numbers no int can hold, ids past int64, JSON nested past the
+# parser's recursion limit, and malformed shapes of every request form
+MALFORMED_LINES = [
+    '{"query": "w0005", "top_k": 1e400}',
+    '{"query": "w0005", "offset": 1e400}',
+    '{"query": "w0005", "search_after": [1.0, 1e400]}',
+    '{"query": "w0005", "minimum_should_match": 1e400}',
+    '{"query": "w0005", "collapse_hosts": 1e400}',
+    '{"query": "w0005", "snippet_window": 1e400}',
+    '{"near": "w0005 w0010", "span": 1e400}',
+    '{"suggest": "w005", "n": 1e400}',
+    '{"mget": 1e400}',
+    '{"termvectors": 1e400}',
+    '{"more_like_this": 1e400}',
+    '{"explain": "w0005", "doc_id": 1e400}',
+    '{"dsl": {"query": {"match": "w0005"}, "top_k": 1e400}}',
+    '{"query": "w0005", "filter_ids": [99999999999999999999999]}',
+    '{"a":' * 100_000,
+    "{bad",
+    "[1, 2]",
+    '{"query": "w0005", "search_after": 5}',
+    '{"query": "w0005", "search_after": [1]}',
+    '{"mget": 5}',
+    '{"queries": [1]}',
+    '{"query": "w0005", "top_k": null}',
+    '{"dsl": 5}',
+    '{"percolate": "x"}',  # no --percolate-queries
+    '{"query": "x", "offset": -1}',  # no known term: never reaches the reader
+]
+
+
+def test_cli_serve_survives_malformed_lines(served):
+    """No input ends a replica: one `serve` process answers every malformed
+    line with exactly one error reply and keeps answering the valid query
+    after it. A line that is not UTF-8 is read with replacement characters,
+    so it is an ordinary query, not a decode error, even where stdin
+    decodes strictly (PYTHONIOENCODING=utf-8)."""
+    import json
+    import subprocess
+    import sys
+
+    _, reader = served
+    valid = "w0005 w0010"
+    lines = [ln for bad in MALFORMED_LINES for ln in (bad, valid)]
+    stdin = ("\n".join(lines) + "\n").encode() + b"\xff\xfe w0005\n\n" + valid.encode() + b"\n"
+    proc = subprocess.run(
+        [sys.executable, "-m", "neural_search_spark.cli", "serve",
+         "--index", reader.root],
+        input=stdin, capture_output=True, timeout=300, cwd=REPO_ROOT,
+        env={**os.environ, "PYTHONIOENCODING": "utf-8"},
+    )
+    assert proc.returncode == 0, proc.stderr.decode()[-2000:]
+    out = [json.loads(ln) for ln in proc.stdout.decode().splitlines()]
+    assert len(out) == len(lines) + 2  # one reply per non-empty line
+    for i, bad in enumerate(MALFORMED_LINES):
+        assert set(out[2 * i]) == {"error"}, (bad[:60], out[2 * i])
+        assert "internal error" not in out[2 * i]["error"], bad[:60]
+        assert out[2 * i + 1]["hits"], bad[:60]
+    assert out[-2]["query"] == "\ufffd\ufffd w0005" and out[-2]["hits"]
+    assert out[-1]["hits"]
+    assert b"Traceback" not in proc.stderr
+
+
+def test_cli_serve_internal_error_is_one_reply(served, tmp_path):
+    """A fault that is not the request's own (here a ``:refresh`` of an
+    index that lost its corpus_stats) answers one ``internal error`` line
+    and logs its traceback, and the replica keeps serving its snapshot."""
+    import json
+    import shutil
+    import subprocess
+    import sys
+
+    _, reader = served
+    root = str(tmp_path / "idx")
+    shutil.copytree(reader.root, root)
+    proc = subprocess.Popen(
+        [sys.executable, "-m", "neural_search_spark.cli", "serve", "--index", root],
+        stdin=subprocess.PIPE, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+        text=True, cwd=REPO_ROOT,
+    )
+
+    def ask(line):
+        proc.stdin.write(line + "\n")
+        proc.stdin.flush()
+        return json.loads(proc.stdout.readline())
+
+    first = ask("w0005 w0010")
+    shutil.rmtree(os.path.join(root, "corpus_stats"))
+    failed = ask(":refresh")
+    again = ask("w0005 w0010")
+    proc.stdin.close()
+    assert proc.wait(60) == 0
+    stderr = proc.stderr.read()
+    proc.stdout.close()
+    proc.stderr.close()
+    assert failed == {"error": failed["error"]}
+    assert failed["error"].startswith("internal error: FileNotFoundError: ")
+    assert "Traceback" in stderr and "FileNotFoundError" in stderr
+    assert again["hits"] == first["hits"]
 
 
 def test_reader_query_dsl_top_k_bound(served):
