@@ -25,8 +25,9 @@ Scale design:
     shard, so no task ever sees more than one shard's worth of any term.
   * **bucket = crc32(term) % n_buckets** — sub-shard grain so one applyInPandas
     group holds a bounded slice of a shard's vocabulary (memory-bounded,
-    group-count-bounded); the kernel loops terms inside the group with the
-    numpy codec.
+    group-count-bounded); the kernel encodes the whole group in one
+    vectorised ``codec.encode_postings`` pass, with no loop over its terms,
+    blocks or streams.
   * **Resume** — phase 2 runs in waves of shards; the checkpoint manifest is
     atomically rewritten after each wave (the parquet-side stand-in for an
     Iceberg snapshot commit). A killed build redoes only missing shards via
@@ -53,7 +54,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_LAYOUT, DEFAULT_PARAMS, BM25Params, IndexLayout
 from ..functions.tokenize import doc_terms
-from .codec import encode_posting_blocks
+from .codec import encode_postings
 from .docmap import assign_doc_ids
 from .stats import CorpusStats, floored_term_stats, term_stats
 
@@ -133,56 +134,17 @@ def term_bucket(term: str, n_buckets: int) -> int:
     return zlib.crc32(term.encode("utf-8")) % n_buckets
 
 
-def _encode_kernel(docs_per_shard: int, block_size: int, positional: bool = False):
-    # stats-independent: blocks carry (max_tf, min_dl); the WAND bound is
-    # computed at query time from CURRENT idf/avgdl (see codec.py docstring),
-    # so this kernel needs no term_stats join and no global stats.
-    cols = [
-        "shard",
-        "bucket",
-        "term",
-        "block_id",
-        "first_doc_id",
-        "last_doc_id",
-        "n_docs",
-        "max_tf",
-        "min_dl",
-        "deltas",
-        "tfs",
-    ] + (["positions"] if positional else [])
+def _encode_kernel(docs_per_shard: int, block_size: int):
+    """The (shard, bucket) group's posting blocks, all encoded in one
+    ``codec.encode_postings`` pass. Stats-independent: blocks carry
+    (max_tf, min_dl) and the WAND bound is computed at query time from
+    CURRENT idf/avgdl (see the codec docstring), so the kernel needs no
+    term_stats join and no global stats."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        bucket = int(pdf["bucket"].iloc[0])
-        base = shard * docs_per_shard
-        rows: list[dict] = []
-        for term, g in pdf.groupby("term", sort=True):
-            blocks = encode_posting_blocks(
-                g["doc_id"].to_numpy(),
-                g["tf"].to_numpy(),
-                g["doc_len"].to_numpy(),
-                shard_base=base,
-                block_size=block_size,
-                pos_lists=list(g["positions"]) if positional else None,
-            )
-            for blk in blocks:
-                row = {
-                    "shard": shard,
-                    "bucket": bucket,
-                    "term": term,
-                    "block_id": blk["block_id"],
-                    "first_doc_id": blk["first_doc_id"],
-                    "last_doc_id": blk["last_doc_id"],
-                    "n_docs": blk["n_docs"],
-                    "max_tf": blk["max_tf"],
-                    "min_dl": blk["min_dl"],
-                    "deltas": blk["deltas"],
-                    "tfs": blk["tfs"],
-                }
-                if positional:
-                    row["positions"] = blk["positions"]
-                rows.append(row)
-        return pd.DataFrame(rows, columns=cols)
+        out = encode_postings(pdf, docs_per_shard, block_size)
+        out.insert(1, "bucket", int(pdf["bucket"].iloc[0]))
+        return out
 
     return fn
 
@@ -215,7 +177,7 @@ def build_index(
     checkpoint fingerprint records it; maintenance passes it automatically).
 
     ``store_positions`` adds a per-block positions stream (Lucene .prx
-    analog; ``codec.encode_position_lists``) so phrase/proximity queries can
+    analog; gap-coded by ``codec.encode_postings``) so phrase/proximity queries can
     run from the index alone — postings grow by roughly the token count,
     the price every positional index pays. Recorded in ``corpus_stats`` and
     the fingerprint like the analyzer.
@@ -403,7 +365,7 @@ def build_index(
                     "bucket", (F.crc32(F.encode(F.col("term"), "utf-8")) % n_buckets).cast("int")
                 )
                 encoded = dt.groupBy("shard", "bucket").applyInPandas(
-                    _encode_kernel(span, layout.block_size, positional=store_positions),
+                    _encode_kernel(span, layout.block_size),
                     schema=POSTINGS_SCHEMA_POS if store_positions else POSTINGS_SCHEMA,
                 )
                 _write_postings(encoded, paths.postings)

@@ -3,8 +3,13 @@
 Pure-numpy bit twiddling (no per-element Python in the hot loops): the varint
 encoder expands each uint64 into its 7-bit groups with vectorized shifts and a
 flat ``np.cumsum``-based scatter; the decoder reconstructs values with a
-segment-id trick over the continuation bits. Runs inside the build-side
-``applyInPandas`` and the query-side kernels (SURVEY.md §4.2.1).
+segment-id trick over the continuation bits. Both directions are batched:
+``encode_postings`` sorts a build group's postings once and encodes every
+stream of every block in one ``encode_ints_many`` call (per-stream scheme
+choice by segment reductions, one varint pass, one ``packbits``), and
+``decode_postings`` decodes them back in one ``decode_ints_many`` call per
+stream kind. Runs inside the build-side ``applyInPandas`` and the query-side
+kernels (SURVEY.md §4.2.1).
 
 Block layout (one parquet row per block, flat — columnar-friendly):
     term, shard, block_id, first_doc_id, n_docs, max_tf, min_dl, deltas, tfs
@@ -31,37 +36,34 @@ O(index) rewrite per ingest batch.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 
 _BLOCK = 128
+_POW2 = np.uint64(1) << np.arange(64, dtype=np.uint64)
+
+
+def _bit_length(v: np.ndarray) -> np.ndarray:
+    """``int.bit_length`` of every value: a search over the powers of two,
+    exact at any uint64 magnitude."""
+    return np.searchsorted(_POW2, np.asarray(v, dtype=np.uint64), side="right")
+
+
+def _varint_len(v: np.ndarray) -> np.ndarray:
+    """LEB128 byte count of every value."""
+    return np.maximum(1, (_bit_length(v) + 6) // 7)
 
 
 def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-encode a uint64 array, fully vectorized."""
+    """LEB128-encode a uint64 array, fully vectorized: each value's 7-bit
+    groups, low first, the continuation bit set on all but the last."""
     v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    # number of 7-bit groups per value (at least 1)
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    nz = tmp > 0
-    while nz.any():
-        nbits[nz] += 1
-        tmp = tmp >> np.uint64(7)
-        nz = tmp > 0
-    nbytes = np.maximum(nbits, 1)
-    total = int(nbytes.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    # positions: for value i, its bytes occupy [start[i], start[i]+nbytes[i])
-    starts = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
-    # byte index within each value: build flat arrays
-    flat_val_idx = np.repeat(np.arange(v.size), nbytes)
-    within = np.arange(total) - np.repeat(starts, nbytes)
-    shifted = v[flat_val_idx] >> (within.astype(np.uint64) * np.uint64(7))
-    payload = (shifted & np.uint64(0x7F)).astype(np.uint8)
-    # continuation bit on all but the last byte of each value
-    last_byte = within == (nbytes[flat_val_idx] - 1)
-    out[:] = payload | np.where(last_byte, 0, 0x80).astype(np.uint8)
-    return out.tobytes()
+    nbytes = _varint_len(v)
+    idx = np.repeat(np.arange(v.size), nbytes)
+    within = np.arange(idx.size) - np.repeat(np.cumsum(nbytes) - nbytes, nbytes)
+    payload = (v[idx] >> (within.astype(np.uint64) * np.uint64(7))) & np.uint64(0x7F)
+    more = (within < nbytes[idx] - 1).astype(np.uint8) << 7
+    return (payload.astype(np.uint8) | more).tobytes()
 
 
 def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
@@ -87,17 +89,6 @@ def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
     return out
 
 
-def pack_bits(values: np.ndarray, width: int) -> bytes:
-    """Fixed-width little-endian bit-packing (the PFor-style dense scheme)."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0 or width == 0:
-        return b""
-    bits = ((v[:, None] >> np.arange(width, dtype=np.uint64)) & np.uint64(1)).astype(
-        np.uint8
-    )
-    return np.packbits(bits.ravel(), bitorder="little").tobytes()
-
-
 def unpack_bits(buf: bytes, width: int, count: int) -> np.ndarray:
     if count == 0 or width == 0:
         return np.zeros(count, dtype=np.uint64)
@@ -117,32 +108,14 @@ def unpack_bits(buf: bytes, width: int, count: int) -> np.ndarray:
 #              outliers (e.g. a large first-delta against the shard base, or
 #              one doc-id jump across a deleted range): scheme 1 must widen
 #              EVERY slot to the outlier's width, scheme 0 pays >=1 byte per
-#              tiny value; scheme 2 pays neither.
+#              tiny value; scheme 2 pays neither. Payload: [width u8]
+#              [exc_len u16 LE][varint: n_exc, exception position gaps,
+#              highs (value >> width)][packed low bits].
 # The encoder picks whichever is smallest for the block — the per-block
 # scheme choice is the practical core of PForDelta-family codecs.
 _SCHEME_VARINT = 0
 _SCHEME_PACKED = 1
 _SCHEME_PATCHED = 2
-
-
-def _pfor_encode(v: np.ndarray, width: int) -> bytes:
-    """scheme-2 payload for a fixed low-bit width:
-    [width u8][exc_len u16 LE][varint: n_exc, exc_positions (delta), exc_highs]
-    [packed low bits].  Positions are gap-encoded (strictly increasing), highs
-    are ``value >> width`` (>=1 by construction)."""
-    mask = np.uint64((1 << width) - 1)
-    highs = v >> np.uint64(width)
-    pos = np.flatnonzero(highs)
-    exc_stream = np.concatenate(
-        (
-            np.array([pos.size], dtype=np.uint64),
-            np.diff(pos, prepend=0).astype(np.uint64),
-            highs[pos],
-        )
-    )
-    exc = varint_encode(exc_stream)
-    packed = pack_bits(v & mask, width)
-    return bytes([width]) + len(exc).to_bytes(2, "little") + exc + packed
 
 
 def _pfor_decode(buf: bytes, count: int) -> np.ndarray:
@@ -157,31 +130,115 @@ def _pfor_decode(buf: bytes, count: int) -> np.ndarray:
     return out
 
 
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(s, s + n)`` for every ``(s, n)`` pair."""
+    return np.repeat(starts - (np.cumsum(lens) - lens), lens) + np.arange(lens.sum())
+
+
+def _exceptions(v, seg, pos, width):
+    """Patched-scheme exceptions of values ``v`` (of stream ``seg``, at
+    index ``pos`` in it) under per-value low-bit ``width``: the stream,
+    position gap and high bits of each value that overflows its width."""
+    high = v >> width.astype(np.uint64)
+    x = np.flatnonzero(high)
+    s, p = seg[x], pos[x]
+    prev = np.where(np.diff(s, prepend=-1) != 0, 0, np.roll(p, 1))
+    return s, (p - prev).astype(np.uint64), high[x]
+
+
 def encode_ints(values: np.ndarray) -> bytes:
+    """One int stream; the inverse of ``decode_ints``."""
     v = np.asarray(values, dtype=np.uint64)
-    var = varint_encode(v)
-    if v.size == 0:
-        return bytes([_SCHEME_VARINT]) + var
-    best = bytes([_SCHEME_VARINT]) + var
-    max_width = max(1, int(v.max()).bit_length())
-    if max_width <= 56:
-        packed = pack_bits(v, max_width)
-        if 2 + len(packed) < len(best):
-            best = bytes([_SCHEME_PACKED, max_width]) + packed
-        # patched candidates: low widths covering the 50th/75th/90th
-        # percentile values — exceptions absorb the tail
-        if v.size >= 4:
-            widths = {
-                max(1, int(np.partition(v, k)[k]).bit_length())
-                for k in (v.size // 2, (3 * v.size) // 4, (9 * v.size) // 10)
-            }
-            for w in widths:
-                if w >= max_width:
-                    continue
-                cand = _pfor_encode(v, w)
-                if 1 + len(cand) < len(best):
-                    best = bytes([_SCHEME_PATCHED]) + cand
-    return best
+    return encode_ints_many(v, [v.size])[0]
+
+
+def encode_ints_many(values: np.ndarray, lengths) -> np.ndarray:
+    """Encode many int streams in one pass; stream i is the next
+    ``lengths[i]`` entries of ``values``. Returns an object array of
+    ``bytes``, the input of ``decode_ints_many``.
+
+    Each stream takes its smallest candidate: varint; bit-packed at its max
+    width if that is <= 56 bits; patched at the bit widths of its
+    50th/75th/90th-percentile values (streams of >= 4 values, widths below
+    the max, exception bytes that fit the u16 header). Sizes come from
+    segment reductions over all streams. On equal sizes the first wins, in
+    the order varint, packed, then the patched widths in the iteration
+    order of a ``set`` built in percentile order: the scalar reference in
+    tests/test_codec.py, which pins the bytes. One ``varint_encode`` and
+    one ``packbits`` write every payload.
+    """
+    v = np.asarray(values, dtype=np.uint64)
+    lens = np.asarray(lengths, dtype=np.int64)
+    n, rows = lens.size, np.arange(lens.size)
+    starts = np.cumsum(lens) - lens
+    seg = np.repeat(rows, lens)
+    pos = np.arange(v.size) - starts[seg]
+    bits = _bit_length(v)
+    cost = np.full((n, 5), np.iinfo(np.int64).max)
+    cost[:, 0] = 1 + np.bincount(seg, _varint_len(v), n).astype(np.int64)
+    max_w = np.zeros(n, dtype=np.int64)
+    max_w[lens > 0] = np.maximum(1, np.maximum.reduceat(bits, starts[lens > 0]))
+    packable = (lens > 0) & (max_w <= 56)
+    cost[packable, 1] = 2 + (lens * max_w + 7)[packable] // 8
+    # percentile widths: bit length (<= 64) is monotone, so sort it within
+    # streams; each distinct width triple is tried in its set's order
+    pat = np.flatnonzero(packable & (lens >= 4))
+    sorted_bits = np.sort(seg * 65 + bits) - seg * 65
+    m = lens[pat, None]
+    k = starts[pat, None] + np.concatenate((m // 2, 3 * m // 4, 9 * m // 10), axis=1)
+    key = np.maximum(1, sorted_bits[k]) @ np.array([4096, 64, 1])
+    trip, inv = np.unique(key, return_inverse=True)
+    order = [(list({t >> 12, t >> 6 & 63, t & 63}) + [0, 0])[:3] for t in trip.tolist()]
+    cand = np.zeros((n, 3), dtype=np.int64)
+    cand[pat] = np.array(order, dtype=np.int64).reshape(-1, 3)[inv.ravel()]
+    cand[cand >= max_w[:, None]] = 0
+    exc_len = np.zeros((n, 3), dtype=np.int64)
+    for c in range(3):
+        el = (cand[:, c] > 0)[seg]
+        s, gaps, highs = _exceptions(v[el], seg[el], pos[el], cand[seg[el], c])
+        exc_len[:, c] = _varint_len(np.bincount(s, minlength=n)) + np.bincount(
+            s, _varint_len(gaps) + _varint_len(highs), n
+        ).astype(np.int64)
+        ok = (cand[:, c] > 0) & (exc_len[:, c] <= 0xFFFF)
+        cost[ok, 2 + c] = 4 + exc_len[ok, c] + (lens * cand[:, c] + 7)[ok] // 8
+    pick = np.argmin(cost, axis=1)
+    size = cost[rows, pick]
+    off = np.cumsum(size) - size
+    var, packs, patched = pick == 0, pick >= 1, pick >= 2
+    width = np.where(patched, cand[rows, np.clip(pick - 2, 0, 2)], max_w)
+    exc = np.where(patched, exc_len[rows, np.clip(pick - 2, 0, 2)], 0)
+    out = np.zeros(int(size.sum()), dtype=np.uint8)
+    out[off] = np.minimum(pick, _SCHEME_PATCHED)
+    out[off[packs] + 1] = width[packs]
+    out[off[patched] + 2] = exc[patched] & 0xFF
+    out[off[patched] + 3] = exc[patched] >> 8
+    # one varint pass: the varint streams, then the exception streams
+    el = patched[seg]
+    s, gaps, highs = _exceptions(v[el], seg[el], pos[el], width[seg[el]])
+    cnt = np.bincount(s, minlength=n)
+    xlen = np.where(patched, 1 + 2 * cnt, 0)
+    xs = np.zeros(int(xlen.sum()), dtype=np.uint64)
+    xo = np.cumsum(xlen) - xlen
+    xs[xo[patched]] = cnt[patched]
+    r = xo[s] + 1 + np.arange(s.size) - (np.cumsum(cnt) - cnt)[s]
+    xs[r], xs[r + cnt[s]] = gaps, highs
+    dest = (_ranges(off[var] + 1, size[var] - 1), _ranges(off[patched] + 4, exc[patched]))
+    varints = varint_encode(np.concatenate((v[var[seg]], xs)))
+    out[np.concatenate(dest)] = np.frombuffer(varints, dtype=np.uint8)
+    # one packbits pass: the low ``width`` bits of every packed or patched
+    # stream's values, each stream's payload starting on a byte
+    el = packs[seg]
+    w = width[seg[el]]
+    plen = np.where(packs, (lens * width + 7) // 8, 0)
+    bit0 = ((np.cumsum(plen) - plen) * 8)[seg[el]] + pos[el] * w
+    j = np.arange(w.sum()) - np.repeat(np.cumsum(w) - w, w)
+    bitbuf = np.zeros(int(plen.sum()) * 8, dtype=np.uint8)
+    bitbuf[np.repeat(bit0, w) + j] = (np.repeat(v[el], w) >> j.astype(np.uint64)) & np.uint64(1)
+    dest = np.where(patched, off + 4 + exc, off + 2)
+    out[_ranges(dest[packs], plen[packs])] = np.packbits(bitbuf, bitorder="little")
+    ends = pa.py_buffer(np.concatenate(([0], np.cumsum(size))))
+    binary = pa.Array.from_buffers(pa.large_binary(), n, [None, ends, pa.py_buffer(out)])
+    return binary.to_numpy(zero_copy_only=False)
 
 
 def decode_ints(buf: bytes, count: int | None = None) -> np.ndarray:
@@ -294,40 +351,6 @@ def decode_ints_many(bufs: list, counts: list[int]) -> list[np.ndarray]:
     return out
 
 
-def encode_doc_ids(doc_ids: np.ndarray, base: int) -> bytes:
-    """Delta-encode a sorted doc_id array relative to ``base``."""
-    d = np.asarray(doc_ids, dtype=np.int64)
-    deltas = np.empty(d.shape, dtype=np.uint64)
-    if d.size:
-        deltas[0] = np.uint64(d[0] - base)
-        deltas[1:] = np.diff(d).astype(np.uint64)
-    return encode_ints(deltas)
-
-
-def encode_position_lists(pos_lists: list) -> bytes:
-    """Encode per-doc position lists (1-based, strictly increasing) as one
-    delta stream: each list's first element is absolute, the rest are gaps.
-    Segment lengths are NOT stored — they are the block's tfs, which the
-    posting block already carries (Lucene's .prx makes the same bet)."""
-    if not pos_lists:
-        return encode_ints(np.zeros(0, dtype=np.uint64))
-    lens = np.array([len(p) for p in pos_lists], dtype=np.int64)
-    p_all = np.concatenate([np.asarray(p, dtype=np.int64) for p in pos_lists])
-    prev = np.concatenate(([0], p_all[:-1]))
-    starts = np.cumsum(lens) - lens
-    prev[starts] = 0
-    return encode_ints((p_all - prev).astype(np.uint64))
-
-
-def decode_position_lists(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
-    """Inverse of ``encode_position_lists``; ``tfs`` gives segment lengths."""
-    tfs = np.asarray(tfs, dtype=np.int64)
-    total = int(tfs.sum())
-    if total == 0:
-        return [np.zeros(0, dtype=np.int64) for _ in tfs]
-    return _split_position_lists(decode_ints(buf, total).astype(np.int64), tfs)
-
-
 def _split_position_lists(vals: np.ndarray, tfs: np.ndarray) -> list[np.ndarray]:
     """Per-doc absolute positions from a decoded positions stream: segment
     lengths are ``tfs``, each segment's first value is absolute and the rest
@@ -369,47 +392,54 @@ def block_score_bound(
     return bm25_term_bound(max_tf, min_dl, idf, k1, b, avgdl)
 
 
-def encode_posting_blocks(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    doc_lens: np.ndarray,
-    shard_base: int,
-    block_size: int = _BLOCK,
-    pos_lists: list | None = None,
-) -> list[dict]:
-    """Split one term's sorted shard postings into compressed blocks.
+def encode_postings(frame, docs_per_shard: int, block_size: int = _BLOCK) -> pd.DataFrame:
+    """Posting blocks of many (term, shard) chains; the inverse of
+    ``decode_postings``.
 
-    Returns a list of dicts ready to become parquet rows:
-    {block_id, first_doc_id, last_doc_id, n_docs, max_tf, min_dl, deltas, tfs
-    [, positions]}. Blocks depend only on the shard's own (doc_id, tf,
-    doc_len) — never on global stats — so incremental maintenance touches
-    only changed shards. ``pos_lists`` (aligned with the input arrays) adds
-    a per-block positions stream (``encode_position_lists``) for
-    phrase/proximity serving.
+    ``frame`` is a pandas DataFrame with one row per posting, in any order:
+    shard, term, doc_id, tf, doc_len, plus positions (the posting's ``tf``
+    increasing 1-based positions) for a positional index; other columns are
+    ignored. Returns one row per block in (shard, term, block_id) order:
+    shard, term, block_id, first_doc_id, last_doc_id, n_docs, max_tf,
+    min_dl, deltas, tfs [, positions]. Blocks depend only on the shard's
+    own postings, never on global stats, so maintenance re-encodes only the
+    shards that changed.
+
+    One sort by (shard, term, doc_id) lines the chains up; a block starts
+    at every ``block_size``-th posting of a chain. The delta stream is the
+    chain's ``diff``, taken from the shard base at the chain's start; a
+    position stream gap-codes each posting's list from an absolute first
+    position. All streams encode in one ``encode_ints_many`` call.
     """
-    order = np.argsort(doc_ids, kind="stable")
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)[order]
-    tfs = np.asarray(tfs, dtype=np.int64)[order]
-    doc_lens = np.asarray(doc_lens, dtype=np.int64)[order]
-    if pos_lists is not None:
-        pos_lists = [pos_lists[i] for i in order]
-    out = []
-    for bi, start in enumerate(range(0, len(doc_ids), block_size)):
-        sl = slice(start, start + block_size)
-        ids = doc_ids[sl]
-        row = {
-            "block_id": bi,
-            "first_doc_id": int(ids[0]),
-            "last_doc_id": int(ids[-1]),
-            "n_docs": int(len(ids)),
-            "max_tf": int(tfs[sl].max()),
-            "min_dl": int(doc_lens[sl].min()),
-            "deltas": encode_doc_ids(ids, shard_base if start == 0 else int(doc_ids[start - 1])),
-            "tfs": encode_ints(tfs[sl].astype(np.uint64)),
-        }
-        if pos_lists is not None:
-            row["positions"] = encode_position_lists(pos_lists[sl])
-        out.append(row)
+    codes, terms = pd.factorize(frame["term"].to_numpy(), sort=True)
+    cols = (frame[c].to_numpy(dtype=np.int64) for c in ("shard", "doc_id", "tf", "doc_len"))
+    shard, ids, tf, dl = cols
+    order = np.lexsort((ids, codes, shard))
+    codes, shard, ids, tf, dl = (a[order] for a in (codes, shard, ids, tf, dl))
+    n = ids.size
+    chain0 = np.flatnonzero((np.diff(codes, prepend=-1) != 0) | (np.diff(shard, prepend=-1) != 0))
+    rank = np.arange(n) - np.repeat(chain0, np.diff(chain0, append=n))
+    b0 = np.flatnonzero(rank % block_size == 0)
+    n_docs = np.diff(b0, append=n)
+    deltas = np.diff(ids, prepend=0)
+    deltas[chain0] = ids[chain0] - shard[chain0] * docs_per_shard
+    values, lengths = [deltas, tf], [n_docs, n_docs]
+    positional = "positions" in frame.columns
+    if positional and n:
+        flat = np.concatenate(frame["positions"].to_numpy()[order]).astype(np.int64)
+        first = np.cumsum(tf) - tf
+        values.append(np.diff(flat, prepend=0))
+        values[-1][first] = flat[first]
+        lengths.append(np.add.reduceat(tf, b0))
+    streams = encode_ints_many(np.concatenate(values), np.concatenate(lengths))
+    out = pd.DataFrame({
+        "shard": shard[b0], "term": terms[codes[b0]], "block_id": rank[b0] // block_size,
+        "first_doc_id": ids[b0], "last_doc_id": ids[b0 + n_docs - 1], "n_docs": n_docs,
+        "max_tf": np.maximum.reduceat(tf, b0), "min_dl": np.minimum.reduceat(dl, b0),
+        "deltas": streams[: b0.size], "tfs": streams[b0.size : 2 * b0.size],
+    })
+    if positional:
+        out["positions"] = streams[2 * b0.size :]
     return out
 
 

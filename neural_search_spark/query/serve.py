@@ -701,10 +701,15 @@ class IndexReader:
         sa = request.get("search_after")
         sa = (float(sa[0]), int(sa[1])) if sa is not None else None
         (kind, body), = q.items()
+        if kind in ("match", "match_phrase"):
+            text = body["query"] if isinstance(body, dict) else str(body)
+            if not isinstance(text, str):
+                raise ValueError(
+                    f"{kind}.query must be a string, got {type(text).__name__}"
+                )
         if kind == "match":
             if isinstance(body, dict) and body.get("similarity", "bm25") != "bm25":
                 raise ValueError("only the bm25 similarity serves replica-side")
-            text = body["query"] if isinstance(body, dict) else str(body)
             return self.query(
                 text, top_k=top_k, positive_only=positive_only,
                 offset=offset, search_after=sa,
@@ -725,7 +730,6 @@ class IndexReader:
                 min_should_match=int(body.get("minimum_should_match", 0)),
             )
         if kind == "match_phrase":
-            text = body["query"] if isinstance(body, dict) else str(body)
             slop = int(body.get("slop", 0)) if isinstance(body, dict) else 0
             if slop == 0:
                 return self.query_phrase(text, top_k=top_k)

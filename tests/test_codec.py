@@ -8,15 +8,96 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from neural_search_spark.index.codec import (
+    _split_position_lists,
     bm25_term_bound,
     decode_ints,
-    decode_position_lists,
     decode_postings,
-    encode_doc_ids,
-    encode_posting_blocks,
+    encode_ints_many,
+    encode_postings,
     varint_decode,
     varint_encode,
 )
+
+
+def pack_bits(values: np.ndarray, width: int) -> bytes:
+    """Fixed-width little-endian bit-packing of one stream."""
+    v = np.asarray(values, dtype=np.uint64)
+    if v.size == 0 or width == 0:
+        return b""
+    bits = ((v[:, None] >> np.arange(width, dtype=np.uint64)) & np.uint64(1)).astype(
+        np.uint8
+    )
+    return np.packbits(bits.ravel(), bitorder="little").tobytes()
+
+
+def _pfor_encode(v: np.ndarray, width: int) -> bytes | None:
+    """Scheme-2 payload [width u8][exc_len u16 LE][varint: n_exc, position
+    gaps, highs][packed low bits], or None when the exception bytes do not
+    fit the u16 header."""
+    highs = v >> np.uint64(width)
+    pos = np.flatnonzero(highs)
+    exc_stream = np.concatenate(
+        (
+            np.array([pos.size], dtype=np.uint64),
+            np.diff(pos, prepend=0).astype(np.uint64),
+            highs[pos],
+        )
+    )
+    exc = varint_encode(exc_stream)
+    if len(exc) > 0xFFFF:
+        return None
+    packed = pack_bits(v & np.uint64((1 << width) - 1), width)
+    return bytes([width]) + len(exc).to_bytes(2, "little") + exc + packed
+
+
+def _candidates(values) -> list[bytes]:
+    """Every encoding the int codec considers for one stream, in its trial
+    order: varint; packed at the max width (<= 56 bits); patched at the
+    distinct 50th/75th/90th-percentile widths below it, in set order."""
+    v = np.asarray(values, dtype=np.uint64)
+    out = [bytes([0]) + varint_encode(v)]
+    if v.size == 0:
+        return out
+    max_width = max(1, int(v.max()).bit_length())
+    if max_width <= 56:
+        out.append(bytes([1, max_width]) + pack_bits(v, max_width))
+        if v.size >= 4:
+            widths = {
+                max(1, int(np.partition(v, k)[k]).bit_length())
+                for k in (v.size // 2, (3 * v.size) // 4, (9 * v.size) // 10)
+            }
+            cands = (_pfor_encode(v, w) for w in widths if w < max_width)
+            out += [bytes([2]) + c for c in cands if c is not None]
+    return out
+
+
+def encode_ints_ref(values) -> bytes:
+    """The scalar reference encoder: the first smallest candidate (a later
+    candidate wins only if strictly smaller). ``encode_ints_many`` must
+    match it byte for byte."""
+    return min(_candidates(values), key=len)
+
+
+def decode_position_lists(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
+    """One block's position stream back to per-doc lists; ``tfs`` gives
+    the segment lengths."""
+    tfs = np.asarray(tfs, dtype=np.int64)
+    total = int(tfs.sum())
+    if total == 0:
+        return [np.zeros(0, dtype=np.int64) for _ in tfs]
+    return _split_position_lists(decode_ints(buf, total).astype(np.int64), tfs)
+
+
+def _blocks(ids, tfs, dls, shard, span, block_size=128, pos=None) -> list[dict]:
+    """One (term, shard) chain's block rows from ``encode_postings``, in
+    block_id order."""
+    frame = pd.DataFrame(
+        {"shard": shard, "term": "t", "doc_id": ids, "tf": tfs, "doc_len": dls}
+    )
+    if pos is not None:
+        frame["positions"] = pd.Series(list(pos), dtype=object)
+    blocks = encode_postings(frame, span, block_size)
+    return blocks.drop(columns=["shard", "term"]).to_dict("records")
 
 
 def _doc_ids(buf: bytes, base: int, count: int) -> np.ndarray:
@@ -83,7 +164,8 @@ def test_doc_id_delta_roundtrip(ids):
     ids = np.array(sorted(ids), dtype=np.int64)
     base = int(ids[0]) - 1 if ids[0] > 0 else 0
     # delta coding requires first >= base
-    buf = encode_doc_ids(ids, 0)
+    [blk] = _blocks(ids, 1, 1, 1, 0, block_size=len(ids))
+    buf = blk["deltas"]
     assert (_doc_ids(buf, 0, len(ids)) == ids).all()
 
 
@@ -95,7 +177,7 @@ def test_posting_block_roundtrip_and_bounds():
     doc_ids = np.sort(rng.choice(np.arange(100000, 165536), size=n, replace=False))
     tfs = rng.integers(1, 30, size=n)
     dls = rng.integers(20, 400, size=n)
-    blocks = encode_posting_blocks(doc_ids, tfs, dls, shard_base=100000, block_size=128)
+    blocks = _blocks(doc_ids, tfs, dls, 1, 100000, block_size=128)
     got = decode_postings(_block_table({("t", 1): blocks}), docs_per_shard=100000)
     got_ids, got_tfs = got[("t", 1)]
     assert (got_ids == doc_ids).all()
@@ -119,13 +201,14 @@ def test_posting_block_roundtrip_and_bounds():
 def test_compression_is_compact():
     # dense consecutive ids: all deltas are 1 -> bit-packed at 1 bit/delta
     ids = np.arange(50000, 51000, dtype=np.int64)
-    buf = encode_doc_ids(ids, 50000 - 1)
+    [blk] = _blocks(ids, 1, 1, 1, 50000 - 1, block_size=len(ids))
+    buf = blk["deltas"]
     assert len(buf) == 2 + 1000 // 8  # scheme byte + width byte + packed bits
     assert (_doc_ids(buf, 50000 - 1, 1000) == ids).all()
 
 
 def test_bitpack_roundtrip():
-    from neural_search_spark.index.codec import pack_bits, unpack_bits
+    from neural_search_spark.index.codec import unpack_bits
 
     rng = np.random.default_rng(3)
     for width in (1, 4, 7, 13, 32, 56):
@@ -158,7 +241,7 @@ def test_encode_ints_picks_smaller_scheme():
 
 
 def test_patched_pfor_wins_on_outlier_blocks():
-    from neural_search_spark.index.codec import decode_ints, encode_ints, pack_bits, varint_encode
+    from neural_search_spark.index.codec import decode_ints, encode_ints
 
     # the PFor sweet spot: a block of tiny gaps with a few large outliers —
     # fixed-width must widen every slot, varint pays a byte per tiny value
@@ -204,14 +287,11 @@ def test_position_lists_roundtrip_property(raw_lists):
     """Position streams roundtrip for arbitrary per-doc position lists
     (sorted+deduped to the strictly-increasing invariant the tokenizer
     guarantees)."""
-    from neural_search_spark.index.codec import (
-        decode_position_lists,
-        encode_position_lists,
-    )
-
     pos_lists = [np.unique(np.asarray(xs, dtype=np.int64)) for xs in raw_lists]
     tfs = np.array([len(p) for p in pos_lists], dtype=np.int64)
-    got = decode_position_lists(encode_position_lists(pos_lists), tfs)
+    # every list one posting of one block; no postings, no block
+    blocks = _blocks(np.arange(tfs.size), tfs, tfs, 0, 1, max(1, tfs.size), pos_lists)
+    got = decode_position_lists(blocks[0]["positions"] if blocks else b"", tfs)
     assert len(got) == len(pos_lists)
     for a, b in zip(got, pos_lists):
         assert np.array_equal(a, b)
@@ -242,9 +322,7 @@ def test_positional_block_roundtrip_property(rows, block_size):
         np.sort(rng.choice(np.arange(1, 10_000), size=t, replace=False))
         for t in tfs
     ]
-    blocks = encode_posting_blocks(
-        ids, tfs, dls, shard_base=base, block_size=block_size, pos_lists=pos
-    )
+    blocks = _blocks(ids, tfs, dls, 1, base, block_size=block_size, pos=pos)
     [(gi, gt, gp)] = decode_postings(_block_table({("t", 1): blocks}), base).values()
     assert np.array_equal(gi, ids) and np.array_equal(gt, tfs)
     for a, b in zip(gp, pos):
@@ -284,9 +362,9 @@ def test_decode_postings_equals_block_chain(positional, arrow):
                 if positional
                 else None
             )
-            chains[(term, shard)] = encode_posting_blocks(
-                ids, tfs, tfs + 10, shard * span,
-                block_size=int(rng.choice([8, 32, 128])), pos_lists=pos,
+            chains[(term, shard)] = _blocks(
+                ids, tfs, tfs + 10, shard, span,
+                block_size=int(rng.choice([8, 32, 128])), pos=pos,
             )
     schemes = {blk["deltas"][0] for blocks in chains.values() for blk in blocks}
     assert schemes == {0, 1, 2}
@@ -371,3 +449,138 @@ def test_decode_ints_many_equals_per_buffer():
     for g, buf, c, a in zip(got, bufs, counts, arrays):
         ref = decode_ints(buf, c)
         assert g.dtype == np.uint64 and np.array_equal(g, ref) and np.array_equal(g, a)
+
+
+def _outlier_stream(small: list, outliers: list, at: list) -> list:
+    """Tiny values with a few large ones inserted at drawn indices."""
+    out = list(small)
+    for x, i in zip(outliers, at):
+        out.insert(i % (len(out) + 1), x)
+    return out
+
+
+_STREAMS = st.one_of(
+    st.just([]),
+    st.integers(1, 200).map(lambda n: [0] * n),
+    st.lists(st.integers(0, 2**64 - 1), min_size=1, max_size=3),
+    st.builds(
+        _outlier_stream,
+        st.lists(st.integers(0, 7), min_size=4, max_size=200),
+        st.lists(st.integers(2**8, 2**56), min_size=1, max_size=5),
+        st.lists(st.integers(0, 200), min_size=5, max_size=5),
+    ),
+    # max widths 55, 56 (packed and patched allowed) and 57-64 (varint only)
+    st.integers(55, 64).flatmap(
+        lambda w: st.lists(st.integers(0, 2**w - 1), max_size=40).map(
+            lambda xs: xs + [2 ** (w - 1)]
+        )
+    ),
+    # few distinct bit lengths: candidates often tie on size
+    st.tuples(st.integers(0, 7), st.integers(8, 15), st.integers(16, 40)).flatmap(
+        lambda ws: st.lists(st.sampled_from(ws), min_size=4, max_size=40).map(
+            lambda bs: [(1 << b) - 1 for b in bs]
+        )
+    ),
+)
+
+
+@given(st.lists(_STREAMS, max_size=12))
+@settings(max_examples=200, deadline=None)
+def test_encode_ints_many_matches_reference(streams):
+    """Each stream of one batched call is byte-identical to the scalar
+    reference encoder, and decodes back."""
+    from neural_search_spark.index.codec import decode_ints_many
+
+    arrays = [np.array(s, dtype=np.uint64) for s in streams]
+    lens = [a.size for a in arrays]
+    values = np.concatenate(arrays) if arrays else np.zeros(0, dtype=np.uint64)
+    got = encode_ints_many(values, lens)
+    assert len(got) == len(arrays)
+    for g, a in zip(got, arrays):
+        assert g == encode_ints_ref(a), a.tolist()
+    for d, a in zip(decode_ints_many(list(got), lens), arrays):
+        assert np.array_equal(d, a)
+
+
+def test_encode_ints_many_breaks_ties_like_the_reference():
+    """Equal-size candidates: the first in trial order wins. Here the
+    patched widths 1 and 8 tie, and the set the widths are tried from
+    iterates 8 before 1, against their numeric order."""
+    v = np.array(
+        [255, 0, 255, 255, 0, 0, 0, 255, 2**30 - 1, 0, 0, 255, 255, 0, 0, 255,
+         255, 0, 255, 0, 0, 2**30 - 1, 255, 0, 255, 0, 0, 0],
+        dtype=np.uint64,
+    )
+    sizes = {c[1]: len(c) for c in _candidates(v) if c[0] == 2}
+    assert sizes[1] == sizes[8] == min(len(c) for c in _candidates(v))
+    assert encode_ints_many(v, [v.size])[0] == encode_ints_ref(v)
+    rng = np.random.default_rng(0)
+    streams = [
+        (1 << rng.choice([0, 1, 8, 30], size=int(rng.integers(4, 40)))) - 1
+        for _ in range(2000)
+    ]
+    got = encode_ints_many(np.concatenate(streams), [s.size for s in streams])
+    assert [g for g in got] == [encode_ints_ref(s) for s in streams]
+
+
+def test_patched_candidate_over_u16_header_is_skipped():
+    """A patched candidate whose exception bytes overflow the u16 header is
+    not tried: the stream still encodes and round-trips."""
+    from neural_search_spark.index.codec import encode_ints
+
+    v = np.zeros(100_000, dtype=np.uint64)
+    v[::3] = 1 << 20
+    b = encode_ints(v)
+    assert b == encode_ints_ref(v)
+    assert np.array_equal(decode_ints(b, v.size), v)
+
+
+@pytest.mark.parametrize("positional", [False, True])
+def test_encode_kernel_blocks_equal_reference(positional):
+    """The build's (shard, bucket) kernel on a fixed group: every block's
+    streams equal the reference encoding of its slice of the input, and its
+    metadata equals the slice's values. Terms of 1, block_size and
+    block_size + 1 postings, a chain long enough for a patched delta
+    stream, a nonzero shard base, rows in shuffled order."""
+    from neural_search_spark.index.build import POSTINGS_SCHEMA, _encode_kernel
+
+    span, bs, shard = 1 << 16, 128, 3
+    base = shard * span
+    rng = np.random.default_rng(4)
+    ids = {
+        "t1": base + rng.choice(span, 1, replace=False),
+        "t128": base + rng.choice(span, bs, replace=False),
+        "t129": base + rng.choice(span, bs + 1, replace=False),
+        "tjump": base + 5 + np.arange(2 * bs + 3) + (np.arange(2 * bs + 3) > 60) * 40_000,
+    }
+    frame = pd.DataFrame(
+        [(t, int(d)) for t, ds in ids.items() for d in ds], columns=["term", "doc_id"]
+    )
+    frame["tf"] = rng.integers(1, 6, len(frame))
+    frame["doc_len"] = frame["tf"] + rng.integers(0, 300, len(frame))
+    if positional:
+        frame["positions"] = pd.Series(
+            [np.sort(rng.choice(np.arange(1, dl + 1), tf, replace=False))
+             for tf, dl in zip(frame["tf"], frame["doc_len"])],
+            dtype=object,
+        )
+    frame = frame.sample(frac=1.0, random_state=1).assign(shard=shard, bucket=7)
+    out = _encode_kernel(span, bs)(frame)
+    cols = [c.split()[0] for c in POSTINGS_SCHEMA.split(", ")]
+    assert list(out.columns) == cols + ["positions"] * positional
+    assert len(out) == sum(-(-len(ds) // bs) for ds in ids.values())
+    assert (out["shard"] == shard).all() and (out["bucket"] == 7).all()
+    for row in out.itertuples():
+        g = frame[frame["term"] == row.term].sort_values("doc_id")
+        lo = row.block_id * bs
+        sl = g.iloc[lo : lo + bs]
+        prev = base if lo == 0 else int(g["doc_id"].iloc[lo - 1])
+        d = sl["doc_id"].to_numpy()
+        assert row.deltas == encode_ints_ref(np.diff(d, prepend=prev))
+        assert row.tfs == encode_ints_ref(sl["tf"])
+        if positional:
+            gaps = np.concatenate([np.diff(p, prepend=0) for p in sl["positions"]])
+            assert row.positions == encode_ints_ref(gaps)
+        assert (row.first_doc_id, row.last_doc_id, row.n_docs) == (d[0], d[-1], d.size)
+        assert (row.max_tf, row.min_dl) == (sl["tf"].max(), sl["doc_len"].min())
+    assert set(out["deltas"].str[0]) == {0, 1, 2}

@@ -1226,6 +1226,33 @@ def test_cli_serve_survives_malformed_lines(served):
     assert b"Traceback" not in proc.stderr
 
 
+def test_cli_serve_match_query_must_be_a_string(served):
+    """A non-string ``match``/``match_phrase`` query answers a request error
+    that names the field, not an ``internal error``, and the replica keeps
+    serving."""
+    import json
+    import subprocess
+    import sys
+
+    _, reader = served
+    lines = [
+        '{"dsl": {"query": {"match": {"query": 5}}}}',
+        '{"dsl": {"query": {"match_phrase": {"query": ["w0005"]}}}}',
+        '{"dsl": {"query": {"match": {"query": "w0005"}}}}',
+    ]
+    proc = subprocess.run(
+        [sys.executable, "-m", "neural_search_spark.cli", "serve",
+         "--index", reader.root],
+        input="\n".join(lines) + "\n", capture_output=True, text=True,
+        timeout=300, cwd=REPO_ROOT,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    out = [json.loads(ln) for ln in proc.stdout.splitlines()]
+    assert out[0] == {"error": "match.query must be a string, got int"}
+    assert out[1] == {"error": "match_phrase.query must be a string, got list"}
+    assert out[2]["hits"]
+
+
 def test_cli_serve_internal_error_is_one_reply(served, tmp_path):
     """A fault that is not the request's own (here a ``:refresh`` of an
     index that lost its corpus_stats) answers one ``internal error`` line
