@@ -44,27 +44,13 @@ def _spark(app: str):
 # request (api/search.py:89-98). Out-of-range is a request ERROR line (the
 # analog of the reference's 422), never a silent clamp — callers must see
 # their bound.
-from .config import MAX_TOP_K
+from .config import MAX_TOP_K, float_field, int_field
 
 BATCH_MAX = 100
 
 
-def _number(value, name: str, cast=int):
-    """``cast(value)`` for request field ``name``. A value the cast refuses
-    (null, a list, text) or cannot hold (``1e400`` as an int, a 400-digit
-    int as a float) is a ValueError that names the field."""
-    try:
-        return cast(value)
-    except (TypeError, ValueError, OverflowError):
-        kind = "an integer" if cast is int else "a number"
-        raise ValueError(f"{name} must be {kind}, got {value!r}") from None
-
-
 def _req_top_k(req: dict, default: int) -> int:
-    k = _number(req.get("top_k", default), "top_k")
-    if not 1 <= k <= MAX_TOP_K:
-        raise ValueError(f"top_k must be in [1, {MAX_TOP_K}], got {k}")
-    return k
+    return int_field(req.get("top_k", default), "top_k", 1, MAX_TOP_K)
 
 
 def _req_query_text(req: dict) -> str:
@@ -605,7 +591,7 @@ def _serve_near(s, req) -> dict:
     # from a positional index; ordered=true requires the terms in query
     # order (SpanNear inOrder)
     nh = s.reader.query_near(
-        req["near"], max_span=_number(req["span"], "span"),
+        req["near"], max_span=int_field(req["span"], "span"),
         top_k=_req_top_k(req, s.args.top_k), ordered=bool(req.get("ordered")),
     )
     return {"near": req["near"],
@@ -618,7 +604,7 @@ def _serve_mget(s, req) -> dict:
     ids = req["mget"]
     if not isinstance(ids, list):
         raise ValueError("mget must be a list of doc ids")
-    docs = s.reader.hydrate([_number(d, "mget") for d in ids])
+    docs = s.reader.hydrate([int_field(d, "mget") for d in ids])
     return {"docs": [{"doc_id": d, **rec} for d, rec in sorted(docs.items())]}
 
 
@@ -626,7 +612,7 @@ def _serve_termvectors(s, req) -> dict:
     # {"termvectors": doc_id, "positions"?: bool}: the ES _termvectors
     # analog, recovered from the lossless index
     return s.reader.term_vector(
-        _number(req["termvectors"], "termvectors"),
+        int_field(req["termvectors"], "termvectors"),
         positions=bool(req.get("positions")),
     )
 
@@ -643,7 +629,7 @@ def _serve_dsl(s, req) -> dict:
 def _serve_explain(s, req) -> dict:
     # {"explain": "<query text>", "doc_id": id}: the ES _explain analog, the
     # per-term score breakdown of one (query, doc) pair
-    return s.reader.explain(str(req["explain"]), _number(req["doc_id"], "doc_id"))
+    return s.reader.explain(str(req["explain"]), int_field(req["doc_id"], "doc_id"))
 
 
 def _serve_percolate(s, req) -> dict:
@@ -657,9 +643,9 @@ def _serve_percolate(s, req) -> dict:
 def _serve_more_like_this(s, req) -> dict:
     # {"more_like_this": doc_id, "m"?: int, "top_k"?: int}: docs similar to
     # an indexed doc (Lucene MLT), its term vector read from the index
-    doc_id = _number(req["more_like_this"], "more_like_this")
+    doc_id = int_field(req["more_like_this"], "more_like_this")
     hits = s.reader.more_like_this(
-        doc_id, m=_number(req.get("m", 10), "m"),
+        doc_id, m=int_field(req.get("m", 10), "m", 1),
         top_k=_req_top_k(req, s.args.top_k), positive_only=not s.args.match_all,
     )
     return {"more_like_this": doc_id, "hits": _hits(hits)}
@@ -668,7 +654,7 @@ def _serve_more_like_this(s, req) -> dict:
 def _serve_suggest(s, req) -> dict:
     # {"suggest": str, "n"?: int}: fuzzy vocabulary suggestion ("did you
     # mean") -> [(term, distance, df)]
-    sug = s.reader.suggest(req["suggest"], n=_number(req.get("n", 3), "n"))
+    sug = s.reader.suggest(req["suggest"], n=int_field(req.get("n", 3), "n", 1))
     return {"suggest": req["suggest"],
             "suggestions": [{"term": t, "distance": d, "df": df} for t, d, df in sug]}
 
@@ -709,11 +695,9 @@ def _serve_query(s, req) -> dict:
     else:
         text = _req_query_text(req)
         kw["top_k"] = _req_top_k(req, s.args.top_k)
-        kw["offset"] = _number(req.get("offset", 0), "offset")
-        if kw["offset"] < 0:
-            # checked here too: a query with no known term never reaches
-            # the reader's own check
-            raise ValueError(f"offset must be >= 0, got {kw['offset']}")
+        # checked here too: a query with no known term never reaches the
+        # reader's own check
+        kw["offset"] = int_field(req.get("offset", 0), "offset", 0)
         allowed = req.get("filter_ids")
         if allowed is not None and not (
             isinstance(allowed, list)
@@ -725,15 +709,15 @@ def _serve_query(s, req) -> dict:
         if sa is not None:
             if not (isinstance(sa, list) and len(sa) == 2):
                 raise ValueError("search_after must be [score, doc_id]")
-            kw["search_after"] = (_number(sa[0], "search_after[0]", float),
-                                  _number(sa[1], "search_after[1]"))
-        msm = _number(req.get("minimum_should_match", 0), "minimum_should_match")
-        collapse = _number(req.get("collapse_hosts", 0), "collapse_hosts")
+            kw["search_after"] = (float_field(sa[0], "search_after[0]"),
+                                  int_field(sa[1], "search_after[1]"))
+        msm = int_field(req.get("minimum_should_match", 0), "minimum_should_match", 0)
+        collapse = int_field(req.get("collapse_hosts", 0), "collapse_hosts", 0)
         if req.get("bool"):
             kw["min_should_match"] = msm
         elif collapse:
             kw["collapse_hosts"] = collapse
-        window = (_number(req["snippet_window"], "snippet_window")
+        window = (int_field(req["snippet_window"], "snippet_window", 1)
                   if "snippet_window" in req else None)
     t0 = time.perf_counter()
     hits = (s.reader.query_bool if req.get("bool") else s.reader.query)(text, **kw)

@@ -11,6 +11,7 @@ epsilon at the ``BM25Okapi`` construction site
 from __future__ import annotations
 
 import os
+import sys
 from dataclasses import dataclass
 
 
@@ -50,6 +51,32 @@ MAX_TOP_K = 100
 HYBRID_ALPHA = 0.5
 RRF_K = 60  # /root/reference/src/neural_search/core/hybrid.py:226
 RERANK_TOP_K = 50
+
+
+def int_field(value, name: str, lo: int | None = None, hi: int | None = None) -> int:
+    """Request field ``name`` as an int inside ``[lo, hi]``: an int, or a
+    float with an integral value (JSON ``3.0``). A bool, a string, a
+    fraction, a non-finite number or a value out of range is a ValueError
+    that names the field."""
+    if isinstance(value, bool) or not isinstance(value, (int, float)) or (
+        isinstance(value, float) and not value.is_integer()
+    ):
+        raise ValueError(f"{name} must be an integer, got {value!r}")
+    value = int(value)
+    if (lo is not None and value < lo) or (hi is not None and value > hi):
+        bound = f">= {lo}" if hi is None else f"in [{lo}, {hi}]"
+        raise ValueError(f"{name} must be {bound}, got {value}")
+    return value
+
+
+def float_field(value, name: str) -> float:
+    """Request field ``name`` as a finite float; a bool, a string, NaN, an
+    infinity or an int no float holds is a ValueError that names the field."""
+    if isinstance(value, bool) or not isinstance(value, (int, float)) or not (
+        -sys.float_info.max <= value <= sys.float_info.max
+    ):
+        raise ValueError(f"{name} must be a finite number, got {value!r}")
+    return float(value)
 
 
 def default_parallelism() -> int:

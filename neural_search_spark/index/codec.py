@@ -378,6 +378,41 @@ def bm25_term_bound(
     return idf * (tf * (k1 + 1.0) / denom)
 
 
+def bm25_score_range(
+    chains: dict, doc_len: np.ndarray, lo: int, hi: int,
+    k1: float, b: float, avgdl: float, positive_only: bool,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Exact BM25 scores of the docs in ``[lo, hi)``: the one accumulator of
+    the replica (a range per shard) and the WAND kernel (one per window).
+
+    ``chains`` maps each query term to its ``(ids, tfs, qtf * idf)``, ids
+    ascending, possibly past the range; ``doc_len[i]`` is doc ``lo + i``'s
+    length. Returns ``(doc ids, scores)`` of every doc a chain reaches in the
+    range, ids ascending, cut to scores > 0 if ``positive_only``. Terms add
+    in sorted-term order, whatever the caller's order, and ``bincount`` sums
+    each doc in input order from 0.0, like a zeroed array and one ``+=`` per
+    term: every caller's scores agree bit for bit."""
+    locs, parts = [], []
+    for term in sorted(chains):
+        ids, tfs, weight = chains[term]
+        i0, i1 = ids.searchsorted((lo, hi)).tolist()
+        loc = ids[i0:i1] - lo
+        locs.append(loc)
+        parts.append(bm25_term_bound(tfs[i0:i1], doc_len[loc], weight, k1, b, avgdl))
+    loc = np.concatenate(locs)
+    if loc.size == 0:
+        return loc, np.zeros(0)
+    scores = np.bincount(loc, np.concatenate(parts))
+    touched = np.zeros(scores.size, dtype=bool)
+    touched[loc] = True
+    cand = np.flatnonzero(touched)
+    scores = scores[cand]
+    if positive_only:
+        keep = scores > 0
+        cand, scores = cand[keep], scores[keep]
+    return cand + lo, scores
+
+
 def block_score_bound(
     max_tf: np.ndarray, min_dl: np.ndarray, idf: float, k1: float, b: float, avgdl: float
 ) -> np.ndarray:

@@ -20,8 +20,9 @@ decoding. Within a visited window, scoring is exact, dense, and vectorized
 (numpy over decoded postings + the shard's doc_len array). Blocks decode
 through ``codec.decode_postings``, the one owner of the block-chain format
 (shared with the serving replica, phrase retrieval and maintenance), and
-every posting scores through ``codec.bm25_term_bound``, the replica's term
-kernel too — so the two paths agree bit for bit. The max(0, ·)
+each window scores in one ``codec.bm25_score_range`` call, the accumulator
+the replica runs per shard: terms add in sorted-term order on both paths,
+so the two agree bit for bit. The max(0, ·)
 clamp keeps the bound valid even if an epsilon-floored idf is negative
 (average_idf < 0), where a doc *lacking* the term outscores one containing it.
 
@@ -123,14 +124,11 @@ def _shard_kernel(
             for t, (_qtf, idf) in spec["terms"].items():
                 term_idf[t] = idf
 
-        # decode cache: term -> (doc_ids, tfs, per-block meta + bounds)
-        chains = codec.decode_postings(postings, docs_per_shard)
+        # decoded (ids, tfs) chains, and each term's per-block meta + bounds
+        decoded = codec.decode_postings(postings, docs_per_shard)
         by_term: dict[str, dict] = {}
         for term, g in postings.groupby("term", sort=False):
-            ids, tfs = chains[(term, shard)]
             by_term[term] = {
-                "ids": ids,
-                "tfs": tfs,
                 "first": g["first_doc_id"].to_numpy(),
                 "last": g["last_doc_id"].to_numpy(),
                 "max": codec.block_score_bound(
@@ -145,12 +143,15 @@ def _shard_kernel(
 
         n_windows = -(-docs_per_shard // window_docs)
         for spec in specs:
-            qterms = [
+            # sorted by term: the window bounds add terms in the order
+            # codec.bm25_score_range adds the exact scores
+            qterms = sorted(
                 (t, qtf, idf) for t, (qtf, idf) in spec["terms"].items() if t in by_term
-            ]
+            )
             if not qterms:
                 continue
             k = spec["top_k"]
+            chains = {t: (*decoded[(t, shard)], qtf * idf) for t, qtf, idf in qterms}
 
             # window upper bounds: each block adds its (clamped) max to every
             # window it overlaps
@@ -186,33 +187,15 @@ def _shard_kernel(
                     break  # remaining windows are provably below the kth score
                 if visited_acc is not None:
                     visited_acc.add(1)
-                lo = base + w * window_docs
-                hi = lo + window_docs
-                wscore = np.zeros(window_docs, dtype=np.float64)
-                touched = np.zeros(window_docs, dtype=bool)
-                for t, qtf, idf in qterms:
-                    meta = by_term[t]
-                    i0 = np.searchsorted(meta["ids"], lo, side="left")
-                    i1 = np.searchsorted(meta["ids"], hi, side="left")
-                    if i0 == i1:
-                        continue
-                    ids = meta["ids"][i0:i1]
-                    loc = ids - lo
-                    wscore[loc] += codec.bm25_term_bound(
-                        meta["tfs"][i0:i1], dl[ids - base], qtf * idf, k1, b, avgdl
-                    )
-                    touched[loc] = True
-                cand = np.flatnonzero(touched)
+                lo = w * window_docs
+                cand, cscores = codec.bm25_score_range(
+                    chains, dl[lo : lo + window_docs], base + lo,
+                    base + lo + window_docs, k1, b, avgdl, positive_only,
+                )
                 if cand.size == 0:
                     continue
-                cscores = wscore[cand]
-                if positive_only:
-                    pos = cscores > 0
-                    cand, cscores = cand[pos], cscores[pos]
-                    if cand.size == 0:
-                        continue
                 scores_acc.append(cscores)
-                ids_acc.append(cand + lo)
+                ids_acc.append(cand)
                 heap_scores = np.concatenate([heap_scores, cscores])
                 if heap_scores.size > k:
                     heap_scores = np.partition(heap_scores, -k)[-k:]

@@ -9,10 +9,11 @@ builds (index/build.py); ``IndexReader`` answers a query by reading ONLY the
 posting row groups whose ``term`` min/max covers a query term (a row-group
 directory taken from the file footers at ``refresh()``), decoding them with
 ``codec.decode_postings`` (the one owner of the block-chain format, shared
-with the WAND kernel, phrase retrieval and maintenance), and scoring with
-``codec.bm25_term_bound``, the same term kernel as the WAND window loop — so
-results are rank-identical to ``bm25_topk_wand`` and the DataFrame batch
-path (asserted in tests/test_serve.py).
+with the WAND kernel, phrase retrieval and maintenance), and scoring each
+shard with one ``codec.bm25_score_range`` call, the accumulator the WAND
+kernel runs per window: terms add in sorted-term order on both paths, so
+scores are bit-identical to ``bm25_topk_wand`` and ranks identical to the
+DataFrame batch path (asserted in tests/test_serve.py).
 
 Deployment shape at scale:
   * one reader per serving replica; replicas are stateless — everything
@@ -52,7 +53,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from ..config import MAX_TOP_K
+from ..config import MAX_TOP_K, float_field, int_field
 from ..functions.tokenize import _TOKEN_RE, tokenize_py
 from ..index import codec
 from .cache import TtlLruCache
@@ -691,15 +692,16 @@ class IndexReader:
         blocked = {"collapse", "function_score", "rescore", "filter"} & set(request)
         if blocked:
             raise ValueError(f"cluster-side-only request parts: {sorted(blocked)}")
-        top_k = int(request.get("top_k", 10))
         # request-boundary bound, mirroring the reference's api/schemas.py:58-73
         # (top_k ∈ [1,100]); internal callers with a legitimate larger fetch
         # (e.g. the tie-margin) use the method APIs, not the request object
-        if not 1 <= top_k <= MAX_TOP_K:
-            raise ValueError(f"top_k must be in [1, {MAX_TOP_K}], got {top_k}")
-        offset = int(request.get("offset", 0))
+        top_k = int_field(request.get("top_k", 10), "top_k", 1, MAX_TOP_K)
+        offset = int_field(request.get("offset", 0), "offset", 0)
         sa = request.get("search_after")
-        sa = (float(sa[0]), int(sa[1])) if sa is not None else None
+        if sa is not None:
+            if not (isinstance(sa, (list, tuple)) and len(sa) == 2):
+                raise ValueError("search_after must be [score, doc_id]")
+            sa = (float_field(sa[0], "search_after[0]"), int_field(sa[1], "search_after[1]"))
         (kind, body), = q.items()
         if kind in ("match", "match_phrase"):
             text = body["query"] if isinstance(body, dict) else str(body)
@@ -727,10 +729,12 @@ class IndexReader:
             return self.query_bool(
                 text, top_k=top_k, positive_only=positive_only,
                 offset=offset, search_after=sa,
-                min_should_match=int(body.get("minimum_should_match", 0)),
+                min_should_match=int_field(
+                    body.get("minimum_should_match", 0), "minimum_should_match", 0
+                ),
             )
         if kind == "match_phrase":
-            slop = int(body.get("slop", 0)) if isinstance(body, dict) else 0
+            slop = int_field(body.get("slop", 0), "slop", 0) if isinstance(body, dict) else 0
             if slop == 0:
                 return self.query_phrase(text, top_k=top_k)
             n = len(tokenize_py(text))
@@ -760,7 +764,7 @@ class IndexReader:
                 offset=offset, search_after=sa,
             )
         if kind == "more_like_this":
-            return self.more_like_this(int(body), top_k=top_k)
+            return self.more_like_this(int_field(body, "more_like_this"), top_k=top_k)
         raise ValueError(f"unsupported query kind: {kind}")
 
     # -- result hydration ----------------------------------------------------
@@ -1192,49 +1196,23 @@ class IndexReader:
             else float(self.stats["avgdl"])
         )
         span = self.docs_per_shard
-        postings = self._postings_for(sorted(qterms))
-
-        # accumulate per-shard dense score arrays (shards touched by >=1
-        # term); iteration order is sorted (term, shard) — deterministic and
-        # independent of which terms came from the cache. Each array stops at
-        # the highest local doc id the query's postings reach in that shard,
-        # so the memory a request zeroes and scans follows its postings, not
-        # the docs_per_shard span (576 KB per shard at the default layout)
-        width: dict[int, int] = {}
-        for term in qterms:
-            for shard, ids, _ in postings[term]:
-                if ids.size:
-                    top = int(ids.max()) - shard * span + 1
-                    width[shard] = max(width.get(shard, 0), top)
-        acc: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for term in sorted(qterms):
+        # each shard's chains score in one codec.bm25_score_range call over
+        # the shard's span, which fixes the term order
+        by_shard: dict[int, dict] = {}
+        for term, parts in self._postings_for(sorted(qterms)).items():
             qtf, idf = qterms[term]
-            for shard, ids, tfs in postings[term]:
-                st = self._shard_state(shard)
-                if shard not in acc:
-                    n = width.get(shard, 0)
-                    acc[shard] = (np.zeros(n, dtype=np.float64), np.zeros(n, dtype=bool))
-                scores, touched = acc[shard]
-                loc = ids - shard * span
-                scores[loc] += codec.bm25_term_bound(
-                    tfs, st.doc_len[loc], qtf * idf, k1, b, avgdl
-                )
-                touched[loc] = True
-
-        out_ids: list[np.ndarray] = []
-        out_scores: list[np.ndarray] = []
-        for shard, (scores, touched) in acc.items():
-            loc = np.flatnonzero(touched)
-            s = scores[loc]
-            if positive_only:
-                pos = s > 0
-                loc, s = loc[pos], s[pos]
-            out_ids.append(loc + shard * span)
-            out_scores.append(s)
-        if not out_ids:
+            for shard, ids, tfs in parts:
+                by_shard.setdefault(shard, {})[term] = (ids, tfs, qtf * idf)
+        if not by_shard:
             return []
-        ids = np.concatenate(out_ids)
-        scores = np.concatenate(out_scores)
+        hits = [
+            codec.bm25_score_range(
+                chains, self._shard_state(shard).doc_len, shard * span,
+                (shard + 1) * span, k1, b, avgdl, positive_only,
+            )
+            for shard, chains in by_shard.items()
+        ]
+        ids, scores = map(np.concatenate, zip(*hits))
         if allowed is not None:
             keep = np.isin(ids, allowed, assume_unique=False)
             ids, scores = ids[keep], scores[keep]

@@ -9,6 +9,7 @@ from hypothesis import strategies as st
 
 from neural_search_spark.index.codec import (
     _split_position_lists,
+    bm25_score_range,
     bm25_term_bound,
     decode_ints,
     decode_postings,
@@ -383,6 +384,60 @@ def test_decode_postings_equals_block_chain(positional, arrow):
             assert len(chain[2]) == len(ref_pos)
             assert all(np.array_equal(a, b) for a, b in zip(chain[2], ref_pos))
     assert decode_postings(table.slice(0, 0) if arrow else table.iloc[:0], span) == {}
+
+
+def score_range_ref(chains, doc_len, lo, hi, k1, b, avgdl, positive_only):
+    """Per-term accumulation over a zeroed dense array, terms in sorted
+    order: the scorer ``bm25_score_range`` must equal bit for bit."""
+    scores = np.zeros(hi - lo, dtype=np.float64)
+    touched = np.zeros(hi - lo, dtype=bool)
+    for term in sorted(chains):
+        ids, tfs, weight = chains[term]
+        keep = (ids >= lo) & (ids < hi)
+        loc = ids[keep] - lo
+        scores[loc] += bm25_term_bound(tfs[keep], doc_len[loc], weight, k1, b, avgdl)
+        touched[loc] = True
+    cand = np.flatnonzero(touched)
+    s = scores[cand]
+    if positive_only:
+        cand, s = cand[s > 0], s[s > 0]
+    return cand + lo, s
+
+
+@st.composite
+def _score_ranges(draw):
+    """Chains over a small doc universe (so they overlap), weights that may
+    be zero or negative (match mode), and a range that cuts them."""
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    base = draw(st.sampled_from([0, 64, 1 << 20]))
+    n = draw(st.integers(1, 60))
+    chains = {}
+    for term in draw(st.permutations("qwertyu"))[: draw(st.integers(1, 7))]:
+        local = np.flatnonzero(rng.random(n) < draw(st.floats(0.0, 1.0)))
+        sign = draw(st.sampled_from([0.0, -0.0, -1.0, 1.0]))
+        chains[term] = (base + local, rng.integers(1, 30, local.size), sign * rng.uniform(0.1, 12))
+    a, z = sorted(draw(st.lists(st.integers(0, n), min_size=2, max_size=2)))
+    doc_len = rng.integers(1, 400, n).astype(np.float64)
+    return chains, doc_len[a:z], base + a, base + z
+
+
+@given(_score_ranges(), st.booleans(), st.sampled_from([(1.2, 0.75), (0.9, 0.4), (2.0, 1.0)]))
+@settings(max_examples=300, deadline=None)
+def test_bm25_score_range_matches_dense_accumulation(case, positive_only, params):
+    """``bm25_score_range`` returns the same candidates and bit-identical
+    scores as a zeroed array with one ``+=`` per sorted term, for any
+    order the chains come in: zero-score docs stay candidates in match
+    mode, and a chain cut by the range contributes only its in-range ids."""
+    chains, doc_len, lo, hi = case
+    k1, b = params
+    want_ids, want = score_range_ref(chains, doc_len, lo, hi, k1, b, 37.5, positive_only)
+    for order in (list(chains), sorted(chains, reverse=True)):
+        got_ids, got = bm25_score_range(
+            {t: chains[t] for t in order}, doc_len, lo, hi, k1, b, 37.5, positive_only
+        )
+        assert got_ids.dtype == np.int64 and got.dtype == np.float64
+        assert np.array_equal(got_ids, want_ids)
+        assert np.array_equal(got.view(np.int64), want.view(np.int64))
 
 
 @given(st.text(alphabet="abcdefgisuvy", min_size=0, max_size=12))

@@ -2,7 +2,9 @@
 
 The serving contract: a reader over the parquet index returns EXACTLY what
 the cluster-side paths return — same docs, same scores (bit for bit
-against WAND), same deterministic tie order — and answers warm queries in milliseconds without
+against WAND: both accumulate through ``codec.bm25_score_range``, which adds
+terms in sorted-term order whatever the query's token order), same
+deterministic tie order — and answers warm queries in milliseconds without
 touching Spark.
 """
 
@@ -39,6 +41,8 @@ def served(spark, tmp_path_factory):
 QUERIES = [
     "w0005 w0010", "w0001", "w0000 w0002 w0007", "nosuchterm w0003",
     "w0005 w0005 w0005 w0010",  # qtf = 3
+    # unsorted: added in token order, doc 249 would differ in the last bit
+    "w0026 w0023 w0025",
 ]
 
 
@@ -56,7 +60,7 @@ def test_reader_matches_wand(spark, served, positive_only):
             .collect()
         ]
         got = reader.query(text, top_k=12, positive_only=positive_only)
-        # bit-identical: both paths score through codec.bm25_term_bound
+        # bit-identical: both paths score through codec.bm25_score_range
         assert got == expect, text
 
 
@@ -1162,6 +1166,16 @@ def test_cli_serve_request_bounds(served):
 # the repo root, so ``python -m neural_search_spark.cli`` resolves
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# request lines that once answered a plausible page (a fractional, negative
+# or NaN number), each with the field its error must name
+FIELD_ERRORS = {
+    '{"query": "w0005", "top_k": 3.7}': "top_k",
+    '{"query": "w0005", "collapse_hosts": -1}': "collapse_hosts",
+    '{"more_like_this": 0, "m": -1}': "m must be",
+    '{"query": "w0005", "search_after": [NaN, 1]}': "search_after[0]",
+    '{"dsl": {"query": {"match": "w0005"}, "top_k": 3.7}}': "top_k",
+}
+
 # request lines that must each get one error reply and leave the replica
 # serving: numbers no int can hold, ids past int64, JSON nested past the
 # parser's recursion limit, and malformed shapes of every request form
@@ -1191,6 +1205,7 @@ MALFORMED_LINES = [
     '{"dsl": 5}',
     '{"percolate": "x"}',  # no --percolate-queries
     '{"query": "x", "offset": -1}',  # no known term: never reaches the reader
+    *FIELD_ERRORS,
 ]
 
 
@@ -1220,6 +1235,7 @@ def test_cli_serve_survives_malformed_lines(served):
     for i, bad in enumerate(MALFORMED_LINES):
         assert set(out[2 * i]) == {"error"}, (bad[:60], out[2 * i])
         assert "internal error" not in out[2 * i]["error"], bad[:60]
+        assert FIELD_ERRORS.get(bad, "") in out[2 * i]["error"], (bad, out[2 * i])
         assert out[2 * i + 1]["hits"], bad[:60]
     assert out[-2]["query"] == "\ufffd\ufffd w0005" and out[-2]["hits"]
     assert out[-1]["hits"]
