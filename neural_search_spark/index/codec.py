@@ -363,54 +363,57 @@ def _split_position_lists(vals: np.ndarray, tfs: np.ndarray) -> list[np.ndarray]
     return np.split(abs_pos, ends[:-1])
 
 
+def bm25_saturation(
+    tf: np.ndarray, doc_len: np.ndarray, k1: float, b: float, avgdl: float
+) -> np.ndarray:
+    """Per-posting BM25 tf saturation ``tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl))``.
+    It depends only on the snapshot, not the query: the replica caches it
+    with a term's ids, the WAND kernel computes it once per chain per batch."""
+    tf = np.asarray(tf, dtype=np.float64)
+    denom = tf + k1 * (1.0 - b + b * np.asarray(doc_len, dtype=np.float64) / avgdl)
+    return tf * (k1 + 1.0) / denom
+
+
 def bm25_term_bound(
     tf: np.ndarray, doc_len: np.ndarray, idf: float, k1: float, b: float, avgdl: float
 ) -> np.ndarray:
-    """Exact per-posting BM25 contribution of one query term.
-
-    The one spelling of the BM25 term formula for every numpy scorer (the
-    serving replica, the WAND window loop, the block bounds). A term that
-    occurs ``qtf`` times in the query passes ``qtf * idf`` as ``idf``: that
-    keeps the product order of ``qtf * idf * (tf * (k1 + 1) / denom)``, so
-    scores stay bit-identical across scorers."""
-    tf = np.asarray(tf, dtype=np.float64)
-    denom = tf + k1 * (1.0 - b + b * np.asarray(doc_len, dtype=np.float64) / avgdl)
-    return idf * (tf * (k1 + 1.0) / denom)
+    """Exact per-posting BM25 contribution of one query term, ``idf *
+    bm25_saturation(...)``: a term that occurs ``qtf`` times in the query
+    passes ``qtf * idf`` as ``idf``, the product order every scorer keeps."""
+    return idf * bm25_saturation(tf, doc_len, k1, b, avgdl)
 
 
 def bm25_score_range(
-    chains: dict, doc_len: np.ndarray, lo: int, hi: int,
-    k1: float, b: float, avgdl: float, positive_only: bool,
+    chains: dict, lo: int, hi: int, positive_only: bool
 ) -> tuple[np.ndarray, np.ndarray]:
     """Exact BM25 scores of the docs in ``[lo, hi)``: the one accumulator of
     the replica (a range per shard) and the WAND kernel (one per window).
 
-    ``chains`` maps each query term to its ``(ids, tfs, qtf * idf)``, ids
-    ascending, possibly past the range; ``doc_len[i]`` is doc ``lo + i``'s
-    length. Returns ``(doc ids, scores)`` of every doc a chain reaches in the
-    range, ids ascending, cut to scores > 0 if ``positive_only``. Terms add
-    in sorted-term order, whatever the caller's order, and ``bincount`` sums
-    each doc in input order from 0.0, like a zeroed array and one ``+=`` per
-    term: every caller's scores agree bit for bit."""
+    ``chains`` maps each query term to its ``(ids, bm25_saturation, qtf *
+    idf)``, ids ascending, possibly past the range. Returns ``(doc ids,
+    scores)`` of every doc a chain reaches in the range, ids ascending, cut
+    to scores > 0 if ``positive_only``. Each posting adds ``weight * sat``
+    (``bm25_term_bound``'s product order), terms in sorted-term order
+    whatever the caller's, and ``bincount`` sums each doc in input order
+    from 0.0, like a zeroed array and one ``+=`` per term: every caller's
+    scores agree bit for bit."""
     locs, parts = [], []
     for term in sorted(chains):
-        ids, tfs, weight = chains[term]
+        ids, sat, weight = chains[term]
         i0, i1 = ids.searchsorted((lo, hi)).tolist()
-        loc = ids[i0:i1] - lo
-        locs.append(loc)
-        parts.append(bm25_term_bound(tfs[i0:i1], doc_len[loc], weight, k1, b, avgdl))
+        locs.append(ids[i0:i1] - lo)
+        parts.append(weight * sat[i0:i1])
     loc = np.concatenate(locs)
     if loc.size == 0:
         return loc, np.zeros(0)
     scores = np.bincount(loc, np.concatenate(parts))
-    touched = np.zeros(scores.size, dtype=bool)
-    touched[loc] = True
-    cand = np.flatnonzero(touched)
-    scores = scores[cand]
-    if positive_only:
-        keep = scores > 0
-        cand, scores = cand[keep], scores[keep]
-    return cand + lo, scores
+    if positive_only:  # unreached bins hold exactly 0.0 and fail the cut too
+        cand = np.flatnonzero(scores > 0)
+    else:
+        touched = np.zeros(scores.size, dtype=bool)
+        touched[loc] = True
+        cand = np.flatnonzero(touched)
+    return cand + lo, scores[cand]
 
 
 def block_score_bound(

@@ -16,13 +16,15 @@ where each block bound is computed at query time from the stats-independent
 Windows are visited in descending U_w; once the running top-k threshold θ
 (kth best exact score so far, 0 until the heap fills) satisfies θ ≥ U_w, all
 remaining windows are provably below the kth result and are skipped without
-decoding. Within a visited window, scoring is exact, dense, and vectorized
-(numpy over decoded postings + the shard's doc_len array). Blocks decode
+decoding. Within a visited window, scoring is exact, dense, and vectorized:
+one multiply per posting of ``qtf * idf`` by the posting's BM25 saturation
+(``codec.bm25_saturation``), computed once per decoded (term, shard) chain
+for the whole query batch from the shard's doc_len array. Blocks decode
 through ``codec.decode_postings``, the one owner of the block-chain format
 (shared with the serving replica, phrase retrieval and maintenance), and
 each window scores in one ``codec.bm25_score_range`` call, the accumulator
-the replica runs per shard: terms add in sorted-term order on both paths,
-so the two agree bit for bit. The max(0, ·)
+the replica runs per shard over its cached saturations: terms add in
+sorted-term order on both paths, so the two agree bit for bit. The max(0, ·)
 clamp keeps the bound valid even if an epsilon-floored idf is negative
 (average_idf < 0), where a doc *lacking* the term outscores one containing it.
 
@@ -124,8 +126,12 @@ def _shard_kernel(
             for t, (_qtf, idf) in spec["terms"].items():
                 term_idf[t] = idf
 
-        # decoded (ids, tfs) chains, and each term's per-block meta + bounds
-        decoded = codec.decode_postings(postings, docs_per_shard)
+        # each decoded chain as (ids, saturation), once for the whole batch,
+        # and each term's per-block meta + bounds
+        saturated = {
+            t: (ids, codec.bm25_saturation(tfs, dl[ids - base], k1, b, avgdl))
+            for (t, _), (ids, tfs) in codec.decode_postings(postings, docs_per_shard).items()
+        }
         by_term: dict[str, dict] = {}
         for term, g in postings.groupby("term", sort=False):
             by_term[term] = {
@@ -151,7 +157,7 @@ def _shard_kernel(
             if not qterms:
                 continue
             k = spec["top_k"]
-            chains = {t: (*decoded[(t, shard)], qtf * idf) for t, qtf, idf in qterms}
+            chains = {t: (*saturated[t], qtf * idf) for t, qtf, idf in qterms}
 
             # window upper bounds: each block adds its (clamped) max to every
             # window it overlaps
@@ -187,10 +193,9 @@ def _shard_kernel(
                     break  # remaining windows are provably below the kth score
                 if visited_acc is not None:
                     visited_acc.add(1)
-                lo = w * window_docs
+                lo = base + w * window_docs
                 cand, cscores = codec.bm25_score_range(
-                    chains, dl[lo : lo + window_docs], base + lo,
-                    base + lo + window_docs, k1, b, avgdl, positive_only,
+                    chains, lo, lo + window_docs, positive_only
                 )
                 if cand.size == 0:
                     continue

@@ -16,9 +16,11 @@ the API but leaves it disabled in the search path
     the reference's TTL-only design would serve stale results for up to
     ``ttl`` seconds after an upsert.
   * **three cacheable granularities.** Besides whole search results (the
-    reference's unit), the reader caches decoded per-term posting arrays —
-    hot query *terms* are far more repetitive than whole query strings, and
-    a term hit skips both the parquet read and the varint decode. Below
+    reference's unit), the reader caches per-term posting arrays: the doc
+    ids and each posting's BM25 saturation under the snapshot's stats — hot
+    query *terms* are far more repetitive than whole query strings, and a
+    term hit skips the parquet read, the varint decode and the saturation,
+    leaving one multiply per posting. Below
     both, ``IndexReader`` itself keeps decompressed posting row groups in a
     byte-bounded LRU (``serve.POSTINGS_ROW_GROUP_CACHE_BYTES``, not this
     class): a cold term whose row group an earlier query read skips the

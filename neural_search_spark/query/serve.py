@@ -9,11 +9,12 @@ builds (index/build.py); ``IndexReader`` answers a query by reading ONLY the
 posting row groups whose ``term`` min/max covers a query term (a row-group
 directory taken from the file footers at ``refresh()``), decoding them with
 ``codec.decode_postings`` (the one owner of the block-chain format, shared
-with the WAND kernel, phrase retrieval and maintenance), and scoring each
-shard with one ``codec.bm25_score_range`` call, the accumulator the WAND
-kernel runs per window: terms add in sorted-term order on both paths, so
-scores are bit-identical to ``bm25_topk_wand`` and ranks identical to the
-DataFrame batch path (asserted in tests/test_serve.py).
+with the WAND kernel, phrase retrieval and maintenance), turning tfs into
+BM25 saturations once per snapshot, and scoring each shard with one
+``codec.bm25_score_range`` call, the accumulator the WAND kernel runs per
+window: terms add in sorted-term order on both paths, so scores are
+bit-identical to ``bm25_topk_wand`` and ranks identical to the DataFrame
+batch path (asserted in tests/test_serve.py).
 
 Deployment shape at scale:
   * one reader per serving replica; replicas are stateless — everything
@@ -36,9 +37,10 @@ Deployment shape at scale:
     shard) most row groups span most terms: answers stay the same, but the
     first reads degrade to a scan of the postings;
   * optionally, a ``TtlLruCache`` (query/cache.py, the reference's
-    ``utils/cache.py`` analog) caches decoded per-term posting arrays and
-    whole search results, keyed by the index snapshot token so a maintenance
-    commit + ``refresh()`` invalidates immediately.
+    ``utils/cache.py`` analog) caches each term's doc ids plus their
+    snapshot BM25 saturations, and whole search results, keyed by the index
+    snapshot token so a maintenance commit + ``refresh()`` invalidates
+    immediately (MultiReader's global avgdl bypasses it).
 
 This closes the serving story without a cluster in the loop: Spark owns
 build/maintenance/batch analytics; serving needs only the parquet files.
@@ -316,27 +318,33 @@ class IndexReader:
             out[sel] = st.host[ids[sel] - shard * span]
         return out
 
-    def _postings_for(self, terms: list[str]) -> dict:
-        """term -> [(shard, doc_ids, tfs)] (shards ascending), decoded.
-
-        Reads only the row groups whose term min/max covers a term missing
-        from the cache (see ``_read_chains``) and decodes with the shared
-        codec; terms already in the cache skip both the read and the decode.
-        """
-        return self._read_chains(terms, "")
+    def _postings_for(self, terms: list[str], avgdl: float | None = None) -> dict:
+        """term -> [(shard, doc_ids, saturation)] (shards ascending), each
+        posting's ``codec.bm25_saturation`` under the snapshot's stats, so a
+        query scores it with one multiply. Cached terms skip the read, the
+        decode and the saturation (see ``_read_chains``). An ``avgdl`` not
+        the snapshot's (MultiReader's global one) gets fresh saturations,
+        and the cache is neither read nor written for it."""
+        return self._read_chains(terms, "", avgdl)
 
     def _positions_for(self, terms: list[str]) -> dict:
-        """term -> [(shard, doc_ids, tfs, pos_lists)] from a positional index.
+        """term -> {doc_id: positions} from a positional index.
 
         Same row-group-pruned read as ``_postings_for`` plus the
         positions stream; cached under a ``pos:``-prefixed keyspace so flat
         posting entries never collide."""
-        return self._read_chains(terms, "pos:")
+        return {
+            t: {d: p for _shard, ids, _tfs, plists in chains
+                for d, p in zip(ids.tolist(), plists)}
+            for t, chains in self._read_chains(terms, "pos:").items()
+        }
 
-    def _read_chains(self, terms: list[str], prefix: str) -> dict:
-        """term -> [(shard, *decoded chain)] for ``_postings_for`` ("") and
-        ``_positions_for`` ("pos:", which also reads positions): cached
-        terms skip the read and the decode. For the rest, the row-group
+    def _read_chains(self, terms: list[str], prefix: str, avgdl: float | None = None) -> dict:
+        """term -> [(shard, ids, saturation)] for ``_postings_for`` ("";
+        saturations under ``avgdl``, by default the snapshot's) and
+        [(shard, ids, tfs, position lists)] for ``_positions_for`` ("pos:").
+        Cached terms skip the read and the decode. The cache is bypassed
+        for an ``avgdl`` not the snapshot's. For the rest, the row-group
         directory picks the row groups whose [term min, term max] covers a
         missing term. Each picked group comes from the row-group cache or,
         on a miss, is read once from the snapshot's open file and cached
@@ -350,11 +358,14 @@ class IndexReader:
         and holds the cache's current bytes."""
         import pyarrow as pa
 
+        own = float(self.stats["avgdl"])
+        avgdl = own if avgdl is None else float(avgdl)
+        cache = self.cache if avgdl == own else None
         out: dict = {}
         missing: list[str] = []
         for t in terms:
-            if self.cache is not None:
-                hit = self.cache.get(
+            if cache is not None:
+                hit = cache.get(
                     TtlLruCache.make_postings_key(prefix + t, self.snapshot)
                 )
                 if hit is not None:
@@ -394,12 +405,17 @@ class IndexReader:
             chains = codec.decode_postings(
                 pa.concat_tables(parts), self.docs_per_shard
             )
+            k1, b = float(self.stats["k1"]), float(self.stats["b"])
             for (t, shard), chain in chains.items():
+                if not prefix:
+                    ids, tfs = chain
+                    dl = self._shard_state(shard).doc_len[ids - shard * self.docs_per_shard]
+                    chain = (ids, codec.bm25_saturation(tfs, dl, k1, b, avgdl))
                 out[t].append((shard, *chain))
-        if self.cache is not None:
+        if cache is not None:
             for t in missing:
                 key = TtlLruCache.make_postings_key(prefix + t, self.snapshot)
-                self.cache.set(key, out[t])
+                cache.set(key, out[t])
         return out
 
     def _read_row_group(self, key: tuple[int, int, bool]) -> _RowGroup:
@@ -447,15 +463,7 @@ class IndexReader:
         distinct = sorted(set(toks))
         if any(t not in self.idf for t in distinct):
             return []  # a phrase containing an unknown term matches nothing
-        pos = self._positions_for(distinct)
-        # per-term doc -> positions map (concatenated over shards)
-        by_term: dict[str, dict[int, np.ndarray]] = {}
-        for t in distinct:
-            m: dict[int, np.ndarray] = {}
-            for _shard, ids, _tfs, plists in pos[t]:
-                for d, p in zip(ids.tolist(), plists):
-                    m[d] = p
-            by_term[t] = m
+        by_term = self._positions_for(distinct)
         # candidates: docs containing every distinct phrase term
         cand = set.intersection(*(set(by_term[t]) for t in distinct))
         hits: list[tuple[int, int]] = []
@@ -495,14 +503,7 @@ class IndexReader:
         terms = sorted(set(toks))
         if not terms or any(t not in self.idf for t in terms):
             return []
-        pos = self._positions_for(terms)
-        by_term: dict[str, dict[int, np.ndarray]] = {}
-        for t in terms:
-            m: dict[int, np.ndarray] = {}
-            for _shard, ids, _tfs, plists in pos[t]:
-                for d, p in zip(ids.tolist(), plists):
-                    m[d] = p
-            by_term[t] = m
+        by_term = self._positions_for(terms)
         cand = set.intersection(*(set(by_term[t]) for t in terms))
         hits: list[tuple[int, int]] = []
         if ordered:
@@ -654,8 +655,7 @@ class IndexReader:
             tf = float(tv["terms"][term])
             qtf = counts[term]
             idf = float(self.idf[term])
-            denom = tf + k1 * (1.0 - b + b * dl / avgdl)
-            contrib = qtf * idf * (tf * (k1 + 1.0) / denom)
+            contrib = qtf * idf * float(codec.bm25_saturation(tf, dl, k1, b, avgdl))
             score += contrib
             rows.append(
                 {
@@ -940,7 +940,7 @@ class IndexReader:
         Identical semantics to ``bm25_topk_wand(positive_only=...)`` for a
         single query. With a ``cache`` attached, a repeated query string is
         a whole-result hit and a repeated query *term* skips the posting
-        read + decode; both are snapshot-scoped (see ``refresh``).
+        read, decode and saturation; both are snapshot-scoped (see ``refresh``).
 
         ``score_rounding`` mirrors ``SearchEngine.search(score_rounding=)``:
         the positive cut stays on raw scores, then scores are HALF_UP
@@ -1096,7 +1096,7 @@ class IndexReader:
             )
 
             def _ids_of(term: str) -> np.ndarray:
-                parts = [ids for _shard, ids, _tfs in post[term]]
+                parts = [ids for _shard, ids, _sat in post[term]]
                 return (
                     np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
                 )
@@ -1187,29 +1187,20 @@ class IndexReader:
     ) -> list[tuple[int, float]]:
         if offset < 0:
             raise ValueError(f"offset must be >= 0, got {offset}")
-        k1, b = float(self.stats["k1"]), float(self.stats["b"])
-        # override = scatter-gather mode (MultiReader): GLOBAL avgdl with
-        # local tf/doc_len, so partial-index scores equal merged-index scores
-        avgdl = (
-            float(avgdl_override)
-            if avgdl_override is not None
-            else float(self.stats["avgdl"])
-        )
         span = self.docs_per_shard
         # each shard's chains score in one codec.bm25_score_range call over
-        # the shard's span, which fixes the term order
+        # the shard's span, which fixes the term order. override =
+        # scatter-gather mode (MultiReader): saturations under the GLOBAL
+        # avgdl, so partial-index scores equal merged-index scores
         by_shard: dict[int, dict] = {}
-        for term, parts in self._postings_for(sorted(qterms)).items():
+        for term, parts in self._postings_for(sorted(qterms), avgdl_override).items():
             qtf, idf = qterms[term]
-            for shard, ids, tfs in parts:
-                by_shard.setdefault(shard, {})[term] = (ids, tfs, qtf * idf)
+            for shard, ids, sat in parts:
+                by_shard.setdefault(shard, {})[term] = (ids, sat, qtf * idf)
         if not by_shard:
             return []
         hits = [
-            codec.bm25_score_range(
-                chains, self._shard_state(shard).doc_len, shard * span,
-                (shard + 1) * span, k1, b, avgdl, positive_only,
-            )
+            codec.bm25_score_range(chains, shard * span, (shard + 1) * span, positive_only)
             for shard, chains in by_shard.items()
         ]
         ids, scores = map(np.concatenate, zip(*hits))

@@ -9,6 +9,7 @@ from hypothesis import strategies as st
 
 from neural_search_spark.index.codec import (
     _split_position_lists,
+    bm25_saturation,
     bm25_score_range,
     bm25_term_bound,
     decode_ints,
@@ -418,22 +419,31 @@ def _score_ranges(draw):
         chains[term] = (base + local, rng.integers(1, 30, local.size), sign * rng.uniform(0.1, 12))
     a, z = sorted(draw(st.lists(st.integers(0, n), min_size=2, max_size=2)))
     doc_len = rng.integers(1, 400, n).astype(np.float64)
-    return chains, doc_len[a:z], base + a, base + z
+    return chains, doc_len, base, base + a, base + z
 
 
 @given(_score_ranges(), st.booleans(), st.sampled_from([(1.2, 0.75), (0.9, 0.4), (2.0, 1.0)]))
 @settings(max_examples=300, deadline=None)
 def test_bm25_score_range_matches_dense_accumulation(case, positive_only, params):
-    """``bm25_score_range`` returns the same candidates and bit-identical
-    scores as a zeroed array with one ``+=`` per sorted term, for any
-    order the chains come in: zero-score docs stay candidates in match
-    mode, and a chain cut by the range contributes only its in-range ids."""
-    chains, doc_len, lo, hi = case
+    """``bm25_score_range`` over ``bm25_saturation`` chains returns the
+    same candidates and bit-identical scores as ``bm25_term_bound`` summed
+    into a zeroed array with one ``+=`` per sorted term, for any order the
+    chains come in: zero-score docs stay candidates in match mode, and a
+    chain cut by the range contributes only its in-range ids."""
+    chains, doc_len, base, lo, hi = case
     k1, b = params
-    want_ids, want = score_range_ref(chains, doc_len, lo, hi, k1, b, 37.5, positive_only)
-    for order in (list(chains), sorted(chains, reverse=True)):
+    want_ids, want = score_range_ref(
+        chains, doc_len[lo - base : hi - base], lo, hi, k1, b, 37.5, positive_only
+    )
+    # saturations over each whole chain, ids outside [lo, hi) included, as
+    # the replica caches them
+    saturated = {
+        t: (ids, bm25_saturation(tfs, doc_len[ids - base], k1, b, 37.5), weight)
+        for t, (ids, tfs, weight) in chains.items()
+    }
+    for order in (list(saturated), sorted(saturated, reverse=True)):
         got_ids, got = bm25_score_range(
-            {t: chains[t] for t in order}, doc_len, lo, hi, k1, b, 37.5, positive_only
+            {t: saturated[t] for t in order}, lo, hi, positive_only
         )
         assert got_ids.dtype == np.int64 and got.dtype == np.float64
         assert np.array_equal(got_ids, want_ids)

@@ -2,10 +2,13 @@
 
 The serving contract: a reader over the parquet index returns EXACTLY what
 the cluster-side paths return — same docs, same scores (bit for bit
-against WAND: both accumulate through ``codec.bm25_score_range``, which adds
-terms in sorted-term order whatever the query's token order), same
-deterministic tie order — and answers warm queries in milliseconds without
-touching Spark.
+against WAND: both multiply each posting's ``codec.bm25_saturation`` by
+qtf*idf and accumulate through ``codec.bm25_score_range``, which adds terms
+in sorted-term order whatever the query's token order), same deterministic
+tie order — and answers warm queries in milliseconds without touching
+Spark. A reader's ``TtlLruCache`` holds each term's ids plus saturations
+under the snapshot's avgdl: a ``refresh()`` to a new snapshot, and
+MultiReader's global avgdl, never see them.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from neural_search_spark.corpus import write_corpus_parquet
 from neural_search_spark.index.build import build_index, load_index
 from neural_search_spark.index.docmap import assign_doc_ids
 from neural_search_spark.query.bm25_wand import bm25_topk_wand
+from neural_search_spark.query.cache import TtlLruCache
 from neural_search_spark.query.serve import IndexReader
 
 
@@ -84,6 +88,9 @@ def test_reader_refresh_after_maintenance(spark, tmp_path):
     reader = IndexReader(out_dir)
     assert reader.query("freshterm") == []
     known = reader.query("w0005", top_k=200, positive_only=False)
+    # a second reader caches w0005's ids and saturations for this snapshot
+    cached = IndexReader(out_dir, cache=TtlLruCache())
+    assert cached.query("w0005", top_k=200, positive_only=False) == known
     # doc 120 does not exist yet; d is an old shard-1 doc holding w0005
     d = min(doc for doc, _ in known if doc >= 64)
     explained = {doc: reader.explain("w0005", doc) for doc in (d, 120)}
@@ -107,6 +114,36 @@ def test_reader_refresh_after_maintenance(spark, tmp_path):
     # shard-1 postings are read
     assert 120 in [doc for doc, _ in reader.query("w0005", top_k=200,
                                                   positive_only=False)]
+    # the commit moved avgdl: the cached saturations belong to the old
+    # snapshot and are not served after refresh()
+    cached.refresh()
+    assert cached.query("w0005", top_k=200, positive_only=False) == (
+        IndexReader(out_dir).query("w0005", top_k=200, positive_only=False)
+    )
+
+
+def test_reader_avgdl_override_bypasses_postings_cache(served):
+    """MultiReader's global avgdl (``avgdl_override``) scores with fresh
+    saturations: a cached reader neither serves its snapshot saturations
+    to an override nor caches the override's for later plain queries."""
+    _, base_reader = served
+    cached = IndexReader(base_reader.root, cache=TtlLruCache())
+    plain = IndexReader(base_reader.root)
+    x = float(cached.stats["avgdl"]) * 1.7
+    # w0005/w0010 are cached under the snapshot's avgdl before the
+    # override; w0001/w0002 are first read under the override
+    warm, cold = "w0005 w0010", "w0001 w0002"
+    assert cached.query(warm, top_k=400, positive_only=False) == (
+        plain.query(warm, top_k=400, positive_only=False)
+    )
+    for text in (warm, cold):
+        qterms = {t: (1, cached.idf[t]) for t in text.split()}
+        got = cached._score(qterms, 400, False, avgdl_override=x)
+        assert got == plain._score(qterms, 400, False, avgdl_override=x)
+        assert got != plain._score(qterms, 400, False), "the override moves scores"
+    assert cached.query(cold, top_k=400, positive_only=False) == (
+        IndexReader(base_reader.root).query(cold, top_k=400, positive_only=False)
+    )
 
 
 def test_reader_refresh_keeps_open_files_flat(served):
