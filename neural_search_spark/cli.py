@@ -1036,7 +1036,7 @@ def main(argv: list[str] | None = None) -> int:
     sv.add_argument(
         "--cache-entries", type=int, default=4096,
         help="0 disables the result and per-term posting caches (not the "
-        "bounded cache of decompressed posting row groups)",
+        "bounded cache of decoded posting row groups)",
     )
     sv.add_argument("--cache-ttl", type=float, default=3600.0)
     # reference config declares 100 req / 60 s (config.py:51-52) but never

@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_LAYOUT, DEFAULT_PARAMS, BM25Params, IndexLayout
 from ..functions.tokenize import doc_terms
 from .codec import encode_postings
-from .docmap import assign_doc_ids
+from .docmap import assign_doc_ids, reject_doc_id_clash, release_doc_ids
 from .stats import CorpusStats, floored_term_stats, term_stats
 
 POSTINGS_SCHEMA = (
@@ -218,6 +218,7 @@ def build_index(
             f"{ckpt['fingerprint'].get('positional', False)}, call passed {store_positions}"
         )
     dt_cached = None  # set when phase 1 runs in THIS call (reused by phase 2)
+    with_ids = None
     try:
         # empty corpus -> no index, explicitly (the reference drops the index on
         # an empty corpus, hybrid.py:114-117; without this guard the failure is a
@@ -231,7 +232,12 @@ def build_index(
         if not (ckpt and ckpt.get("phase1_done")):
             t0 = time.time()
             if id_col is None:
-                with_ids = assign_doc_ids(corpus, order_col=url_col)
+                # the clash check sees every column; the id kernel then
+                # carries only the two columns the build reads
+                reject_doc_id_clash(corpus)
+                with_ids = assign_doc_ids(
+                    corpus.select(*dict.fromkeys((url_col, text_col))), order_col=url_col
+                )
             else:
                 with_ids = corpus.withColumn("doc_id", F.col(id_col).cast("long"))
 
@@ -252,9 +258,10 @@ def build_index(
             # same findall regex as full tokenization, so deriving the length
             # here removes an entire text read + Arrow pipe + regex pass from
             # phase 1. The price is n_docs-row exchanges (max-combine collapses
-            # each doc's term rows map-side; the url side is a column-pruned
-            # scan that never reads text) — at web scale a slim doc_id shuffle
-            # beats rescanning the text column outright. The left join keeps
+            # each doc's term rows map-side; the url side runs the id kernel
+            # again over the persisted (url, text) partitions, text passing
+            # through the Arrow pipe untokenized) — at web scale a slim doc_id
+            # shuffle beats re-tokenizing the text column. The left join keeps
             # zero-token docs (no dt rows) in the docmap with doc_len = 0, and
             # the shard repartition gives one output file per shard partition
             # instead of tasks-times-shards fragments from the join layout.
@@ -333,7 +340,9 @@ def build_index(
         todo = [s for s in range(n_shards) if s not in done]
         if todo:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            docmap_df = spark.read.parquet(paths.docmap)
+            # only a resumed build without id_col maps urls back to ids
+            if dt_cached is None and id_col is None:
+                docmap_df = spark.read.parquet(paths.docmap)
 
             wave_size = max(1, -(-len(todo) // max(1, waves)))
             for wi in range(0, len(todo), wave_size):
@@ -413,6 +422,8 @@ def build_index(
         # error must not keep the full corpus tokenization pinned
         if dt_cached is not None:
             dt_cached.unpersist()
+        if with_ids is not None:
+            release_doc_ids(with_ids)
 
 
 @dataclass

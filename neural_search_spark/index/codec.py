@@ -7,18 +7,23 @@ segment-id trick over the continuation bits. Both directions are batched:
 ``encode_postings`` sorts a build group's postings once and encodes every
 stream of every block in one ``encode_ints_many`` call (per-stream scheme
 choice by segment reductions, one varint pass, one ``packbits``), and
-``decode_postings`` decodes them back in one ``decode_ints_many`` call per
-stream kind. Runs inside the build-side ``applyInPandas`` and the query-side
-kernels (SURVEY.md §4.2.1).
+``decode_blocks`` decodes any set of blocks back into flat arrays, a fixed
+number of rows per ``decode_ints_many`` call. Runs inside the build-side
+``applyInPandas``, the query-side kernels (SURVEY.md §4.2.1) and the serving
+replica, which decodes each posting row group once.
 
 Block layout (one parquet row per block, flat — columnar-friendly):
     term, shard, block_id, first_doc_id, n_docs, max_tf, min_dl, deltas, tfs
 A (term, shard)'s blocks form a chain in ``block_id`` order: block 0's
 ``deltas[0]`` is ``doc_id[0] - shard_base``, every later block's is relative
 to the previous block's last id, and the rest are plain gaps (no -1 offset)
-to keep the codec trivial to verify. ``decode_postings`` is the one owner of
-that chain: the serving replica, the WAND kernel, phrase retrieval and the
-maintenance decoder all decode through it.
+to keep the codec trivial to verify. Every block also stores its
+``first_doc_id``, so ``decode_blocks`` anchors each block there and never
+needs the chain's earlier blocks: a chain cut by a row-group boundary
+decodes part by part. It is the one rebuilder of doc ids; the serving
+replica calls it per row group, ``IndexReader.term_vector`` per covering
+block, and ``decode_postings`` (the WAND kernel, phrase retrieval and the
+maintenance decoder) per whole chain.
 
 WAND metadata is **stats-independent**: blocks store ``max_tf`` (max term
 frequency in the block) and ``min_dl`` (min doc length among the block's
@@ -40,6 +45,8 @@ import pandas as pd
 import pyarrow as pa
 
 _BLOCK = 128
+# rows (blocks, or streams of one bit-unpack) decoded per step
+_DECODE_ROWS = 256
 _POW2 = np.uint64(1) << np.arange(64, dtype=np.uint64)
 
 
@@ -89,12 +96,26 @@ def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
     return out
 
 
+def _unpack_rows(stack: np.ndarray, width: int, count: int) -> np.ndarray:
+    """Row i of the uint8 matrix ``stack`` holds ``count`` little-endian
+    ``width``-bit values; returns them as a (rows, count) uint64 array.
+    Each value's bits are padded to the next of 8/16/32/64 and packed back
+    into a little-endian word, so the transient is one byte per padded
+    bit."""
+    rows = stack.shape[0]
+    bits = np.unpackbits(stack, axis=1, bitorder="little")[:, : count * width]
+    word = 8 << max(0, (width - 1).bit_length() - 3)
+    padded = np.zeros((rows, count, word), dtype=np.uint8)
+    padded[:, :, :width] = bits.reshape(rows, count, width)
+    packed = np.packbits(padded, axis=2, bitorder="little")
+    return packed.view(f"<u{word // 8}").reshape(rows, count).astype(np.uint64)
+
+
 def unpack_bits(buf: bytes, width: int, count: int) -> np.ndarray:
     if count == 0 or width == 0:
         return np.zeros(count, dtype=np.uint64)
-    bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8), bitorder="little")
-    bits = bits[: count * width].reshape(count, width).astype(np.uint64)
-    return (bits << np.arange(width, dtype=np.uint64)).sum(axis=1, dtype=np.uint64)
+    stack = np.frombuffer(buf, dtype=np.uint8)[: (count * width + 7) // 8]
+    return _unpack_rows(stack[None, :], width, count)[0]
 
 
 # int-sequence envelope: 1 scheme byte, then payload.
@@ -262,13 +283,18 @@ def decode_ints_many(bufs: list, counts: list[int]) -> list[np.ndarray]:
       self-delimiting, so the only bookkeeping is the value-count split);
     * bit-packed streams group by (width, count) and decode as a single 2D
       unpack — the common case is a full run of same-size blocks;
-    * patched (PFor) streams stay per-buffer (they are the rare tail).
+    * patched (PFor) streams stay per-buffer (they are the rare tail);
+    * every stream decodes into its slice of one flat array, and the
+      returned arrays are views of it.
 
-    This is the serving replica's cold-read hot path: a head term at 100K
-    docs spans ~600 blocks x 2 streams, and per-block decode overhead was
-    ~85% of uncached query latency.
+    ``decode_blocks`` calls it for a fixed number of blocks at a time: the
+    serving replica decodes each posting row group through it once.
     """
-    out: list = [None] * len(bufs)
+    cs = np.asarray(counts, dtype=np.int64)
+    stop = np.cumsum(cs)
+    off = stop - cs
+    # every stream decodes into its slice of one flat array
+    flat = np.zeros(int(stop[-1]) if cs.size else 0, dtype=np.uint64)
     var_idx: list[int] = []
     var_parts: list[bytes] = []
     # (width, count) -> [(out_index, low_bits_payload, exceptions_or_None)]
@@ -289,7 +315,7 @@ def decode_ints_many(bufs: list, counts: list[int]) -> list[np.ndarray]:
     if var_idx:
         concat = b"".join(var_parts)
         vals = varint_decode(concat)
-        cs = np.array([counts[i] for i in var_idx], dtype=np.int64)
+        vi = np.array(var_idx)
         # per-STREAM count check, matching decode_ints' per-call assert: a
         # LEB128 value ends on its terminator byte (high bit clear), so each
         # stream's actual value count is its terminator count — compensating
@@ -301,9 +327,8 @@ def decode_ints_many(bufs: list, counts: list[int]) -> list[np.ndarray]:
         )
         ends = np.cumsum(np.array([len(p) for p in var_parts], dtype=np.int64))
         actual = cum[ends] - cum[ends - np.array([len(p) for p in var_parts], dtype=np.int64)]
-        assert np.array_equal(actual, cs), "varint per-stream count mismatch"
-        for i, arr in zip(var_idx, np.split(vals, np.cumsum(cs)[:-1])):
-            out[i] = arr
+        assert np.array_equal(actual, cs[vi]), "varint per-stream count mismatch"
+        flat[_ranges(off[vi], cs[vi])] = vals
     if patched:
         # batch the exception varint streams: byte lengths are in the header,
         # per-stream VALUE counts come from counting terminator bytes per
@@ -328,39 +353,74 @@ def decode_ints_many(bufs: list, counts: list[int]) -> list[np.ndarray]:
             packed_groups.setdefault((width, counts[i]), []).append((i, lows, exc))
     for (width, count), entries in packed_groups.items():
         if width == 0 or count == 0:
-            for i, _lows, _exc in entries:
-                out[i] = np.zeros(count, dtype=np.uint64)
-            continue
+            continue  # all zeros
         nbytes = (count * width + 7) // 8
-        stack = np.frombuffer(
-            b"".join(lows[:nbytes] for _i, lows, _e in entries), dtype=np.uint8
-        ).reshape(len(entries), nbytes)
-        bits = np.unpackbits(stack, axis=1, bitorder="little")[:, : count * width]
-        vals2d = (
-            bits.reshape(len(entries), count, width).astype(np.uint64)
-            << np.arange(width, dtype=np.uint64)
-        ).sum(axis=2, dtype=np.uint64)
-        for j, (i, _lows, exc) in enumerate(entries):
-            row = vals2d[j]
-            if exc is not None and exc.size and int(exc[0]):
-                n_exc = int(exc[0])
-                pos = np.cumsum(exc[1 : 1 + n_exc].astype(np.int64))
-                row = row.copy()
-                row[pos] |= exc[1 + n_exc :] << np.uint64(width)
-            out[i] = row
-    return out
+        # a fixed number of streams at a time bounds the unpack's transient
+        for c0 in range(0, len(entries), _DECODE_ROWS):
+            chunk = entries[c0 : c0 + _DECODE_ROWS]
+            stack = np.frombuffer(
+                b"".join(lows[:nbytes] for _i, lows, _e in chunk), dtype=np.uint8
+            ).reshape(len(chunk), nbytes)
+            idx = np.array([i for i, _lows, _exc in chunk])
+            flat[_ranges(off[idx], cs[idx])] = _unpack_rows(stack, width, count).ravel()
+            for i, _lows, exc in chunk:
+                if exc is not None and exc.size and int(exc[0]):
+                    n_exc = int(exc[0])
+                    pos = off[i] + np.cumsum(exc[1 : 1 + n_exc].astype(np.int64))
+                    flat[pos] |= exc[1 + n_exc :] << np.uint64(width)
+    return [flat[a:b] for a, b in zip(off.tolist(), stop.tolist())]
 
 
-def _split_position_lists(vals: np.ndarray, tfs: np.ndarray) -> list[np.ndarray]:
-    """Per-doc absolute positions from a decoded positions stream: segment
-    lengths are ``tfs``, each segment's first value is absolute and the rest
-    are gaps. Streams of consecutive blocks concatenate cleanly, because
-    every segment restarts from an absolute value."""
-    ends = np.cumsum(tfs)
-    c = np.cumsum(vals)
-    seg_offsets = np.concatenate(([0], c[ends[:-1] - 1]))
-    abs_pos = c - np.repeat(seg_offsets, tfs)
-    return np.split(abs_pos, ends[:-1])
+def _narrow(values: np.ndarray) -> np.ndarray:
+    """Non-negative ``values`` in uint16 if they fit, else uint32, else
+    uint64."""
+    top = int(values.max()) if values.size else 0
+    return values.astype(
+        np.uint16 if top < 1 << 16 else np.uint32 if top < 1 << 32 else np.uint64
+    )
+
+
+def decode_blocks(first_doc_id, n_docs, deltas, tfs, positions=None, *, base) -> tuple:
+    """Flat postings of posting blocks, rows in the given order: ``(ids -
+    base, tfs)``, plus every posting's absolute positions, concatenated, if
+    the blocks' ``positions`` streams are given. ``first_doc_id`` and
+    ``n_docs`` are per-row arrays, ``deltas``/``tfs``/``positions`` per-row
+    sequences of encoded streams, ``base`` a scalar or per-row array.
+
+    The one rebuilder of doc ids from delta streams: every block is
+    anchored at its own ``first_doc_id`` (its first delta is relative to
+    whatever preceded it in the chain, which is not needed), so any subset
+    of a chain's blocks decodes, in any order. Each output array is in
+    the narrowest unsigned dtype that holds its maximum (``uint16``, else
+    ``uint32``, else ``uint64``). Rows decode ``_DECODE_ROWS`` at a time,
+    which bounds the transient uint64/int64 arrays.
+    """
+    first = np.asarray(first_doc_id, dtype=np.int64) - np.asarray(base, dtype=np.int64)
+    counts = np.asarray(n_docs, dtype=np.int64)
+    out: tuple = ([], []) + (([],) if positions is not None else ())
+    for lo in range(0, counts.size, _DECODE_ROWS):
+        c = counts[lo : lo + _DECODE_ROWS]
+        streams = decode_ints_many(
+            list(deltas[lo : lo + c.size]) + list(tfs[lo : lo + c.size]), c.tolist() * 2
+        )
+        run = np.cumsum(np.concatenate(streams[: c.size]).astype(np.int64))
+        tf = np.concatenate(streams[c.size :]).astype(np.int64)
+        starts = np.cumsum(c) - c
+        out[0].append(_narrow(run - np.repeat(run[starts] - first[lo : lo + c.size], c)))
+        out[1].append(_narrow(tf))
+        if positions is not None:
+            # a block's positions stream: one segment of tf values per
+            # posting, the first absolute, the rest gaps
+            vals = decode_ints_many(
+                list(positions[lo : lo + c.size]), np.add.reduceat(tf, starts).tolist()
+            )
+            gaps = np.concatenate(vals).astype(np.int64)
+            acc = np.cumsum(gaps)
+            seg = np.cumsum(tf) - tf  # each posting's first value
+            out[2].append(_narrow(acc - np.repeat(acc[seg] - gaps[seg], tf)))
+    return tuple(
+        np.concatenate(parts) if parts else np.zeros(0, dtype=np.uint16) for parts in out
+    )
 
 
 def bm25_saturation(
@@ -484,52 +544,47 @@ def encode_postings(frame, docs_per_shard: int, block_size: int = _BLOCK) -> pd.
 def decode_postings(blocks, docs_per_shard: int) -> dict:
     """Decode posting-block chains: {(term, shard): (doc_ids, tfs[, positions])}.
 
-    The one decoder of the block chain; every query path and the
-    maintenance decoder call it. ``blocks`` is a pyarrow Table or a pandas
+    The whole-chain decoder of the WAND kernel, phrase retrieval and the
+    maintenance decoder. ``blocks`` is a pyarrow Table or a pandas
     DataFrame with one row per block and columns term, shard, block_id,
-    n_docs, deltas, tfs, plus positions on a positional read; rows may come
-    in any order. Keys come out in ascending (term, shard) order; doc_ids
-    and tfs are int64 and, with a positions column, the third element is
-    the per-doc list of 1-based position arrays.
+    first_doc_id, n_docs, deltas, tfs, plus positions on a positional read;
+    rows may come in any order. Keys come out in ascending (term, shard)
+    order; doc_ids and tfs are int64 and, with a positions column, the
+    third element is the per-doc list of 1-based position arrays.
 
-    A (term, shard) chain is its blocks in block_id order: block 0's first
-    delta is relative to the shard base (``shard * docs_per_shard``) and
-    every later block's first delta to the previous block's last id, so one
-    cumsum over the chain's concatenated deltas rebuilds every id. All
-    delta and tf streams decode in one ``decode_ints_many`` call; position
-    streams take a second, since their value counts are the block tf sums.
+    Rows are put in (term, shard, block_id) order and decoded by
+    ``decode_blocks`` relative to each row's shard base (``shard *
+    docs_per_shard``); a chain is then a contiguous run of the flat arrays.
     """
     arrow = hasattr(blocks, "column_names")
     positional = "positions" in (blocks.column_names if arrow else blocks.columns)
     cols = [
         blocks[n].to_pylist() if arrow else blocks[n].tolist()
-        for n in ["term", "shard", "block_id", "n_docs", "deltas", "tfs"]
+        for n in ["term", "shard", "block_id", "first_doc_id", "n_docs", "deltas", "tfs"]
         + ["positions"] * positional
     ]
-    term, shard, block_id, n_docs, deltas, tfs = cols[:6]
+    term, shard, block_id = cols[:3]
     order = sorted(range(len(term)), key=lambda i: (term[i], shard[i], block_id[i]))
     # sorted chain key -> [first, last + 1) range of its blocks in `order`
     spans: dict = {}
     for j, i in enumerate(order):
         spans.setdefault((term[i], int(shard[i])), [j, 0])[1] = j + 1
-    counts = [int(n_docs[i]) for i in order]
-    nb = len(order)
-    streams = decode_ints_many(
-        [deltas[i] for i in order] + [tfs[i] for i in order], counts + counts
+    first, n_docs, deltas, tfs, *pos = ([c[i] for i in order] for c in cols[3:])
+    flat = decode_blocks(
+        first, n_docs, deltas, tfs, *pos,
+        base=np.array([shard[i] for i in order], dtype=np.int64) * docs_per_shard,
     )
+    ids, tf = (a.astype(np.int64) for a in flat[:2])
+    off = np.concatenate(([0], np.cumsum(n_docs, dtype=np.int64)))
     if positional:
-        pos_streams = decode_ints_many(
-            [cols[6][i] for i in order], [int(t.sum()) for t in streams[nb:]]
-        )
+        pos = flat[2].astype(np.int64)
+        pos_off = np.concatenate(([0], np.cumsum(tf)))
     out: dict = {}
-    for (t, sh), (lo, hi) in spans.items():
-        deltas_run = np.concatenate(streams[lo:hi]).astype(np.int64)
-        chain = (
-            np.cumsum(deltas_run) + sh * docs_per_shard,
-            np.concatenate(streams[nb + lo : nb + hi]).astype(np.int64),
-        )
+    for (t, s), (lo, hi) in spans.items():
+        a, b = off[lo], off[hi]
+        chain = (ids[a:b] + s * docs_per_shard, tf[a:b])
         if positional:
-            vals = np.concatenate(pos_streams[lo:hi]).astype(np.int64)
-            chain += (_split_position_lists(vals, chain[1]),)
-        out[(t, sh)] = chain
+            vals = pos[pos_off[a] : pos_off[b]]
+            chain += (np.split(vals, np.cumsum(chain[1])[:-1]),)
+        out[(t, s)] = chain
     return out

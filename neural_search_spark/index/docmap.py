@@ -11,11 +11,14 @@ partition — a non-starter at 10^12 rows — so we use the TeraSort pattern:
   3. mapInPandas assigning ``offset[pid] + local_position``.
 
 The partitioned DataFrame is persisted between passes so both see identical
-partitioning.
+partitioning, and stays persisted for every later action on the result:
+re-sampling the range bounds could assign other ids. ``release_doc_ids``
+unpersists it once the caller is done with the ids.
 """
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Iterator
 
 import pandas as pd
@@ -48,22 +51,40 @@ def find_doc_id_col(df: DataFrame) -> str | None:
     return next((c for c in df.columns if c.lower() == "doc_id"), None)
 
 
+# each assign_doc_ids result -> the persisted range partitioning behind it
+_ID_SOURCES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def reject_doc_id_clash(corpus: DataFrame) -> None:
+    """Raise if ``corpus`` already has a column that resolves as ``doc_id``:
+    appending a second one would only surface much later as an
+    AMBIGUOUS_REFERENCE inside whatever consumes the frame, so fail at the
+    call that caused it."""
+    clash = find_doc_id_col(corpus)
+    if clash is not None:
+        raise ValueError(
+            f"corpus already has a doc_id column ({clash!r}); pass "
+            "id_col='doc_id' to build_index (or drop/rename the column) "
+            "instead of re-assigning"
+        )
+
+
+def release_doc_ids(with_ids: DataFrame) -> None:
+    """Unpersist the range partitioning behind an ``assign_doc_ids``
+    result. Later actions on ``with_ids`` re-sample the range bounds, so
+    call it only once the ids have been written out."""
+    parts = _ID_SOURCES.pop(with_ids, None)
+    if parts is not None:
+        parts.unpersist()
+
+
 def assign_doc_ids(
     corpus: DataFrame,
     order_col: str = "url",
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Append ``doc_id`` = dense rank of ``order_col`` (0-based, no gaps)."""
-    clash = find_doc_id_col(corpus)
-    if clash is not None:
-        # appending a second doc_id column would only surface much later as
-        # an AMBIGUOUS_REFERENCE inside whatever consumes the frame — fail
-        # here, at the call that caused it
-        raise ValueError(
-            f"corpus already has a doc_id column ({clash!r}); pass "
-            "id_col='doc_id' to build_index (or drop/rename the column) "
-            "instead of re-assigning"
-        )
+    reject_doc_id_clash(corpus)
     spark = corpus.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism
     parts = corpus.repartitionByRange(n, F.col(order_col)).sortWithinPartitions(order_col)
@@ -97,4 +118,6 @@ def assign_doc_ids(
             out.insert(0, "doc_id", pd.Series(list(ids), dtype="int64"))
             yield out
 
-    return parts.mapInPandas(kernel, schema=out_schema)
+    with_ids = parts.mapInPandas(kernel, schema=out_schema)
+    _ID_SOURCES[with_ids] = parts
+    return with_ids

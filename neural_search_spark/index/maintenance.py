@@ -276,7 +276,7 @@ def _decode_kernel(docs_per_shard: int):
 def decode_shard_postings(idx: PhysicalIndex, shards: list[int]) -> DataFrame:
     """Lossless inverse of the build: (doc_id, term, tf) for the given shards."""
     pf = idx.postings.where(F.col("shard").isin(shards)).select(
-        "shard", "bucket", "term", "block_id", "n_docs", "deltas", "tfs"
+        "shard", "bucket", "term", "block_id", "first_doc_id", "n_docs", "deltas", "tfs"
     )
     return pf.groupBy("shard", "bucket").applyInPandas(
         _decode_kernel(idx.docs_per_shard), schema="doc_id long, term string, tf long"

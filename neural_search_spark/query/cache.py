@@ -20,13 +20,13 @@ the API but leaves it disabled in the search path
     ids and each posting's BM25 saturation under the snapshot's stats — hot
     query *terms* are far more repetitive than whole query strings, and a
     term hit skips the parquet read, the varint decode and the saturation,
-    leaving one multiply per posting. Below
-    both, ``IndexReader`` itself keeps decompressed posting row groups in a
-    byte-bounded LRU (``serve.POSTINGS_ROW_GROUP_CACHE_BYTES``, not this
-    class): a cold term whose row group an earlier query read skips the
-    parquet read and decompression and pays only the decode. That cache is
-    always on and is emptied by ``refresh()``, since its keys name the
-    snapshot's open files.
+    leaving one multiply per posting. Below both, ``IndexReader`` itself
+    keeps decoded posting row groups in a byte-bounded LRU
+    (``serve.POSTINGS_ROW_GROUP_CACHE_BYTES``, not this class): a cold term
+    whose row group an earlier query read skips the parquet read and the
+    decode and pays array slices and the saturation. That cache is always
+    on and is emptied by ``refresh()``, since its keys name the snapshot's
+    open files.
 """
 
 from __future__ import annotations

@@ -288,7 +288,8 @@ def indexed_positions(index, terms: list[str]) -> DataFrame:
 
     span = index.docs_per_shard
     pf = index.postings.where(F.col("term").isin(list(terms))).select(
-        "shard", "bucket", "term", "block_id", "n_docs", "deltas", "tfs", "positions"
+        "shard", "bucket", "term", "block_id", "first_doc_id", "n_docs", "deltas", "tfs",
+        "positions",
     )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:

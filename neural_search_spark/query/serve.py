@@ -7,10 +7,11 @@ serving memory to corpus size and rebuilding everything on restart. Here the
 durable artifact is the sharded compressed parquet index the Spark cluster
 builds (index/build.py); ``IndexReader`` answers a query by reading ONLY the
 posting row groups whose ``term`` min/max covers a query term (a row-group
-directory taken from the file footers at ``refresh()``), decoding them with
-``codec.decode_postings`` (the one owner of the block-chain format, shared
-with the WAND kernel, phrase retrieval and maintenance), turning tfs into
-BM25 saturations once per snapshot, and scoring each shard with one
+directory taken from the file footers at ``refresh()``), decoding each
+group once with ``codec.decode_blocks`` (the one rebuilder of doc ids from
+delta streams, under the WAND kernel's, phrase retrieval's and maintenance's
+``codec.decode_postings`` too), turning tfs into BM25 saturations once per
+snapshot, and scoring each shard with one
 ``codec.bm25_score_range`` call, the accumulator the WAND kernel runs per
 window: terms add in sorted-term order on both paths, so scores are
 bit-identical to ``bm25_topk_wand`` and ranks identical to the DataFrame
@@ -28,11 +29,14 @@ Deployment shape at scale:
     build writes one term-sorted file per shard, so a query needs about one
     row group per query term per shard (more only for a term whose blocks
     span row groups), never a full scan. A row group read from a file is
-    decompressed once and kept, with a sorted index of its terms, in a
-    bounded LRU (``POSTINGS_ROW_GROUP_CACHE_BYTES`` of Arrow bytes, the
-    storage engine's block cache): a later query for any term of that group
-    reads no file, and only the decode and score of its blocks remain. The
-    cache belongs to the snapshot: ``refresh()`` and ``close()`` empty it.
+    decoded once into flat arrays (sorted distinct terms, per-term posting
+    offsets, local doc ids and tfs in uint16 or uint32, and on a positional
+    read the positions with per-posting offsets) and kept in a bounded LRU
+    (``POSTINGS_ROW_GROUP_CACHE_BYTES`` of decoded bytes, the storage
+    engine's block cache): a later query for any term of that group reads
+    and decodes nothing, its postings are a ``searchsorted`` and array
+    slices. The cache belongs to the snapshot: ``refresh()`` and
+    ``close()`` empty it.
     On an index written before the term sort (several unsorted files per
     shard) most row groups span most terms: answers stay the same, but the
     first reads degrade to a scan of the postings;
@@ -60,10 +64,10 @@ from ..functions.tokenize import _TOKEN_RE, tokenize_py
 from ..index import codec
 from .cache import TtlLruCache
 
-# Memory budget of the replica's decompressed posting row groups
-# (``IndexReader._read_chains``), in Arrow bytes plus the groups' term
-# indexes. The newest group is always kept, so the cache can exceed the
-# budget by at most one row group.
+# Memory budget of the replica's decoded posting row groups
+# (``IndexReader._read_chains``), in bytes of their arrays (``_RowGroup``).
+# The newest group is always kept, so the cache can exceed the budget by at
+# most one row group.
 POSTINGS_ROW_GROUP_CACHE_BYTES = 64 << 20
 
 
@@ -114,33 +118,59 @@ class _PostingFile:
 
 @dataclass
 class _RowGroup:
-    """One decompressed posting row group, rows in term order, plus its
-    term column as UTF-8 bytes (numpy ``S``: compact, and ordered like the
-    parquet term statistics), so a term's rows are one ``searchsorted``
-    range."""
+    """One posting row group, decoded once. ``terms`` holds its distinct
+    terms as sorted UTF-8 bytes (numpy ``S``: compact, and ordered like the
+    parquet term statistics); term ``i``'s postings are ``[starts[i],
+    starts[i + 1])`` of ``ids`` (doc id minus the shard base) and ``tfs``,
+    in doc-id order. A positional read also holds every posting's absolute
+    positions, posting ``j``'s at ``[pos_starts[j], pos_starts[j + 1])``.
+    ``nbytes`` counts exactly these arrays."""
 
-    table: object  # pyarrow.Table
     terms: np.ndarray
+    starts: np.ndarray
+    ids: np.ndarray
+    tfs: np.ndarray
+    positions: np.ndarray | None
+    pos_starts: np.ndarray | None
     nbytes: int
 
     @classmethod
-    def of(cls, table) -> "_RowGroup":
+    def of(cls, table, base: int) -> "_RowGroup":
         import pyarrow as pa
 
         terms = np.asarray(
             table.column("term").cast(pa.binary()).to_numpy(), dtype="S"
         )
+        first = table.column("first_doc_id").to_numpy()
         # the build writes term-sorted groups; an index written before the
-        # term sort has unsorted ones, and this one permutation covers both
-        order = np.argsort(terms, kind="stable")
-        table, terms = table.take(order), terms[order]
-        return cls(table, terms, table.nbytes + terms.nbytes)
+        # term sort has unsorted ones, and this one order covers both
+        order = np.lexsort((first, terms))
+        counts = table.column("n_docs").to_numpy()[order]
+        streams = [
+            table.column(c).take(order).to_pylist()
+            for c in ("deltas", "tfs", "positions") if c in table.column_names
+        ]
+        ids, tfs, *pos = codec.decode_blocks(first[order], counts, *streams, base=base)
+        terms, head = np.unique(terms[order], return_index=True)
+        block_starts = np.concatenate(([0], np.cumsum(counts, dtype=np.int64)))
+        starts = block_starts[np.append(head, order.size)]
+        positions = pos_starts = None
+        if pos:
+            positions = pos[0]
+            pos_starts = np.concatenate(([0], np.cumsum(tfs, dtype=np.int64)))
+        arrays = (terms, starts, ids, tfs, positions, pos_starts)
+        return cls(*arrays, sum(x.nbytes for x in arrays if x is not None))
 
-    def rows_of(self, needles: np.ndarray) -> list:
-        """Table slices holding the rows of each term in ``needles``."""
-        lo = np.searchsorted(self.terms, needles, "left").tolist()
-        hi = np.searchsorted(self.terms, needles, "right").tolist()
-        return [self.table.slice(a, b - a) for a, b in zip(lo, hi) if b > a]
+    def find(self, needles: np.ndarray) -> list[tuple[str, int, int]]:
+        """(term, start, end) of each term of ``needles`` (sorted ``S``
+        array) that the group holds."""
+        i = np.searchsorted(self.terms, needles)
+        held = i < self.terms.size
+        held[held] = self.terms[i[held]] == needles[held]
+        return [
+            (t.decode(), int(self.starts[k]), int(self.starts[k + 1]))
+            for t, k in zip(needles[held].tolist(), i[held].tolist())
+        ]
 
 
 @dataclass
@@ -165,8 +195,8 @@ class IndexReader:
     _rg_min: np.ndarray = field(init=False, default=None)
     _rg_max: np.ndarray = field(init=False, default=None)
     _rg_nostats: np.ndarray = field(init=False, default=None)
-    # decompressed row groups, (file index, row group, positional) ->
-    # _RowGroup in LRU order; emptied with the files it was read from
+    # decoded row groups, (file index, row group, positional) -> _RowGroup
+    # in LRU order; emptied with the files it was read from
     _rg_cache: OrderedDict = field(init=False, default_factory=OrderedDict)
     # the snapshot's docmap files, shard -> [ParquetFile]
     _docmap: dict = field(init=False, default_factory=dict)
@@ -342,22 +372,22 @@ class IndexReader:
     def _read_chains(self, terms: list[str], prefix: str, avgdl: float | None = None) -> dict:
         """term -> [(shard, ids, saturation)] for ``_postings_for`` ("";
         saturations under ``avgdl``, by default the snapshot's) and
-        [(shard, ids, tfs, position lists)] for ``_positions_for`` ("pos:").
-        Cached terms skip the read and the decode. The cache is bypassed
+        [(shard, ids, tfs, position lists)] for ``_positions_for`` ("pos:"),
+        shards ascending. Cached terms skip the read. The cache is bypassed
         for an ``avgdl`` not the snapshot's. For the rest, the row-group
         directory picks the row groups whose [term min, term max] covers a
         missing term. Each picked group comes from the row-group cache or,
-        on a miss, is read once from the snapshot's open file and cached
-        (``_read_row_group``); the missing terms' rows are cut from it,
-        labelled with their shard and decoded together by
-        ``codec.decode_postings``.
-        The selection is conservative for any row order, so an unsorted
-        index answers the same, only reading more row groups.
+        on a miss, is read once from the snapshot's open file, decoded and
+        cached (``_read_row_group``); a missing term's postings are then a
+        ``searchsorted`` and array slices of the decoded group, widened to
+        int64 plus the shard base. A chain cut by a row-group boundary
+        joins its parts in doc-id order, which also merges the interleaved
+        blocks of an index written before the term sort: the selection is
+        conservative for any row order, so such an index answers the same,
+        only reading more row groups.
         ``postings_read`` counts row groups read from files, row groups
         served from the cache, row groups in the directory and files read,
         and holds the cache's current bytes."""
-        import pyarrow as pa
-
         own = float(self.stats["avgdl"])
         avgdl = own if avgdl is None else float(avgdl)
         cache = self.cache if avgdl == own else None
@@ -374,8 +404,6 @@ class IndexReader:
             missing.append(t)
         if not missing:
             return out
-        for t in missing:
-            out[t] = []
         want = np.array(sorted(missing), dtype=str)
         # first wanted term >= each row group's min; a hit if it is <= max
         first = np.minimum(np.searchsorted(want, self._rg_min), want.size - 1)
@@ -385,7 +413,7 @@ class IndexReader:
         self.postings_read["row_groups_total"] += int(hit.size)
         needles = np.array([t.encode() for t in want.tolist()], dtype="S")
         files_read: set[int] = set()
-        parts = []
+        parts: dict = {}  # (term, shard) -> [(group, start, end)]
         for fi, rg in zip(self._rg_file[hit].tolist(), self._rg_index[hit].tolist()):
             key = (fi, rg, bool(prefix))
             group = self._rg_cache.get(key)
@@ -395,23 +423,34 @@ class IndexReader:
             else:
                 self._rg_cache.move_to_end(key)
                 self.postings_read["row_group_hits"] += 1
-            shard = self._files[fi].shard
-            for part in group.rows_of(needles):
-                parts.append(part.append_column(
-                    "shard", pa.array(np.full(part.num_rows, shard, dtype=np.int32))
-                ))
+            for t, lo, hi in group.find(needles):
+                parts.setdefault((t, self._files[fi].shard), []).append((group, lo, hi))
         self.postings_read["files"] += len(files_read)
-        if parts:
-            chains = codec.decode_postings(
-                pa.concat_tables(parts), self.docs_per_shard
-            )
-            k1, b = float(self.stats["k1"]), float(self.stats["b"])
-            for (t, shard), chain in chains.items():
-                if not prefix:
-                    ids, tfs = chain
-                    dl = self._shard_state(shard).doc_len[ids - shard * self.docs_per_shard]
-                    chain = (ids, codec.bm25_saturation(tfs, dl, k1, b, avgdl))
-                out[t].append((shard, *chain))
+        for t in missing:
+            out[t] = []
+        k1, b = float(self.stats["k1"]), float(self.stats["b"])
+        for (t, shard), runs in sorted(parts.items()):
+            local = np.concatenate([g.ids[lo:hi] for g, lo, hi in runs])
+            tfs = np.concatenate([g.tfs[lo:hi] for g, lo, hi in runs])
+            if prefix:
+                plists = [
+                    p for g, lo, hi in runs
+                    for p in np.split(
+                        g.positions[g.pos_starts[lo] : g.pos_starts[hi]].astype(np.int64),
+                        np.cumsum(g.tfs[lo:hi], dtype=np.int64)[:-1],
+                    )
+                ]
+            if len(runs) > 1:
+                order = np.argsort(local, kind="stable")
+                local, tfs = local[order], tfs[order]
+                if prefix:
+                    plists = [plists[i] for i in order.tolist()]
+            ids = local.astype(np.int64) + shard * self.docs_per_shard
+            if prefix:
+                out[t].append((shard, ids, tfs.astype(np.int64), plists))
+            else:
+                dl = self._shard_state(shard).doc_len[local]
+                out[t].append((shard, ids, codec.bm25_saturation(tfs, dl, k1, b, avgdl)))
         if cache is not None:
             for t in missing:
                 key = TtlLruCache.make_postings_key(prefix + t, self.snapshot)
@@ -419,19 +458,21 @@ class IndexReader:
         return out
 
     def _read_row_group(self, key: tuple[int, int, bool]) -> _RowGroup:
-        """Read, decompress and cache row group ``rg`` of posting file
-        ``fi`` (``key = (fi, rg, positional)``; a positional read also holds
-        the positions column, so it is cached under its own key). Least
+        """Read, decode and cache row group ``rg`` of posting file ``fi``
+        (``key = (fi, rg, positional)``; a positional read also decodes the
+        positions column, so it is cached under its own key). Least
         recently used groups are evicted while the cache holds more than
         ``POSTINGS_ROW_GROUP_CACHE_BYTES`` and more than this group."""
         fi, rg, positional = key
-        cols = ["term", "block_id", "n_docs", "deltas", "tfs"] + (
+        cols = ["term", "first_doc_id", "n_docs", "deltas", "tfs"] + (
             ["positions"] if positional else []
         )
         # one small row group: pyarrow's thread pool costs more than it
         # saves here
+        f = self._files[fi]
         group = _RowGroup.of(
-            self._files[fi].handle.read_row_group(rg, columns=cols, use_threads=False)
+            f.handle.read_row_group(rg, columns=cols, use_threads=False),
+            f.shard * self.docs_per_shard,
         )
         counters, cache = self.postings_read, self._rg_cache
         counters["row_groups_read"] += 1
@@ -558,10 +599,10 @@ class IndexReader:
         on a positional index, 1-based positions) recovered from the index
         alone — the posting blocks are lossless, so no document store is
         needed. Reads exactly one shard's posting files (the doc's shard,
-        through the snapshot's open handles), decodes the delta and tf
-        streams of every block whose [first_doc_id, last_doc_id] range
-        covers the doc in one ``codec.decode_ints_many`` call, and the
-        position streams of the blocks that hold the doc in a second.
+        through the snapshot's open handles), decodes every block whose
+        [first_doc_id, last_doc_id] range covers the doc with
+        ``codec.decode_blocks``, and the blocks that hold the doc once
+        more with their positions.
 
         Returns {"doc_id", "doc_len", "terms": {term: tf | [positions]}};
         unknown doc_ids return an empty terms dict.
@@ -585,38 +626,30 @@ class IndexReader:
         ).filter(
             (pc.field("first_doc_id") <= doc_id) & (pc.field("last_doc_id") >= doc_id)
         )
-        nb = table.num_rows
         terms: dict = {}
-        if nb:
-            counts = table.column("n_docs").to_numpy().astype(np.int64)
-            streams = codec.decode_ints_many(
-                table.column("deltas").to_pylist() + table.column("tfs").to_pylist(),
-                counts.tolist() * 2,
+        if table.num_rows:
+            local = int(doc_id) - shard * span
+            counts = table.column("n_docs").to_numpy()
+            ids, tfs = codec.decode_blocks(
+                table.column("first_doc_id").to_numpy(), counts,
+                table.column("deltas").to_pylist(), table.column("tfs").to_pylist(),
+                base=shard * span,
             )
-            deltas = np.concatenate(streams[:nb]).astype(np.int64)
-            tfs = np.concatenate(streams[nb:]).astype(np.int64)
-            # block deltas are relative to the PREVIOUS block's last id; for
-            # a direct block probe, each block's ids restart from its
-            # first_doc_id
-            starts = np.cumsum(counts) - counts
-            c = np.cumsum(deltas)
-            first = table.column("first_doc_id").to_numpy().astype(np.int64)
-            ids = c - np.repeat(c[starts] - first, counts)
-            rows = np.flatnonzero(ids == int(doc_id))  # at most one per block
-            blocks = np.searchsorted(starts, rows, side="right") - 1
+            rows = np.flatnonzero(ids == local)  # at most one per block
+            blocks = np.searchsorted(np.cumsum(counts), rows, side="right")
             names = table.column("term").take(blocks).to_pylist()
             if positions:
-                # a block's positions stream holds one segment per doc, tf
-                # values long: the first absolute, the rest gaps
-                ahead = np.cumsum(tfs) - tfs  # tf values before each row
-                pos = codec.decode_ints_many(
-                    table.column("positions").take(blocks).to_pylist(),
-                    np.add.reduceat(tfs, starts)[blocks].tolist(),
+                # the blocks that hold the doc, decoded again with positions
+                held = table.take(blocks)
+                ids, tfs, pos = codec.decode_blocks(
+                    held.column("first_doc_id").to_numpy(), held.column("n_docs").to_numpy(),
+                    *(held.column(c).to_pylist() for c in ("deltas", "tfs", "positions")),
+                    base=shard * span,
                 )
-                lo = (ahead[rows] - ahead[starts[blocks]]).tolist()
+                mine = ids == local
                 vals = [
-                    np.cumsum(p[a : a + n].astype(np.int64)).tolist()
-                    for p, a, n in zip(pos, lo, tfs[rows].tolist())
+                    pos[e - n : e].astype(np.int64).tolist()
+                    for e, n in zip(np.cumsum(tfs)[mine].tolist(), tfs[mine].tolist())
                 ]
             else:
                 vals = tfs[rows].tolist()

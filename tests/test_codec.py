@@ -8,10 +8,10 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from neural_search_spark.index.codec import (
-    _split_position_lists,
     bm25_saturation,
     bm25_score_range,
     bm25_term_bound,
+    decode_blocks,
     decode_ints,
     decode_postings,
     encode_ints_many,
@@ -84,10 +84,10 @@ def decode_position_lists(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
     """One block's position stream back to per-doc lists; ``tfs`` gives
     the segment lengths."""
     tfs = np.asarray(tfs, dtype=np.int64)
-    total = int(tfs.sum())
-    if total == 0:
-        return [np.zeros(0, dtype=np.int64) for _ in tfs]
-    return _split_position_lists(decode_ints(buf, total).astype(np.int64), tfs)
+    if tfs.size == 0:
+        return []
+    vals = decode_ints(buf, int(tfs.sum())).astype(np.int64)
+    return [np.cumsum(seg) for seg in np.split(vals, np.cumsum(tfs)[:-1])]
 
 
 def _blocks(ids, tfs, dls, shard, span, block_size=128, pos=None) -> list[dict]:
@@ -385,6 +385,77 @@ def test_decode_postings_equals_block_chain(positional, arrow):
             assert len(chain[2]) == len(ref_pos)
             assert all(np.array_equal(a, b) for a, b in zip(chain[2], ref_pos))
     assert decode_postings(table.slice(0, 0) if arrow else table.iloc[:0], span) == {}
+
+
+@given(
+    st.integers(min_value=0, max_value=2**32 - 1),
+    st.integers(min_value=1, max_value=6),
+    st.booleans(),
+    st.booleans(),
+)
+@settings(max_examples=30, deadline=None)
+def test_decode_blocks_by_row_group_equals_decode_postings(seed, n_groups, shuffle, positional):
+    """Posting blocks cut into row groups (rows shuffled or in (shard,
+    term, block_id) order) and decoded group by group with
+    ``decode_blocks`` reassemble to exactly ``decode_postings``' chains,
+    which equal the encoded postings. Local ids and tfs (positions, on a
+    positional index) reach past 65,535, so the uint32 outputs are used."""
+    rng = np.random.default_rng(seed)
+    span = 1 << 17
+    rows = []
+    for term in ("a", "b", "c", "d"):
+        for shard in rng.choice(3, size=int(rng.integers(1, 4)), replace=False).tolist():
+            n = int(rng.integers(1, 300))
+            local = np.sort(rng.choice(span, size=n, replace=False))
+            tfs = rng.integers(1, 4 if positional else 1 << 17, size=n)
+            for d, tf in zip(local.tolist(), tfs.tolist()):
+                row = {"shard": shard, "term": term, "doc_id": shard * span + d,
+                       "tf": tf, "doc_len": tf}
+                if positional:
+                    row["positions"] = np.sort(rng.choice(1 << 17, tf, replace=False)) + 1
+                rows.append(row)
+    frame = pd.DataFrame(rows)
+    blocks = encode_postings(frame, span, int(rng.choice([4, 16, 128])))
+    if shuffle:
+        blocks = blocks.iloc[rng.permutation(len(blocks))].reset_index(drop=True)
+    cuts = np.sort(rng.choice(np.arange(1, len(blocks) + 1), n_groups - 1))
+    parts: dict = {}
+    for lo, hi in zip(np.concatenate(([0], cuts)), np.concatenate((cuts, [len(blocks)]))):
+        g = blocks.iloc[lo:hi]
+        shard = g["shard"].to_numpy()
+        flat = decode_blocks(
+            g["first_doc_id"].to_numpy(), g["n_docs"].to_numpy(),
+            g["deltas"].tolist(), g["tfs"].tolist(),
+            *([g["positions"].tolist()] if positional else []), base=shard * span,
+        )
+        assert len(flat) == (3 if positional else 2)
+        for arr in flat:
+            top = int(arr.max()) if arr.size else 0
+            assert arr.dtype == (np.uint16 if top < 1 << 16 else np.uint32)
+        ends = np.cumsum(g["n_docs"].to_numpy())
+        pos_ends = np.cumsum(flat[1].astype(np.int64))
+        for (t, sh, e, n) in zip(g["term"], shard.tolist(), ends.tolist(), g["n_docs"]):
+            ids = flat[0][e - n : e].astype(np.int64) + sh * span
+            tfs = flat[1][e - n : e].astype(np.int64)
+            part = [(i, f) for i, f in zip(ids.tolist(), tfs.tolist())]
+            if positional:
+                p_end = pos_ends[e - n : e]
+                part = [
+                    (i, f, flat[2][pe - f : pe].astype(np.int64).tolist())
+                    for i, f, pe in zip(ids.tolist(), tfs.tolist(), p_end.tolist())
+                ]
+            parts.setdefault((t, sh), []).extend(part)
+    want = decode_postings(blocks, span)
+    assert sorted(parts) == list(want)
+    for key, chain in want.items():
+        got = sorted(parts[key])
+        assert [p[0] for p in got] == chain[0].tolist()
+        assert [p[1] for p in got] == chain[1].tolist()
+        if positional:
+            assert [p[2] for p in got] == [x.tolist() for x in chain[2]]
+    src = frame.sort_values(["term", "shard", "doc_id"])
+    assert np.concatenate([c[0] for c in want.values()]).tolist() == src["doc_id"].tolist()
+    assert np.concatenate([c[1] for c in want.values()]).tolist() == src["tf"].tolist()
 
 
 def score_range_ref(chains, doc_len, lo, hi, k1, b, avgdl, positive_only):

@@ -118,9 +118,14 @@ def test_wand_rank_identity(spark, built, oracle):
 
 
 def test_build_determinism(spark, corpus_small, tmp_path):
-    """Two builds of the same snapshot produce byte-identical posting blocks."""
+    """Two builds of the same snapshot produce byte-identical posting blocks,
+    and neither leaves a persisted RDD behind (the id assignment's range
+    partitioning and the tokenization are released)."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     a = build_index(corpus_small, str(tmp_path / "a"), layout=LAYOUT, n_buckets=8)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     b = build_index(corpus_small, str(tmp_path / "b"), layout=LAYOUT, n_buckets=8)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
     def blocks(idx):
         return sorted(

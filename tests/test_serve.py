@@ -219,6 +219,42 @@ def test_reader_legacy_unsorted_layout_answers_identically(served, tmp_path):
     assert reads[1]["row_group_hits"] > reads[0]["row_group_hits"]
 
 
+def _decoded_bytes(group) -> int:
+    """Bytes of a cached row group's decoded arrays."""
+    arrays = (group.terms, group.starts, group.ids, group.tfs, group.positions,
+              group.pos_starts)
+    return sum(a.nbytes for a in arrays if a is not None)
+
+
+def test_reader_chain_across_row_groups_answers_identically(served, tmp_path):
+    """With row groups of 3 blocks, a term whose chain has more blocks in a
+    shard is cut by row-group boundaries; the decoded parts join in doc-id
+    order and answer exactly as the build's layout does. The cache holds
+    exactly the decoded arrays' bytes."""
+    import numpy as np
+
+    _, reader = served
+    small = str(tmp_path / "small")
+    _rewrite_postings(reader.root, small, files_per_shard=1, row_group_size=3,
+                      shuffle=False)
+    rd = IndexReader(small)
+    blocks: dict = {}
+    for f in rd._files:
+        for t in f.handle.read(columns=["term"]).column("term").to_pylist():
+            blocks[(t, f.shard)] = blocks.get((t, f.shard), 0) + 1
+    term = min(t for (t, _), n in blocks.items() if n > 3)
+    for positive_only in (True, False):
+        assert rd.query(term, top_k=400, positive_only=positive_only) == (
+            reader.query(term, top_k=400, positive_only=positive_only)
+        )
+    holding = [g for g in rd._rg_cache.values()
+               if np.isin(np.array([term.encode()], dtype="S"), g.terms)[0]]
+    assert len(holding) > len(rd._files)
+    assert all(g.nbytes == _decoded_bytes(g) for g in rd._rg_cache.values())
+    assert rd.postings_read["row_group_cache_bytes"] == sum(
+        g.nbytes for g in rd._rg_cache.values())
+
+
 def test_reader_reads_one_row_group_per_shard(served, tmp_path):
     """On a term-sorted index a one-term query reads, in each shard holding
     the term, only the row group that holds it (postings_read counters)."""
@@ -637,9 +673,10 @@ def test_reader_phrase_and_near_on_positional_index(spark, tmp_path_factory):
     ]
     corpus = spark.createDataFrame(rows, "doc_id long, url string, text string")
     out = str(root / "idx")
+    # shard 0 holds docs 0-2, so alpha's and beta's chains there have 2 blocks
     build_index(
         corpus, out, id_col="doc_id",
-        layout=IndexLayout(docs_per_shard=2, block_size=2), n_buckets=2,
+        layout=IndexLayout(docs_per_shard=3, block_size=2), n_buckets=2,
         store_positions=True,
     )
     reader = IndexReader(out)
@@ -669,6 +706,29 @@ def test_reader_phrase_and_near_on_positional_index(spark, tmp_path_factory):
     )
     assert got_nr == want_nr
     assert (1, 2) in got_nr and (0, 2) in got_nr and (2, 5) in got_nr
+
+    # a second phrase/NEAR read is served from the decoded positional
+    # groups; on groups of one block, rows shuffled, the two-block chains
+    # are cut by row-group boundaries and the answers stay the same
+    read = dict(reader.postings_read)
+    assert reader.query_phrase("alpha beta", top_k=10) == got_ph
+    assert reader.query_near("alpha beta", max_span=5, top_k=10) == got_nr
+    assert reader.postings_read["row_groups_read"] == read["row_groups_read"]
+    assert reader.postings_read["row_group_hits"] > read["row_group_hits"]
+    assert all(pos and g.positions is not None and g.nbytes == _decoded_bytes(g)
+               for (_, _, pos), g in reader._rg_cache.items())
+    tiny = str(root / "tiny")
+    _rewrite_postings(out, tiny, files_per_shard=1, row_group_size=1, shuffle=True)
+    cut = IndexReader(tiny)
+    assert cut.query_phrase("alpha beta", top_k=10) == got_ph
+    assert cut.query_near("alpha beta", max_span=5, top_k=10) == got_nr
+    assert cut.query_near("alpha beta", max_span=5, top_k=10, ordered=True) == (
+        reader.query_near("alpha beta", max_span=5, top_k=10, ordered=True))
+    groups_per_chain: dict = {}
+    for (fi, _rg, _pos), g in cut._rg_cache.items():
+        for t in g.terms.tolist():
+            groups_per_chain[(t, fi)] = groups_per_chain.get((t, fi), 0) + 1
+    assert max(groups_per_chain.values()) > 1
 
     # a flat read of the same row groups is cached without positions;
     # phrase and NEAR still read and decode the positions
@@ -807,7 +867,7 @@ def test_cli_serve_health_and_stats(served):
     # the first query read posting row groups; the cached repeat read none
     assert stats["postings"]["files"] > 0
     assert 0 < stats["postings"]["row_groups_read"] <= stats["postings"]["row_groups_total"]
-    # the read row groups stay decompressed in the replica
+    # the read row groups stay decoded in the replica
     assert stats["postings"]["row_group_hits"] == 0
     assert stats["postings"]["row_group_cache_bytes"] > 0
     # per-kind counts of the answered requests
