@@ -591,7 +591,7 @@ def _serve_near(s, req) -> dict:
     # from a positional index; ordered=true requires the terms in query
     # order (SpanNear inOrder)
     nh = s.reader.query_near(
-        req["near"], max_span=int_field(req["span"], "span"),
+        req["near"], max_span=int_field(req["span"], "span", 1),
         top_k=_req_top_k(req, s.args.top_k), ordered=bool(req.get("ordered")),
     )
     return {"near": req["near"],

@@ -232,8 +232,8 @@ def build_index(
         if not (ckpt and ckpt.get("phase1_done")):
             t0 = time.time()
             if id_col is None:
-                # the clash check sees every column; the id kernel then
-                # carries only the two columns the build reads
+                # the clash check sees every column; the id assignment then
+                # persists only the two columns the build reads
                 reject_doc_id_clash(corpus)
                 with_ids = assign_doc_ids(
                     corpus.select(*dict.fromkeys((url_col, text_col))), order_col=url_col
@@ -258,13 +258,13 @@ def build_index(
             # same findall regex as full tokenization, so deriving the length
             # here removes an entire text read + Arrow pipe + regex pass from
             # phase 1. The price is n_docs-row exchanges (max-combine collapses
-            # each doc's term rows map-side; the url side runs the id kernel
-            # again over the persisted (url, text) partitions, text passing
-            # through the Arrow pipe untokenized) — at web scale a slim doc_id
-            # shuffle beats re-tokenizing the text column. The left join keeps
-            # zero-token docs (no dt rows) in the docmap with doc_len = 0, and
-            # the shard repartition gives one output file per shard partition
-            # instead of tasks-times-shards fragments from the join layout.
+            # each doc's term rows map-side; the url side is a JVM projection
+            # of the persisted (url, text) partitions) — at web scale a slim
+            # doc_id shuffle beats re-tokenizing the text column. The left
+            # join keeps zero-token docs (no dt rows) in the docmap with
+            # doc_len = 0, and the shard repartition gives one output file per
+            # shard partition instead of tasks-times-shards fragments from the
+            # join layout.
             lens = dt.groupBy("doc_id").agg(F.max("doc_len").alias("doc_len"))
             docmap_df = (
                 with_ids.select("doc_id", F.col(url_col).alias("url"))

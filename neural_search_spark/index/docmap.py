@@ -8,24 +8,24 @@ partition — a non-starter at 10^12 rows — so we use the TeraSort pattern:
 
   1. range-partition by url + sort within partitions (scalable global sort),
   2. tiny job counting rows per partition -> driver-side offsets,
-  3. mapInPandas assigning ``offset[pid] + local_position``.
+  3. one projection of Spark built-ins assigning ``offset[pid] + row``:
+     ``monotonically_increasing_id()`` is ``pid << 33 | row``, so its low 33
+     bits are the row's position in its partition. No Python runs, so a
+     build's only Python pass over the text is the tokenizer.
 
 The partitioned DataFrame is persisted between passes so both see identical
-partitioning, and stays persisted for every later action on the result:
-re-sampling the range bounds could assign other ids. ``release_doc_ids``
-unpersists it once the caller is done with the ids.
+partitioning and row order, and stays persisted for every later action on
+the result: re-sampling the range bounds could assign other ids.
+``release_doc_ids`` unpersists it once the caller is done with the ids.
 """
 
 from __future__ import annotations
 
 import weakref
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark import StorageLevel, TaskContext
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def find_doc_id_col(df: DataFrame) -> str | None:
@@ -97,27 +97,16 @@ def assign_doc_ids(
         .collect()
     )
     by_pid = {r["pid"]: r["count"] for r in counts}
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in range(max(by_pid, default=-1) + 1):
-        offsets[pid] = acc
+    offsets, acc = [], 0
+    for pid in range(max(by_pid, default=0) + 1):
+        offsets.append(acc)
         acc += by_pid.get(pid, 0)
-    boff = spark.sparkContext.broadcast(offsets)
 
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType(), False)] + list(parts.schema.fields)
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pos = boff.value.get(ctx.partitionId(), 0)
-        for pdf in batches:
-            ids = range(pos, pos + len(pdf))
-            pos += len(pdf)
-            out = pdf.copy()
-            out.insert(0, "doc_id", pd.Series(list(ids), dtype="int64"))
-            yield out
-
-    with_ids = parts.mapInPandas(kernel, schema=out_schema)
+    # with ANSI mode off an array lookup is nullable, though every row's pid
+    # is counted; coalesce keeps doc_id non-null in the schema and the docmap
+    row = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
+    offset = F.array(*map(F.lit, offsets))[F.spark_partition_id()]
+    doc_id = F.coalesce(offset + row, F.lit(0))
+    with_ids = parts.select(doc_id.alias("doc_id"), "*")
     _ID_SOURCES[with_ids] = parts
     return with_ids

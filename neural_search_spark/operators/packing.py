@@ -17,7 +17,10 @@ the TeraSort pattern from ``index/docmap.py``:
   2. tiny per-partition token-sum job -> driver-side cumulative offsets
      (one long per partition),
   3. partition-local cumulative sums shifted by the partition offset
-     (Arrow-batched kernel, no cross-partition traffic).
+     (Arrow-batched kernel, no cross-partition traffic). Id assignment
+     does step 3 with Spark built-ins because a row's position in its
+     partition is in ``monotonically_increasing_id``; no built-in holds
+     a running sum of another column, so this step keeps its kernel.
 
 Output per document (all exact integer arithmetic):
 

@@ -89,6 +89,14 @@ def round_half_up(values: np.ndarray, digits: int) -> np.ndarray:
     )
 
 
+def _unique_ids(ids) -> np.ndarray | None:
+    """A caller's doc-id filter as sorted distinct int64 ids (None stays
+    None): the form ``_score`` filters with and the cache key digests."""
+    if ids is None:
+        return None
+    return np.unique(np.asarray(list(ids), dtype=np.int64))
+
+
 def _deletion_variants(term: str) -> set[str]:
     """The term plus every drop-one-character string (SymSpell distance-1
     neighborhood; mirrors query/suggest.py:deletion_variants)."""
@@ -938,6 +946,26 @@ class IndexReader:
 
     # -- querying -----------------------------------------------------------
 
+    def _search_key(
+        self, text, top_k, positive_only, score_rounding, allowed, offset,
+        search_after, **options,
+    ) -> str:
+        """The result-cache key of one request on this snapshot: the id-set
+        digest of ``allowed``, the page position and every request option
+        that changes the page (a falsy option is left out of the key)."""
+        fkey = {}
+        if allowed is not None:
+            fkey["ids"] = hashlib.md5(allowed.tobytes()).hexdigest()
+        if offset:
+            fkey["offset"] = offset
+        if search_after is not None:
+            fkey["after"] = f"{search_after[0]!r}:{int(search_after[1])}"
+        fkey.update((k, v) for k, v in options.items() if v)
+        return TtlLruCache.make_search_key(
+            text, top_k, positive_only, self.snapshot,
+            filters=fkey or None, score_rounding=score_rounding,
+        )
+
     def query(
         self,
         text: str,
@@ -992,28 +1020,11 @@ class IndexReader:
         already-scored candidates. Cached results are keyed by the id-set
         digest, so distinct filters never collide.
         """
-        allowed = None
-        if allowed_docs is not None:
-            allowed = np.unique(np.asarray(list(allowed_docs), dtype=np.int64))
+        allowed = _unique_ids(allowed_docs)
         if self.cache is not None:
-            fdig = (
-                hashlib.md5(allowed.tobytes()).hexdigest()
-                if allowed is not None
-                else None
-            )
-            fkey = {}
-            if fdig:
-                fkey["ids"] = fdig
-            if offset:
-                fkey["offset"] = offset
-            if search_after is not None:
-                fkey["after"] = f"{search_after[0]!r}:{int(search_after[1])}"
-            if collapse_hosts:
-                fkey["collapse"] = collapse_hosts
-            skey = TtlLruCache.make_search_key(
-                text, top_k, positive_only, self.snapshot,
-                filters=fkey or None,
-                score_rounding=score_rounding,
+            skey = self._search_key(
+                text, top_k, positive_only, score_rounding, allowed, offset,
+                search_after, collapse=collapse_hosts,
             )
             hit = self.cache.get(skey)
             if hit is not None:
@@ -1070,25 +1081,11 @@ class IndexReader:
         """
         from .boolean import parse_bool_query
 
+        allowed = _unique_ids(allowed_docs)
         if self.cache is not None:
-            adig = None
-            if allowed_docs is not None:
-                arr = np.unique(np.asarray(list(allowed_docs), dtype=np.int64))
-                allowed_docs = arr
-                adig = hashlib.md5(arr.tobytes()).hexdigest()
-            fkey = {}
-            if adig:
-                fkey["ids"] = adig
-            if offset:
-                fkey["offset"] = offset
-            if search_after is not None:
-                fkey["after"] = f"{search_after[0]!r}:{int(search_after[1])}"
-            if min_should_match:
-                fkey["msm"] = min_should_match
-            skey = TtlLruCache.make_search_key(
-                f"bool:{text}", top_k, positive_only, self.snapshot,
-                filters=fkey or None,
-                score_rounding=score_rounding,
+            skey = self._search_key(
+                f"bool:{text}", top_k, positive_only, score_rounding, allowed,
+                offset, search_after, msm=min_should_match,
             )
             hit = self.cache.get(skey)
             if hit is not None:
@@ -1134,9 +1131,6 @@ class IndexReader:
                     np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
                 )
 
-            allowed = None
-            if allowed_docs is not None:
-                allowed = np.unique(np.asarray(list(allowed_docs), dtype=np.int64))
             for t in must_terms:
                 have = _ids_of(t)
                 allowed = have if allowed is None else np.intersect1d(allowed, have)

@@ -139,6 +139,36 @@ def test_build_determinism(spark, corpus_small, tmp_path):
     assert blocks(a) == blocks(b)
 
 
+@pytest.mark.parametrize("num_partitions", [1, 3, 64])
+def test_assign_doc_ids_is_url_rank_without_python(spark, num_partitions):
+    """doc_id is the url's 0-based rank for any partition count, including
+    more partitions than rows (most of them empty), and the id projection
+    runs no Python: the plan holds no pandas or Python UDF node."""
+    import random
+
+    from neural_search_spark.index.docmap import assign_doc_ids, release_doc_ids
+
+    rng = random.Random(num_partitions)
+    urls = [f"https://h{rng.randrange(9)}.example/{rng.randrange(10**6)}" for _ in range(37)]
+    urls = list(dict.fromkeys(urls))
+    corpus = spark.createDataFrame([(u, "w0005") for u in urls], "url string, text string")
+    with_ids = assign_doc_ids(corpus, num_partitions=num_partitions)
+    try:
+        assert with_ids.columns == ["doc_id", "url", "text"]
+        assert not with_ids.schema["doc_id"].nullable
+        got = {r["url"]: r["doc_id"] for r in with_ids.collect()}
+        assert got == {u: i for i, u in enumerate(sorted(urls))}
+        plan = with_ids._jdf.queryExecution().executedPlan().toString()
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, plan
+    finally:
+        release_doc_ids(with_ids)
+
+    empty = assign_doc_ids(corpus.limit(0), num_partitions=num_partitions)
+    assert empty.collect() == []
+    release_doc_ids(empty)
+
+
 def test_kill_and_resume_equals_single_shot(spark, corpus_small, tmp_path):
     single = build_index(corpus_small, str(tmp_path / "single"), layout=LAYOUT, n_buckets=8)
 

@@ -1271,6 +1271,7 @@ FIELD_ERRORS = {
     '{"more_like_this": 0, "m": -1}': "m must be",
     '{"query": "w0005", "search_after": [NaN, 1]}': "search_after[0]",
     '{"dsl": {"query": {"match": "w0005"}, "top_k": 3.7}}': "top_k",
+    '{"near": "w0005 w0010", "span": 0}': "span",
 }
 
 # request lines that must each get one error reply and leave the replica
