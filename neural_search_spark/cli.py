@@ -14,10 +14,10 @@ or, since ``-m`` needs the file on the driver, the equivalent thin launcher:
     spark-submit --py-files nss.zip cli.py batch-query --index <dir> --queries <parquet> --out <parquet>
     spark-submit --py-files nss.zip cli.py stream-ingest --input <dir> --output <dir> --checkpoint <dir>
 
-``serve`` is the one subcommand that needs NO Spark at all (IndexReader +
-pyarrow only — run it with plain ``python cli.py serve ...`` on a serving
-replica): queries on stdin, one JSON result line each, millisecond warm
-latency, TTL+LRU caching on by default.
+``serve`` is the one subcommand that needs NO Spark at all (IndexReader over
+numpy + pyarrow; it imports neither pyspark nor pandas — run it with plain
+``python cli.py serve ...`` on a serving replica): queries on stdin, one JSON
+result line each, millisecond warm latency, TTL+LRU caching on by default.
 
 Replaces the reference's FastAPI/Celery surface (SURVEY.md §3): documents in
 = ``build``/``add``/``stream-ingest``; search = ``query``/``batch-query``;
@@ -836,7 +836,11 @@ def cmd_serve(args) -> int:
     (query/serve_multi.py). ``_HANDLERS`` above is the protocol's single
     definition: every request kind in precedence order, with its handler.
     One process per serving replica; scale-out is N identical stateless
-    processes behind any front end."""
+    processes behind any front end. A single-index replica imports no
+    pyspark, py4j or pandas, at start-up or for any request kind, which
+    keeps its start-up and memory small (tests/test_serve.py pins the
+    import closure); ``--corpus`` hydration and ``--percolate-queries`` are
+    the exceptions."""
     from collections import defaultdict
     from types import SimpleNamespace
 

@@ -12,15 +12,19 @@ An analyzer is a pure per-term fold (term -> term), registered as a
 (python_fn, column_fn) pair: the Column form runs in whole-stage codegen on
 the cluster side, the Python form serves the replica and driver-side query
 prep. Token counts are invariant under a per-term fold, so doc_len / avgdl
-never change — only the term space (and therefore df/idf) does.
+never change — only the term space (and therefore df/idf) does. pyspark is
+imported only by the Column forms, so the replica's ``analyze_tokens`` runs
+without it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from typing import TYPE_CHECKING
 
 from .stem import s_stem_col, s_stem_py
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 # ASCII folding (the Lucene ASCIIFoldingFilter analog, 1:1 subset): strip
 # Latin diacritics so "café" and "cafe" share one posting group. The table
@@ -40,6 +44,8 @@ def ascii_fold_py(term: str) -> str:
 
 
 def ascii_fold_col(term):
+    from pyspark.sql import functions as F
+
     return F.translate(term, _FOLD_SRC, _FOLD_DST)
 
 
@@ -85,6 +91,8 @@ def fold_doc_terms(doc_terms: DataFrame, analyzer: str | None) -> DataFrame:
     (doc_id, term) so the count(*)-is-df invariant of ``term_stats`` holds.
     Identity analyzer returns the input unchanged (no extra shuffle).
     """
+    from pyspark.sql import functions as F
+
     name = resolve_analyzer(analyzer)
     if not name:
         return doc_terms
@@ -104,6 +112,8 @@ def fold_doc_term_positions(dtp: DataFrame, analyzer: str | None) -> DataFrame:
     Variants' position lists merge into one sorted list (positions are
     disjoint — each token occupies one slot — so the merged list stays
     strictly increasing and duplicate-free)."""
+    from pyspark.sql import functions as F
+
     name = resolve_analyzer(analyzer)
     if not name:
         return dtp

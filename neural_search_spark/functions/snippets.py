@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .tokenize import _TOKEN_RE
+from .tokens import _TOKEN_RE
 
 _SNIPPET_SCHEMA = T.StructType(
     [

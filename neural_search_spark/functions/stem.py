@@ -16,13 +16,16 @@ First matching rule wins; words of <= 2 letters (and rule-1 words of <= 3)
 pass through. The rules are pure string tests, so the stem runs as a
 codegen Column expression (JVM-side, zero Python in the fold), with
 bit-identical Python and SQL mirrors for the serving replica and the
-DuckDB oracle.
+DuckDB oracle. Only the Column mirror imports pyspark, so the replica folds
+query terms without it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import Column
 
 
 def s_stem_py(term: str) -> str:
@@ -50,6 +53,8 @@ def s_stem_py(term: str) -> str:
 
 def s_stem_col(term: Column) -> Column:
     """Column-expression S-stemmer: whole-stage-codegen string ops only."""
+    from pyspark.sql import functions as F
+
     n = F.length(term)
     drop_s = term.substr(F.lit(1), n - 1)
     return (

@@ -12,7 +12,9 @@ characters (the boundaries are implied by maximality), so the single-pass
 
 No per-row Python UDFs: everything is a pandas UDF / mapInPandas over Arrow
 batches (the per-element loop inside a batch is the unavoidable ``re`` kernel,
-amortized over thousands of rows per batch).
+amortized over thousands of rows per batch). The kernel itself, ``_TOKEN_RE``
+and ``tokenize_py``, lives in the Spark-free ``functions/tokens.py``, so the
+serving replica tokenizes without importing pyspark or pandas.
 """
 
 from __future__ import annotations
@@ -27,14 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-_TOKEN_RE = re.compile(r"\b\w+\b")
-
-
-def tokenize_py(text: str | None) -> list[str]:
-    """Driver-side / oracle-side tokenizer. Reference-identical."""
-    if not text:
-        return []
-    return _TOKEN_RE.findall(text.lower())
+from .tokens import _TOKEN_RE
 
 
 @pandas_udf(T.ArrayType(T.StringType()))

@@ -12,13 +12,16 @@ pattern to the SAME strings.
 Input is any DataFrame with a URL string column — e.g. the input-hint corpus
 ``(url, warc_ts, html, text, lang)`` — and the outputs are narrow columns a
 table would be clustered by in a deployment (domain-clustered layout makes
-the per-domain cap a partition-local window, no shuffle).
+the per-domain cap a partition-local window, no shuffle). pyspark is imported
+inside the operators, so the serving replica reads ``RE_HOST`` without it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 # Dialect-portable pieces (Java regex == RE2 semantics for these patterns):
 # scheme = RFC 3986 ALPHA *( ALPHA / DIGIT / "+" / "-" / "." ), host = the
@@ -39,6 +42,8 @@ def url_parse(df: DataFrame, url_col: str = "url") -> DataFrame:
     codegen'd column ops; empty-string sentinels (never NULL) keep downstream
     groupBys total.
     """
+    from pyspark.sql import functions as F
+
     url = F.col(url_col)
     host = F.regexp_extract(url, RE_HOST, 1)
     labels = F.split(host, r"\.")
@@ -71,6 +76,8 @@ def host_stats(
     mega-domain is bounded because partial aggregation (map-side combine)
     collapses each partition's contribution to one row per domain first.
     """
+    from pyspark.sql import functions as F
+
     return parsed.groupBy(F.col(by).alias("domain")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("host").alias("n_hosts"),
@@ -95,6 +102,7 @@ def cap_per_domain(
     downstream stages can re-cut at smaller caps without recomputing.
     """
     from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
     w = Window.partitionBy(by).orderBy(F.asc(order_col))
     return (
@@ -123,6 +131,8 @@ def sample_per_domain(
     engine boundary. Broadcast rates join + codegen'd filter: zero shuffle,
     scan speed at any corpus size. Keeps ``sample_bucket`` for audit.
     """
+    from pyspark.sql import functions as F
+
     spark = parsed.sparkSession
     rows = [(d, int(round(r * 1_000_000))) for d, r in sorted(rates.items())]
     default_ppm = int(round(default_rate * 1_000_000))

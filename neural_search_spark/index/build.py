@@ -56,7 +56,7 @@ from ..config import DEFAULT_LAYOUT, DEFAULT_PARAMS, BM25Params, IndexLayout
 from ..functions.tokenize import doc_terms
 from .codec import encode_postings
 from .docmap import assign_doc_ids, reject_doc_id_clash, release_doc_ids
-from .stats import CorpusStats, floored_term_stats, term_stats
+from .stats import CorpusStats, floored_term_stats, mean_raw_idf, term_stats
 
 POSTINGS_SCHEMA = (
     "shard int, bucket int, term string, block_id int, first_doc_id long, "
@@ -167,7 +167,12 @@ def build_index(
 
     ``waves`` splits phase 2 into that many shard groups with a checkpoint
     commit after each — the resumability granularity. ``fail_after_wave``
-    injects a crash after N waves (test hook for kill-and-resume).
+    injects a crash after N waves (test hook for kill-and-resume). A call on
+    a directory that holds a checkpoint resumes it only if the call matches
+    the checkpoint's fingerprint: the corpus's source files
+    (``corpus.inputFiles()``), the BM25 params, the layout, the analyzer and
+    ``store_positions``. Any other call raises a ValueError that names the
+    first field that differs, instead of returning the old index.
 
     ``analyzer`` binds an index-time analysis fold (e.g. ``"stem"``) to the
     index: the token stream is folded before encoding, the name is recorded
@@ -204,19 +209,29 @@ def build_index(
     spark = corpus.sparkSession
     paths = IndexPaths(out_dir)
     os.makedirs(out_dir, exist_ok=True)
+    # what the index is a function of; a resume must match it. The source
+    # files come from the plan, without a Spark job
+    fingerprint = {
+        "input_files": sorted(corpus.inputFiles()),
+        "k1": params.k1,
+        "b": params.b,
+        "epsilon": params.epsilon,
+        "docs_per_shard": layout.docs_per_shard,
+        "block_size": layout.block_size,
+        "analyzer": analyzer,
+        "positional": bool(store_positions),
+    }
     ckpt = _read_checkpoint(paths)
-    if ckpt and ckpt.get("fingerprint", {}).get("analyzer", "") != analyzer:
-        raise ValueError(
-            "resume analyzer mismatch: index was built with "
-            f"{ckpt['fingerprint'].get('analyzer', '')!r}, call passed {analyzer!r}"
-        )
-    if ckpt and bool(ckpt.get("fingerprint", {}).get("positional", False)) != bool(
-        store_positions
-    ):
-        raise ValueError(
-            "resume positional mismatch: index was built with store_positions="
-            f"{ckpt['fingerprint'].get('positional', False)}, call passed {store_positions}"
-        )
+    if ckpt:
+        # a key the checkpoint lacks was not recorded, and is skipped; one
+        # written before analyzers and positions had neither
+        built = {"analyzer": "", "positional": False, **ckpt.get("fingerprint", {})}
+        for key, want in fingerprint.items():
+            if key in built and built[key] != want:
+                raise ValueError(
+                    f"resume {key} mismatch: index was built with {built[key]!r}, "
+                    f"call passed {want!r}"
+                )
     dt_cached = None  # set when phase 1 runs in THIS call (reused by phase 2)
     with_ids = None
     try:
@@ -289,7 +304,7 @@ def build_index(
             # the vocabulary-sized term stats feed two consumers (average_idf agg
             # + floored write); persisting avoids recomputing the term groupBy
             ts = term_stats(dt, n_docs).persist()
-            average_idf = float(ts.agg(F.avg("raw_idf")).collect()[0][0] or 0.0)
+            average_idf = mean_raw_idf(ts)
             floored_term_stats(ts, average_idf, params).write.mode("overwrite").parquet(
                 paths.term_stats
             )
@@ -318,17 +333,7 @@ def build_index(
                 "build_id": str(uuid.uuid4()),
                 "phase1_done": True,
                 "phase1_elapsed_sec": time.time() - t0,
-                "fingerprint": {
-                    "n_docs": n_docs,
-                    "avgdl": avgdl,
-                    "k1": params.k1,
-                    "b": params.b,
-                    "epsilon": params.epsilon,
-                    "docs_per_shard": span,
-                    "block_size": layout.block_size,
-                    "analyzer": analyzer,
-                    "positional": bool(store_positions),
-                },
+                "fingerprint": {"n_docs": n_docs, "avgdl": avgdl, **fingerprint},
                 "n_shards": max_shard + 1,
                 "done_shards": [],
             }

@@ -40,9 +40,13 @@ O(index) rewrite per ingest batch.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 _BLOCK = 128
 # rows (blocks, or streams of one bit-unpack) decoded per step
@@ -507,8 +511,12 @@ def encode_postings(frame, docs_per_shard: int, block_size: int = _BLOCK) -> pd.
     at every ``block_size``-th posting of a chain. The delta stream is the
     chain's ``diff``, taken from the shard base at the chain's start; a
     position stream gap-codes each posting's list from an absolute first
-    position. All streams encode in one ``encode_ints_many`` call.
+    position. All streams encode in one ``encode_ints_many`` call. pandas
+    is imported here, not at module level: the serving replica imports this
+    module and never encodes.
     """
+    import pandas as pd
+
     codes, terms = pd.factorize(frame["term"].to_numpy(), sort=True)
     cols = (frame[c].to_numpy(dtype=np.int64) for c in ("shard", "doc_id", "tf", "doc_len"))
     shard, ids, tf, dl = cols

@@ -45,7 +45,7 @@ from .build import (
     load_index,
 )
 from .codec import decode_postings
-from .stats import floored_term_stats
+from .stats import floored_term_stats, mean_raw_idf
 
 
 def _params_from_index(idx: PhysicalIndex) -> tuple[BM25Params, IndexLayout]:
@@ -77,7 +77,7 @@ def _rewrite_stats(
             - F.log(F.col("df") + 0.5)
         ).alias("raw_idf"),
     )
-    average_idf = float(ts.agg(F.avg("raw_idf")).collect()[0][0] or 0.0)
+    average_idf = mean_raw_idf(ts)
     out = floored_term_stats(ts, average_idf, params)
 
     tmp_ts = paths.term_stats + "__new"
@@ -250,6 +250,7 @@ def add_documents(
     ckpt["n_shards"] = max(int(ckpt["n_shards"]), affected[-1] + 1) if affected else ckpt["n_shards"]
     ckpt["fingerprint"]["n_docs"] = n_docs
     ckpt["fingerprint"]["avgdl"] = avgdl
+    ckpt["fingerprint"]["input_files"] = sorted(corpus.inputFiles())
     _invalidate_shards(paths, ckpt, affected)
     new_rows.unpersist()
     delta.unpersist()
@@ -347,6 +348,7 @@ def remove_documents(
     ).select("shard", "doc_id", "url", "doc_len")
     _overwrite_docmap_shards(spark, paths, affected, surviving)
 
+    ckpt["fingerprint"]["input_files"] = sorted(corpus_after.inputFiles())
     _invalidate_shards(paths, ckpt, affected)
     return build_index(
         corpus_after, out_dir, text_col=text_col, url_col=url_col,

@@ -42,7 +42,7 @@ from .build import (
     _write_postings,
     load_index,
 )
-from .stats import floored_term_stats
+from .stats import floored_term_stats, mean_raw_idf
 
 
 def _check_compatible(a: PhysicalIndex, b: PhysicalIndex) -> None:
@@ -165,7 +165,7 @@ def merge_indexes(
             F.log(F.lit(float(n_docs)) - F.col("df") + 0.5) - F.log(F.col("df") + 0.5)
         ).alias("raw_idf"),
     ).persist()
-    average_idf = float(ts.agg(F.avg("raw_idf")).collect()[0][0] or 0.0)
+    average_idf = mean_raw_idf(ts)
     from ..config import BM25Params
 
     params = BM25Params(k1=a.stats.k1, b=a.stats.b, epsilon=a.stats.epsilon)

@@ -7,7 +7,8 @@ reference constructs it at ``/root/reference/src/neural_search/core/hybrid.py:72
 So stats must be computed corpus-wide before any scoring:
 
   pass 1: N, avgdl (doc-level agg) and df/raw_idf per term (term-level agg)
-  pass 2: average_idf (vocabulary-level agg) -> floor
+  pass 2: average_idf (vocabulary-level agg, an exact decimal sum, so the
+          stats do not depend on the partitioning) -> floor
 
 Both aggregations are partial-agg friendly (map-side combine) and the floored
 idf is a projection — no extra shuffle.
@@ -48,6 +49,20 @@ def term_stats(doc_terms_df: DataFrame, n_docs: int) -> DataFrame:
             "raw_idf"
         ),
     )
+
+
+def mean_raw_idf(term_stats_df: DataFrame) -> float:
+    """``average_idf``: the mean raw idf over the vocabulary, a function of
+    the terms alone. A double ``avg`` adds in shuffle-arrival order, so its
+    last bit moves with the partitioning (and with it every floored idf);
+    here each raw idf is cast to ``decimal(38,18)``, whose sum is exact in
+    any order, and the sum is divided in decimal on the driver, so the mean
+    is rounded to a double once."""
+    row = term_stats_df.agg(
+        F.sum(F.col("raw_idf").cast("decimal(38,18)")).alias("total"),
+        F.count(F.lit(1)).alias("n"),
+    ).collect()[0]
+    return float(row["total"] / row["n"]) if row["n"] else 0.0
 
 
 def floored_term_stats(
@@ -101,8 +116,7 @@ def build_logical_index(
     n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
 
     ts = term_stats(dt, n_docs)
-    aidf_row = ts.agg(F.avg("raw_idf").alias("aidf")).collect()[0]
-    average_idf = float(aidf_row["aidf"] or 0.0)
+    average_idf = mean_raw_idf(ts)
 
     terms = floored_term_stats(ts, average_idf, params)
     stats = CorpusStats(

@@ -28,7 +28,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from ..config import BM25Params, DEFAULT_PARAMS
-from ..functions.tokenize import tokenize_py
+from ..functions.tokens import tokenize_py
 
 
 @dataclass

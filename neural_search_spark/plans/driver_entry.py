@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_PARAMS
-from ..functions.tokenize import tokenize_py
+from ..functions.tokens import tokenize_py
 from ..index.stats import build_logical_index
 from ..operators.filters import compile_filters
 from ..query.bm25_dataframe import bm25_scores

@@ -43,7 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.tokenize import tokenize_py
+from ..functions.tokens import tokenize_py
 from .bm25_dataframe import rank_topk
 
 _WINDOW_DOCS = 2048

@@ -17,17 +17,21 @@ every corpus-side join — the doc_terms side never shuffles except on the
 (query, doc) aggregation keys, and the must-count filter, the must_not
 anti-join, and the score agg all share that key, so AQE/Catalyst can reuse
 one exchange. The per-query top-k is a window cut, never a global sort.
+pyspark is imported inside the operators, so the serving replica parses
+clauses with ``parse_bool_query`` without it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from typing import TYPE_CHECKING
 
 from ..config import BM25Params, DEFAULT_PARAMS
-from ..functions.tokenize import tokenize_py
-from ..index.stats import BM25Index
-from .bm25_dataframe import bm25_contrib_expr, rank_topk
+from ..functions.tokens import tokenize_py
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
+
+    from ..index.stats import BM25Index
 
 
 def parse_bool_query(text: str) -> list[tuple[str, str]]:
@@ -89,6 +93,10 @@ def bm25_topk_bool(
     (query, doc) aggregation key as the score, so it adds no new shuffle
     grain.
     """
+    from pyspark.sql import functions as F
+
+    from .bm25_dataframe import bm25_contrib_expr, rank_topk
+
     bt = bool_terms
     # required-term count per query (0 for pure should queries): tiny,
     # computed on the driver-side-sized clause table, broadcast back

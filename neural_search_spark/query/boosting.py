@@ -29,7 +29,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..config import BM25Params, DEFAULT_PARAMS
-from ..functions.tokenize import tokenize_py
+from ..functions.tokens import tokenize_py
 from ..index.stats import BM25Index
 from .bm25_dataframe import rank_topk
 

@@ -84,7 +84,7 @@ def search_dsl(
     if kind == "match_phrase":
         if shapers:
             raise ValueError("result shaping composes with match queries")
-        from ..functions.tokenize import tokenize_py
+        from ..functions.tokens import tokenize_py
         from .phrase import doc_term_positions, ordered_near_topk, phrase_topk
 
         text = body["query"] if isinstance(body, dict) else str(body)

@@ -128,7 +128,7 @@ class PercolateMatcher:
 
     def match(self, text: str) -> list[int]:
         """query_ids (ascending) whose saved search matches this doc."""
-        from ..functions.tokenize import tokenize_py
+        from ..functions.tokens import tokenize_py
 
         terms = set(tokenize_py(text))
         return sorted(

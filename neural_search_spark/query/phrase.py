@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.tokenize import _TOKEN_RE, tokenize_py
+from ..functions.tokens import _TOKEN_RE, tokenize_py
 
 _POSITIONS_SCHEMA = T.StructType(
     [

@@ -14,17 +14,21 @@ nested-loop ``startswith`` over |V| x |Q| is cheap, and a terms table stored
 sorted/bucketed by term turns it into a range scan via min/max pruning. The
 expanded (query, term, idf) set is again broadcast into the doc_terms join,
 so the corpus side only shuffles once, at the per-(query, doc) score agg —
-identical shape to ``bm25_dataframe.bm25_topk``.
+identical shape to ``bm25_dataframe.bm25_topk``. pyspark is imported inside
+the operators, so the serving replica translates patterns with
+``wildcard_regex`` without it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from typing import TYPE_CHECKING
 
 from ..config import BM25Params, DEFAULT_PARAMS
-from ..index.stats import BM25Index
-from .bm25_dataframe import bm25_contrib_expr, rank_topk
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
+
+    from ..index.stats import BM25Index
 
 
 def expand_prefix(terms: DataFrame, queries: DataFrame) -> DataFrame:
@@ -34,6 +38,8 @@ def expand_prefix(terms: DataFrame, queries: DataFrame) -> DataFrame:
     matching nothing simply expands to zero rows (empty result group, same
     as an unknown literal term).
     """
+    from pyspark.sql import functions as F
+
     return terms.select("term", "idf").join(
         F.broadcast(queries.select("query_id", "prefix", "top_k")),
         F.col("term").startswith(F.col("prefix")),
@@ -52,6 +58,10 @@ def prefix_topk(
     ``round_to`` rounds scores BEFORE the rank window (pass 4 for the
     cross-engine oracle reconciliation used by the driver entries).
     """
+    from pyspark.sql import functions as F
+
+    from .bm25_dataframe import bm25_contrib_expr, rank_topk
+
     expanded = expand_prefix(index.terms, queries).withColumn("qtf", F.lit(1))
     contrib = index.doc_terms.join(F.broadcast(expanded), "term").select(
         "query_id",
@@ -99,6 +109,8 @@ def expand_wildcard(terms: DataFrame, queries: DataFrame) -> DataFrame:
     walks its term dictionary the same way). A leading-``*`` pattern is the
     known expensive shape there too; the vocab scan here is flat either way.
     """
+    from pyspark.sql import functions as F
+
     q = queries.select(
         "query_id",
         "top_k",
@@ -131,6 +143,10 @@ def wildcard_topk(
     """Per-query wildcard-match top-k: (query_id, rank, doc_id, score).
     Same scoring-expansion semantics and plan shape as ``prefix_topk``
     (each matched term contributes once with its own idf)."""
+    from pyspark.sql import functions as F
+
+    from .bm25_dataframe import bm25_contrib_expr, rank_topk
+
     expanded = expand_wildcard(index.terms, queries).withColumn("qtf", F.lit(1))
     contrib = index.doc_terms.join(F.broadcast(expanded), "term").select(
         "query_id",

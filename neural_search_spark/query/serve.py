@@ -21,6 +21,14 @@ Deployment shape at scale:
   * one reader per serving replica; replicas are stateless — everything
     durable lives in the index files, so restart = reopen, and maintenance
     commits (index/maintenance.py) are picked up with ``refresh()``;
+  * the replica is numpy + pyarrow only: no module it loads, at start-up or
+    for any request kind ``cli.py serve`` answers on one index, imports
+    pyspark, py4j or pandas (pinned in tests/test_serve.py). Parquet files
+    are read one by one through ``pq.ParquetFile`` (never
+    ``pq.read_table`` of a directory, which loads ``pyarrow.dataset``), and
+    numeric columns reach numpy through ``_numpy``, over their Arrow
+    buffers, since pyarrow's own ``to_numpy`` loads pandas. Only hydration
+    (``corpus_path``) still reads through ``pq.read_table``;
   * the term dictionary (term -> idf, vocabulary-sized) and corpus stats are
     cached in memory; per-shard doc_len arrays are loaded on first touch,
     through the docmap files ``refresh()`` opened, and cached
@@ -52,15 +60,18 @@ build/maintenance/batch analytics; serving needs only the parquet files.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 from collections import OrderedDict
 from dataclasses import dataclass, field
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from ..config import MAX_TOP_K, float_field, int_field
-from ..functions.tokenize import _TOKEN_RE, tokenize_py
+from ..functions.tokens import _TOKEN_RE, tokenize_py
 from ..index import codec
 from .cache import TtlLruCache
 
@@ -87,6 +98,19 @@ def round_half_up(values: np.ndarray, digits: int) -> np.ndarray:
         [float(Decimal(repr(float(v))).quantize(q, rounding=ROUND_HALF_UP)) for v in values],
         dtype=np.float64,
     )
+
+
+def _numpy(column) -> np.ndarray:
+    """A null-free, fixed-width Arrow column as a numpy array over its data
+    buffer. pyarrow's own ``to_numpy`` and ``np.asarray`` go through its
+    pandas shim, which imports pandas; the replica never does."""
+    arr = column.combine_chunks()
+    dtype = np.dtype(str(arr.type).replace("double", "float64"))
+    if arr.null_count or dtype.itemsize * 8 != arr.type.bit_width:
+        raise TypeError(f"not a null-free fixed-width column: {arr.type}")
+    if not len(arr):
+        return np.empty(0, dtype)
+    return np.frombuffer(arr.buffers()[1], dtype, len(arr), arr.offset * dtype.itemsize)
 
 
 def _unique_ids(ids) -> np.ndarray | None:
@@ -144,19 +168,17 @@ class _RowGroup:
 
     @classmethod
     def of(cls, table, base: int) -> "_RowGroup":
-        import pyarrow as pa
-
-        terms = np.asarray(
-            table.column("term").cast(pa.binary()).to_numpy(), dtype="S"
-        )
-        first = table.column("first_doc_id").to_numpy()
+        terms = np.array(table.column("term").cast(pa.binary()).to_pylist(), dtype="S")
+        first = _numpy(table.column("first_doc_id"))
         # the build writes term-sorted groups; an index written before the
         # term sort has unsorted ones, and this one order covers both
         order = np.lexsort((first, terms))
-        counts = table.column("n_docs").to_numpy()[order]
+        counts = _numpy(table.column("n_docs"))[order]
+        rows = order.tolist()
         streams = [
-            table.column(c).take(order).to_pylist()
-            for c in ("deltas", "tfs", "positions") if c in table.column_names
+            [values[i] for i in rows]
+            for values in (table.column(c).to_pylist() for c in ("deltas", "tfs", "positions")
+                           if c in table.column_names)
         ]
         ids, tfs, *pos = codec.decode_blocks(first[order], counts, *streams, base=base)
         terms, head = np.unique(terms[order], return_index=True)
@@ -227,20 +249,16 @@ class IndexReader:
         is the index's commit point — index/build.py:_write_checkpoint)
         scopes every cache key, so entries for the previous snapshot can
         never be served again; they age out of the LRU."""
-        import pyarrow.parquet as pq
-
         ckpt = os.path.join(self.root, "_checkpoint.json")
         if os.path.exists(ckpt):
             with open(ckpt, "rb") as f:
                 self.snapshot = hashlib.md5(f.read()).hexdigest()
         else:
             self.snapshot = ""
-        srow = pq.read_table(os.path.join(self.root, "corpus_stats")).to_pylist()[0]
+        srow = self._read_table("corpus_stats").to_pylist()[0]
         self.stats = srow
         self.docs_per_shard = int(srow["docs_per_shard"])
-        terms = pq.read_table(
-            os.path.join(self.root, "term_stats"), columns=["term", "df", "idf"]
-        )
+        terms = self._read_table("term_stats", ["term", "df", "idf"])
         # one key list for both dicts: each vocabulary string exists once
         keys = terms.column("term").to_pylist()
         self.idf = dict(zip(keys, terms.column("idf").to_pylist()))
@@ -249,12 +267,21 @@ class IndexReader:
         self._suggest_index = None
         self._open_snapshot()
 
+    def _read_table(self, kind: str, columns: list[str] | None = None):
+        """Every ``<kind>/*.parquet`` file, read one by one through
+        ``pq.ParquetFile`` in path order (``pq.read_table`` of a directory
+        would load ``pyarrow.dataset`` and with it pandas)."""
+        paths = sorted(glob.glob(os.path.join(self.root, kind, "*.parquet")))
+        if not paths:
+            raise FileNotFoundError(os.path.join(self.root, kind))
+        tables = []
+        for path in paths:
+            with pq.ParquetFile(path) as pf:
+                tables.append(pf.read(columns=columns, use_threads=False))
+        return pa.concat_tables(tables)
+
     def _shard_files(self, kind: str):
         """(shard, ParquetFile) for every ``<kind>/shard=K/*.parquet``."""
-        import glob
-
-        import pyarrow.parquet as pq
-
         pattern = os.path.join(self.root, kind, "shard=*", "*.parquet")
         for path in sorted(glob.glob(pattern)):
             shard = int(os.path.basename(os.path.dirname(path))[len("shard="):])
@@ -307,8 +334,6 @@ class IndexReader:
         """The snapshot's docmap rows of one shard (None for a shard the
         docmap does not hold), read through the handles ``refresh()``
         opened."""
-        import pyarrow as pa
-
         files = self._docmap.get(shard)
         if not files:
             return None
@@ -321,8 +346,8 @@ class IndexReader:
         if st is None:
             t = self._docmap_table(shard, ["doc_id", "doc_len"])
             dl = np.zeros(self.docs_per_shard, dtype=np.float64)
-            local = np.asarray(t.column("doc_id"), dtype=np.int64) - shard * self.docs_per_shard
-            dl[local] = np.asarray(t.column("doc_len"), dtype=np.float64)
+            local = _numpy(t.column("doc_id")) - shard * self.docs_per_shard
+            dl[local] = _numpy(t.column("doc_len"))
             st = _ShardState(doc_len=dl)
             self._shards[shard] = st
         return st
@@ -343,9 +368,7 @@ class IndexReader:
             if st.host is None:
                 t = self._docmap_table(int(shard), ["doc_id", "url"])
                 dense = np.full(span, "", dtype=object)
-                local = (
-                    np.asarray(t.column("doc_id"), dtype=np.int64) - shard * span
-                )
+                local = _numpy(t.column("doc_id")) - shard * span
                 hosts = [
                     (m.group(1) if (m := host_re.match(u or "")) else "")
                     for u in t.column("url").to_pylist()
@@ -615,9 +638,6 @@ class IndexReader:
         Returns {"doc_id", "doc_len", "terms": {term: tf | [positions]}};
         unknown doc_ids return an empty terms dict.
         """
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         if positions and not bool(self.stats.get("positional")):
             raise ValueError(
                 "index stores no positions; rebuild with store_positions=True"
@@ -631,27 +651,29 @@ class IndexReader:
                 "tfs"] + (["positions"] if positions else [])
         table = pa.concat_tables(
             [pf.read(columns=cols, use_threads=False) for pf in files]
-        ).filter(
-            (pc.field("first_doc_id") <= doc_id) & (pc.field("last_doc_id") >= doc_id)
         )
+        first = _numpy(table.column("first_doc_id"))
+        covers = (first <= doc_id) & (_numpy(table.column("last_doc_id")) >= doc_id)
+        # the mask goes to Arrow as a bit buffer: pa.array() would import pandas
+        table = table.filter(pa.Array.from_buffers(
+            pa.bool_(), covers.size, [None, pa.py_buffer(np.packbits(covers, bitorder="little"))]
+        ))
+        first = first[covers]
         terms: dict = {}
         if table.num_rows:
             local = int(doc_id) - shard * span
-            counts = table.column("n_docs").to_numpy()
-            ids, tfs = codec.decode_blocks(
-                table.column("first_doc_id").to_numpy(), counts,
-                table.column("deltas").to_pylist(), table.column("tfs").to_pylist(),
-                base=shard * span,
-            )
+            counts = _numpy(table.column("n_docs"))
+            streams = [table.column(c).to_pylist() for c in cols[4:]]
+            ids, tfs = codec.decode_blocks(first, counts, *streams[:2], base=shard * span)
             rows = np.flatnonzero(ids == local)  # at most one per block
             blocks = np.searchsorted(np.cumsum(counts), rows, side="right")
-            names = table.column("term").take(blocks).to_pylist()
+            names = table.column("term").to_pylist()
+            names = [names[i] for i in blocks.tolist()]
             if positions:
                 # the blocks that hold the doc, decoded again with positions
-                held = table.take(blocks)
                 ids, tfs, pos = codec.decode_blocks(
-                    held.column("first_doc_id").to_numpy(), held.column("n_docs").to_numpy(),
-                    *(held.column(c).to_pylist() for c in ("deltas", "tfs", "positions")),
+                    first[blocks], counts[blocks],
+                    *([values[i] for i in blocks.tolist()] for values in streams),
                     base=shard * span,
                 )
                 mine = ids == local

@@ -117,7 +117,7 @@ class MultiReader:
         import numpy as np
 
         from ..functions.analyzers import analyze_tokens
-        from ..functions.tokenize import tokenize_py
+        from ..functions.tokens import tokenize_py
 
         if offset < 0:
             # each partition is scored for its top-(offset+top_k) with no

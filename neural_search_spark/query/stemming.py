@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..config import BM25Params, DEFAULT_PARAMS
 from ..functions.stem import s_stem_col
-from ..index.stats import BM25Index, floored_term_stats, term_stats
+from ..index.stats import BM25Index, floored_term_stats, mean_raw_idf, term_stats
 from .bm25_dataframe import bm25_contrib_expr, query_terms, rank_topk
 
 
@@ -50,8 +50,7 @@ def stem_index(index: BM25Index, params: BM25Params = DEFAULT_PARAMS) -> BM25Ind
     """Logical index over the stemmed vocabulary (stats recomputed)."""
     sdt = stem_doc_terms(index.doc_terms)
     ts = term_stats(sdt, index.stats.n_docs)
-    aidf_row = ts.agg(F.avg("raw_idf").alias("aidf")).collect()[0]
-    average_idf = float(aidf_row["aidf"] or 0.0)
+    average_idf = mean_raw_idf(ts)
     terms = floored_term_stats(ts, average_idf, params)
     return BM25Index(
         doc_terms=sdt,

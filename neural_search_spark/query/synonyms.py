@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import BM25Params, DEFAULT_PARAMS
-from ..index.stats import BM25Index, floored_term_stats, term_stats
+from ..index.stats import BM25Index, floored_term_stats, mean_raw_idf, term_stats
 from .bm25_dataframe import bm25_contrib_expr, query_terms, rank_topk
 
 
@@ -86,8 +86,7 @@ def fold_index(
     """
     fdt = fold_doc_terms(index.doc_terms, syn)
     ts = term_stats(fdt, index.stats.n_docs)
-    aidf_row = ts.agg(F.avg("raw_idf").alias("aidf")).collect()[0]
-    average_idf = float(aidf_row["aidf"] or 0.0)
+    average_idf = mean_raw_idf(ts)
     terms = floored_term_stats(ts, average_idf, params)
     return BM25Index(
         doc_terms=fdt,

@@ -212,6 +212,62 @@ def test_resume_is_incremental(spark, corpus_small, tmp_path):
             "deltas_bytes", "tfs_bytes", "elapsed_sec"} <= cols
 
 
+def test_resume_refuses_another_corpus(spark, tmp_path):
+    """A finished build's directory refuses a call over another corpus's
+    files with an error that names the field, instead of silently returning
+    the old index; the same corpus still resumes."""
+    from neural_search_spark.corpus import write_corpus_parquet
+
+    first, second = str(tmp_path / "first"), str(tmp_path / "second")
+    write_corpus_parquet(spark, first, n_docs=60)
+    write_corpus_parquet(spark, second, n_docs=30, seed=7)
+    out = str(tmp_path / "idx")
+    built = build_index(spark.read.parquet(first), out, layout=LAYOUT, n_buckets=4)
+    with pytest.raises(ValueError, match="resume input_files mismatch"):
+        build_index(spark.read.parquet(second), out, layout=LAYOUT, n_buckets=4)
+    again = build_index(spark.read.parquet(first), out, layout=LAYOUT, n_buckets=4)
+    assert again.stats == built.stats
+
+
+def test_resume_refuses_another_layout(spark, corpus_small, tmp_path):
+    """Resuming a killed build with another ``docs_per_shard`` raises an
+    error that names the field instead of mixing two shard layouts."""
+    out = str(tmp_path / "idx")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_index(corpus_small, out, layout=LAYOUT, n_buckets=8, waves=4, fail_after_wave=1)
+    other = IndexLayout(docs_per_shard=32, block_size=LAYOUT.block_size)
+    with pytest.raises(ValueError, match="resume docs_per_shard mismatch"):
+        build_index(corpus_small, out, layout=other, n_buckets=8, waves=4)
+
+
+def _stats_rows(path: str) -> list:
+    import pyarrow.parquet as pq
+
+    return sorted(tuple(r.values()) for r in pq.read_table(path).to_pylist())
+
+
+def test_stats_do_not_depend_on_shuffle_partitions(spark, corpus_small, tmp_path):
+    """Builds of one corpus under 1 and 8 shuffle partitions write
+    bit-identical ``corpus_stats`` and ``term_stats`` rows: ``average_idf``
+    (and with it every floored idf) is an exact sum, not a double ``avg`` in
+    shuffle-arrival order."""
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    rows = []
+    try:
+        # AQE would coalesce the 8 small partitions back into one
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        for parts in (1, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            out = str(tmp_path / f"p{parts}")
+            build_index(corpus_small, out, layout=LAYOUT, n_buckets=8)
+            rows.append([_stats_rows(os.path.join(out, t)) for t in ("corpus_stats", "term_stats")])
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert rows[0] == rows[1]
+
+
 def test_compression_ratio(built):
     """Delta+varint postings must be much smaller than raw int64 pairs."""
     from pyspark.sql import functions as F

@@ -74,7 +74,7 @@ def test_tie_classes():
 def test_rank_bm25_parity_if_installed():
     """If the real pinned dependency happens to be available, compare exactly."""
     rank_bm25 = pytest.importorskip("rank_bm25")
-    from neural_search_spark.functions.tokenize import tokenize_py
+    from neural_search_spark.functions.tokens import tokenize_py
 
     texts = ["a b c a", "b c d", "c d e d", "a e", "f g h a b"]
     ref = rank_bm25.BM25Okapi([tokenize_py(t) for t in texts], k1=1.5, b=0.75)

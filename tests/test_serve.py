@@ -1076,7 +1076,7 @@ def test_reader_query_near_ordered_parity(spark, tmp_path_factory):
 def test_reader_term_vector_roundtrips_document(spark, served):
     """term_vector recovers exactly the tokenizer's term->tf map for a doc
     (the index is lossless), reading only that doc's shard."""
-    from neural_search_spark.functions.tokenize import tokenize_py
+    from neural_search_spark.functions.tokens import tokenize_py
 
     index, reader = served
     corpus_path = reader.root.rsplit("/idx", 1)[0] + "/corpus"
@@ -1095,7 +1095,7 @@ def test_reader_term_vector_roundtrips_document(spark, served):
 
 
 def test_reader_term_vector_positions(spark, tmp_path_factory):
-    from neural_search_spark.functions.tokenize import tokenize_py
+    from neural_search_spark.functions.tokens import tokenize_py
 
     root = tmp_path_factory.mktemp("tv")
     rows = [(0, "u0", "a b a c b a"), (1, "u1", "x y")]
@@ -1340,6 +1340,96 @@ def test_cli_serve_survives_malformed_lines(served):
     assert b"Traceback" not in proc.stderr
 
 
+# every numeric request field: (request without it, where it goes, the name
+# its error starts with, lower bound, upper bound); a where of two keys nests
+# the field inside the first
+NUMERIC_FIELDS = [
+    ({"query": "w0005 w0010"}, ("top_k",), "top_k", 1, 100),
+    ({"query": "w0005 w0010"}, ("offset",), "offset", 0, None),
+    ({"query": "w0005 w0010"}, ("collapse_hosts",), "collapse_hosts", 0, None),
+    ({"query": "w0005 w0010"}, ("minimum_should_match",), "minimum_should_match", 0, None),
+    ({"query": "+w0005 w0010", "bool": True}, ("minimum_should_match",),
+     "minimum_should_match", 0, None),
+    ({"query": "w0005 w0010"}, ("snippet_window",), "snippet_window", 1, None),
+    ({"queries": ["w0005"]}, ("top_k",), "top_k", 1, 100),
+    ({"phrase": "w0005 w0010"}, ("top_k",), "top_k", 1, 100),
+    ({"near": "w0005 w0010"}, ("span",), "span", 1, None),
+    ({"near": "w0005 w0010", "span": 3}, ("top_k",), "top_k", 1, 100),
+    ({}, ("more_like_this",), "more_like_this", None, None),
+    ({"more_like_this": 7}, ("m",), "m", 1, None),
+    ({"more_like_this": 7}, ("top_k",), "top_k", 1, 100),
+    ({"suggest": "w005"}, ("n",), "n", 1, None),
+    ({"explain": "w0005"}, ("doc_id",), "doc_id", None, None),
+    ({}, ("termvectors",), "termvectors", None, None),
+    ({"dsl": {"query": {"match": "w0005"}}}, ("dsl", "top_k"), "top_k", 1, 100),
+    ({"dsl": {"query": {"match": "w0005"}}}, ("dsl", "offset"), "offset", 0, None),
+    ({"dsl": {"query": {}}}, ("dsl", "query", "more_like_this"), "more_like_this", None, None),
+    ({"dsl": {"query": {"bool": {"should": ["w0005"]}}}},
+     ("dsl", "query", "bool", "minimum_should_match"), "minimum_should_match", 0, None),
+    ({"dsl": {"query": {"match_phrase": {"query": "w0005"}}}},
+     ("dsl", "query", "match_phrase", "slop"), "slop", 0, None),
+]
+
+
+def _bad_numbers(lo, hi):
+    """Values a numeric field must refuse: bools, strings, null, lists,
+    non-integral and non-finite floats, and integers (or integral floats)
+    outside ``[lo, hi]``."""
+    from hypothesis import strategies as st
+
+    bad = (
+        st.booleans() | st.text(max_size=4) | st.none() | st.lists(st.integers(), max_size=2)
+        | st.floats().filter(lambda x: not x.is_integer())
+    )
+    if lo is not None:
+        below = st.integers(max_value=lo - 1)
+        bad |= below | below.map(float).filter(lambda x: x < lo)
+    if hi is not None:
+        bad |= st.integers(min_value=hi + 1)
+    return bad
+
+
+@pytest.mark.parametrize(
+    "base,where,name,lo,hi", NUMERIC_FIELDS,
+    ids=["/".join(f[1]) + ("+bool" if f[0].get("bool") else "") for f in NUMERIC_FIELDS],
+)
+def test_cli_request_fields_refuse_bad_numbers(served, base, where, name, lo, hi):
+    """Every numeric field of every request kind answers exactly one
+    ``{"error"}`` naming the field for a wrong type, a non-integral or
+    non-finite number, or a value outside its bounds: never an internal
+    error, never hits."""
+    import copy
+    import json
+    from collections import defaultdict
+    from types import SimpleNamespace
+
+    from hypothesis import given, settings
+
+    from neural_search_spark.cli import _dispatch
+
+    _, reader = served
+    state = SimpleNamespace(
+        args=SimpleNamespace(top_k=10, match_all=False), multi=False, reader=reader,
+        cache=None, limiter=None, matcher=None, t_up=0.0,
+        kinds=defaultdict(lambda: {"count": 0, "errors": 0}),
+        counters={"requests": 0, "searches": 0, "search_ms_total": 0.0},
+    )
+
+    @settings(max_examples=40, deadline=None)
+    @given(_bad_numbers(lo, hi))
+    def check(value):
+        req = copy.deepcopy(base)
+        node = req
+        for key in where[:-1]:
+            node = node.setdefault(key, {})
+        node[where[-1]] = value
+        reply = _dispatch(state, json.dumps(req))
+        assert list(reply) == ["error"], (req, reply)
+        assert reply["error"].startswith(f"{name} must be"), (req, reply)
+
+    check()
+
+
 def test_cli_serve_match_query_must_be_a_string(served):
     """A non-string ``match``/``match_phrase`` query answers a request error
     that names the field, not an ``internal error``, and the replica keeps
@@ -1403,6 +1493,74 @@ def test_cli_serve_internal_error_is_one_reply(served, tmp_path):
     assert failed["error"].startswith("internal error: FileNotFoundError: ")
     assert "Traceback" in stderr and "FileNotFoundError" in stderr
     assert again["hits"] == first["hits"]
+
+
+def _serve_with_importtime(root: str, lines: list[str]) -> tuple[list, list]:
+    """(replies, imported module names) of one ``python -X importtime
+    cli.py serve --index root`` process fed ``lines``."""
+    import json
+    import subprocess
+    import sys
+
+    proc = subprocess.run(
+        [sys.executable, "-X", "importtime", "cli.py", "serve", "--index", root],
+        input="\n".join(lines) + "\n", capture_output=True, text=True,
+        timeout=300, cwd=REPO_ROOT,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    imported = [
+        ln.rsplit("|", 1)[-1].strip()
+        for ln in proc.stderr.splitlines() if ln.startswith("import time:")
+    ]
+    return [json.loads(ln) for ln in proc.stdout.splitlines()], imported
+
+
+def test_cli_serve_imports_no_spark_or_pandas(spark, served, tmp_path):
+    """The single-index replica's whole import closure is free of pyspark,
+    py4j and pandas: at start-up and for one request of every kind it
+    answers (on a positional index also phrase, near, match_phrase and
+    positional term vectors), every module it loads is listed by ``-X
+    importtime`` and none of them is one of those. Hydration (``--corpus``,
+    a filtered ``pq.read_table``) and ``--percolate-queries`` are out of
+    scope: they may still load pyarrow.dataset and pandas."""
+    _, reader = served
+    flat = [
+        '{"health": true}', '{"stats": true}', ":refresh", "w0005 w0010",
+        '{"query": "w0005 w0010", "offset": 2, "top_k": 3}',
+        '{"query": "w0005 w0010", "filter_ids": [1, 5, 9, 200, 399]}',
+        '{"query": "w0005 w0010", "search_after": [1.0, 3]}',
+        '{"query": "w0005 w0010", "collapse_hosts": 1}',
+        '{"query": "+w0005 w0010 -w0001", "bool": true, "minimum_should_match": 1}',
+        '{"queries": ["w0005", "w0010 w0001"]}',
+        '{"dsl": {"query": {"match": "w0005 w0010"}}}',
+        '{"dsl": {"query": {"bool": {"must": ["w0005"], "should": ["w0010"]}}}}',
+        '{"dsl": {"query": {"prefix": "w000"}}}',
+        '{"dsl": {"query": {"wildcard": "w00?5"}}}',
+        '{"explain": "w0005 w0010", "doc_id": 7}',
+        '{"more_like_this": 7}', '{"termvectors": 7}', '{"suggest": "w005"}',
+    ]
+    rows = [(0, "u0", "alpha beta gamma delta alpha beta"), (1, "u1", "beta alpha delta")]
+    positional = str(tmp_path / "pos")
+    build_index(
+        spark.createDataFrame(rows, "doc_id long, url string, text string"),
+        positional, id_col="doc_id",
+        layout=IndexLayout(docs_per_shard=2, block_size=2), n_buckets=2,
+        store_positions=True,
+    )
+    pos = [
+        '{"health": true}', '{"phrase": "alpha beta"}',
+        '{"near": "alpha delta", "span": 3}',
+        '{"dsl": {"query": {"match_phrase": "alpha beta"}}}',
+        '{"termvectors": 1, "positions": true}',
+    ]
+    for root, lines in ((reader.root, flat), (positional, pos)):
+        replies, imported = _serve_with_importtime(root, lines)
+        assert len(replies) == len(lines)
+        for line, reply in zip(lines, replies):
+            assert "error" not in reply, (line, reply)
+        assert "neural_search_spark.query.serve" in imported
+        banned = sorted({m for m in imported if m.split(".")[0] in ("pyspark", "py4j", "pandas")})
+        assert not banned, (root, banned[:5])
 
 
 def test_reader_query_dsl_top_k_bound(served):

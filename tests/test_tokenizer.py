@@ -15,9 +15,9 @@ from pyspark.sql import functions as F
 from neural_search_spark.functions.tokenize import (
     doc_terms,
     extract_text_py,
-    tokenize_py,
     tokenize_udf,
 )
+from neural_search_spark.functions.tokens import tokenize_py
 
 CASES = [
     "Hello World",
